@@ -79,7 +79,7 @@ def entry(spark: SparkSession) -> DataFrame:
     decoded = dec.decode_tokens(encoded)
     verdict = dec.verify_roundtrip(seq, decoded)
     summary = encoded.groupBy("codec").agg(
-        F.count("*").cast("long").alias("n_blocks"),
+        F.sum("n_chunks").cast("long").alias("n_blocks"),
         F.sum("meta.input_bytes").cast("long").alias("input_bytes"),
         F.sum("meta.output_bytes").cast("long").alias("output_bytes"),
     )
@@ -1447,27 +1447,26 @@ def _q_bss_doubles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_rowwise_columnar_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S5/A6 contrast: the row-by-row decoder must produce exactly the
-    columnar decoder's output (the reference's parqbench row-vs-columnar
-    comparison, main.rs:33-39; timing ratio lives in bench extras).
-    Rows-only: codec blobs are not SQL-expressible."""
+    """S5/A6 contrast: the blob-by-blob decoder must produce exactly the
+    columnar decoder's output, document by document (the reference's
+    parqbench row-vs-columnar comparison, main.rs:33-39; timing ratio
+    lives in bench extras). The oracle derives the block count from
+    `documents`; the blobs themselves are not SQL-expressible."""
     from parquet_playground_rs_spark.operators import decode as dec
     from parquet_playground_rs_spark.operators import encode as enc
 
     seq = _sequences(spark, sf_dir)
     encoded = enc.encode_tokens(seq, chunk_size=2048).cache()
-    key = ["doc_id", "chunk_idx"]
-    col_d = dec.decode_blocks(encoded).select(
-        *key, F.xxhash64("tokens").alias("h_col"))
+    col_d = dec.decode_tokens(encoded).select(
+        "doc_id", F.xxhash64("tokens").alias("h_col"))
     row_d = dec.decode_blocks_rowwise(encoded).select(
-        *key, F.xxhash64("tokens").alias("h_row"))
-    j = col_d.join(row_d, key, "full_outer")
-    return j.agg(
-        F.count("*").cast("long").alias("n_blocks"),
+        "doc_id", F.xxhash64("tokens").alias("h_row"))
+    j = col_d.join(row_d, "doc_id", "full_outer")
+    blocks = encoded.agg(F.sum("n_chunks").cast("long").alias("n_blocks"))
+    return blocks.crossJoin(j.agg(
         F.sum(F.when(F.col("h_col").isNull() | F.col("h_row").isNull()
                      | (F.col("h_col") != F.col("h_row")), 1).otherwise(0))
-        .cast("long").alias("n_mismatch"),
-    )
+        .cast("long").alias("n_mismatch")))
 
 
 # deterministic totals of sequences_df(2000, seed=42) at chunk 4096 —
@@ -1479,7 +1478,8 @@ _SYN_INPUT_BYTES = 3136856
 
 def _q_encode_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Auto-selector summary over two corpora, oracle-checked per corpus:
-    n_blocks = sum(greatest(1, ceil(n_tok/4096))) and input_bytes =
+    n_blocks = sum(n_chunks) = sum(greatest(1, ceil(n_tok/4096))) and
+    input_bytes =
     4*sum(n_tok) are recomputed by DuckDB from `documents` (and pinned
     generator constants for the synthetic corpus); compressed_ok asserts
     sum(output) <= sum(input); codec_diversity_ok asserts the synthetic
@@ -1498,7 +1498,7 @@ def _q_encode_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs_enc.unionByName(syn_enc)
         .groupBy("corpus")
         .agg(
-            F.count("*").cast("long").alias("n_blocks"),
+            F.sum("n_chunks").cast("long").alias("n_blocks"),
             F.sum("meta.input_bytes").cast("long").alias("input_bytes"),
             F.when(F.sum("meta.output_bytes") <= F.sum("meta.input_bytes"),
                    1).otherwise(0).cast("long").alias("compressed_ok"),
@@ -1514,25 +1514,23 @@ def _q_encode_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_chunk_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The zero-exchange per-chunk verify (operators/decode.verify_encoded)
-    over a composed encode: both sides hash the same chunk grid, counts
-    are chunk counts — SQL-derivable from `documents`."""
+    """The join-free checksum verify over decode_tokens of a composed
+    encode: decode is a pure map, so the verify has no reassembly and no
+    join; counts are document counts — SQL-derivable from `documents`."""
     from parquet_playground_rs_spark.operators import decode as dec
     from parquet_playground_rs_spark.operators import encode as enc
 
     seq = _sequences(spark, sf_dir).cache()
-    encoded = enc.encode_tokens(seq, chunk_size=2048)
-    return dec.verify_encoded(seq, encoded, chunk_size=2048)
+    decoded = dec.decode_tokens(enc.encode_tokens(seq, chunk_size=2048))
+    return dec.verify_roundtrip(seq, decoded, method="checksum")
 
 
 _Q_CHUNK_VERIFY_SQL = """
-WITH d AS (
-  SELECT CAST(sum(greatest(1, ceil(len(string_split(text, ' ')) / 2048.0)))
-              AS BIGINT) AS nb
-  FROM documents)
-SELECT nb AS n_source, nb AS n_decoded, nb AS n_joined,
+SELECT CAST(count(*) AS BIGINT) AS n_source,
+       CAST(count(*) AS BIGINT) AS n_decoded,
+       CAST(count(*) AS BIGINT) AS n_joined,
        CAST(0 AS BIGINT) AS n_mismatch
-FROM d
+FROM documents
 """
 
 
@@ -1831,7 +1829,7 @@ def _q_streaming_incremental_encode(spark: SparkSession,
     encoded = spark.read.parquet(f"{out_dir}/data")
     verdict = dec.verify_roundtrip(seq, dec.decode_tokens(encoded),
                                    method="checksum")
-    blocks = encoded.agg(F.count("*").cast("long").alias("n_blocks"))
+    blocks = encoded.agg(F.sum("n_chunks").cast("long").alias("n_blocks"))
     return _finalize(verdict.crossJoin(blocks), in_dir, out_dir)
 
 
@@ -1870,18 +1868,18 @@ def _q_pipeline_file_commits(spark: SparkSession, sf_dir: str) -> DataFrame:
     pl.run_encode_job_files(spark, in_dir, out_dir, n_buckets=4,
                             chunk_size=4096, buckets_per_commit=2)
     encoded = pl.read_encoded(spark, out_dir)
-    with dec.decoded_tokens(encoded) as decoded:
-        verdict = dec.verify_roundtrip(staged, decoded)
-        tok = decoded.agg(
-            F.sum(F.size("tokens")).cast("long").alias("tok_sum"))
-        blocks = encoded.agg(F.count("*").cast("long").alias("n_blocks"))
-        manifest = pl.read_manifest(spark, out_dir).filter(
-            F.col("status") == "done").agg(
-            F.count("*").cast("long").alias("manifest_buckets"),
-            F.sum("n_rows").cast("long").alias("manifest_row_sum"))
-        return _finalize(
-            verdict.crossJoin(blocks).crossJoin(manifest).crossJoin(tok),
-            in_dir, out_dir)
+    decoded = dec.decode_tokens(encoded)
+    verdict = dec.verify_roundtrip(staged, decoded)
+    tok = decoded.agg(
+        F.sum(F.size("tokens")).cast("long").alias("tok_sum"))
+    blocks = encoded.agg(F.sum("n_chunks").cast("long").alias("n_blocks"))
+    manifest = pl.read_manifest(spark, out_dir).filter(
+        F.col("status") == "done").agg(
+        F.count("*").cast("long").alias("manifest_buckets"),
+        F.sum("n_rows").cast("long").alias("manifest_row_sum"))
+    return _finalize(
+        verdict.crossJoin(blocks).crossJoin(manifest).crossJoin(tok),
+        in_dir, out_dir)
 
 
 _Q_PIPELINE_FILE_COMMITS_SQL = """
@@ -1897,7 +1895,7 @@ SELECT CAST(n AS BIGINT) AS n_source,
        CAST(0 AS BIGINT) AS n_mismatch,
        nb AS n_blocks,
        CAST(4 AS BIGINT) AS manifest_buckets,
-       nb AS manifest_row_sum,
+       CAST(n AS BIGINT) AS manifest_row_sum,
        toks AS tok_sum
 FROM d
 """
@@ -1930,22 +1928,22 @@ def _q_pipeline_append(spark: SparkSession, sf_dir: str) -> DataFrame:
                                  chunk_size=4096, append=True)
     staged = spark.read.parquet(in_dir)
     encoded = pl.read_encoded(spark, out_dir)
-    with dec.decoded_tokens(encoded) as decoded:
-        verdict = dec.verify_roundtrip(staged, decoded)
-        tok = decoded.agg(
-            F.sum(F.size("tokens")).cast("long").alias("tok_sum"))
-        blocks = encoded.agg(F.count("*").cast("long").alias("n_blocks"))
-        manifest = pl.read_manifest(spark, out_dir).filter(
-            F.col("status") == "done").agg(
-            F.count("*").cast("long").alias("manifest_buckets"),
-            F.sum("n_rows").cast("long").alias("manifest_row_sum"))
-        consts = spark.createDataFrame(
-            [(s2["catalog_versions"], s2["appended_files"])],
-            "catalog_versions long, appended_files long")
-        return _finalize(
-            verdict.crossJoin(blocks).crossJoin(manifest).crossJoin(tok)
-            .crossJoin(consts),
-            in_dir, out_dir)
+    decoded = dec.decode_tokens(encoded)
+    verdict = dec.verify_roundtrip(staged, decoded)
+    tok = decoded.agg(
+        F.sum(F.size("tokens")).cast("long").alias("tok_sum"))
+    blocks = encoded.agg(F.sum("n_chunks").cast("long").alias("n_blocks"))
+    manifest = pl.read_manifest(spark, out_dir).filter(
+        F.col("status") == "done").agg(
+        F.count("*").cast("long").alias("manifest_buckets"),
+        F.sum("n_rows").cast("long").alias("manifest_row_sum"))
+    consts = spark.createDataFrame(
+        [(s2["catalog_versions"], s2["appended_files"])],
+        "catalog_versions long, appended_files long")
+    return _finalize(
+        verdict.crossJoin(blocks).crossJoin(manifest).crossJoin(tok)
+        .crossJoin(consts),
+        in_dir, out_dir)
 
 
 _Q_PIPELINE_APPEND_SQL = """
@@ -1961,7 +1959,7 @@ SELECT CAST(n AS BIGINT) AS n_source,
        CAST(0 AS BIGINT) AS n_mismatch,
        nb AS n_blocks,
        CAST(5 AS BIGINT) AS manifest_buckets,
-       nb AS manifest_row_sum,
+       CAST(n AS BIGINT) AS manifest_row_sum,
        toks AS tok_sum,
        CAST(2 AS BIGINT) AS catalog_versions,
        CAST(2 AS BIGINT) AS appended_files
@@ -1995,33 +1993,32 @@ def _q_pipeline_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     staged = spark.read.parquet(in_dir)
     pl.run_encode_job_files(spark, in_dir, out_dir, n_buckets=5,
                             chunk_size=4096, buckets_per_commit=1)
-    crc0 = pl.read_encoded(spark, out_dir).agg(
-        F.sum(F.crc32("block"))).first()[0]
+    crc0 = pl.read_encoded(spark, out_dir).agg(pl.block_crc()).first()[0]
     s = pl.compact_encoded_job(spark, out_dir,
                                target_group_output_bytes=1 << 40)
     encoded = pl.read_encoded(spark, out_dir)
-    crc1 = encoded.agg(F.sum(F.crc32("block"))).first()[0]
-    with dec.decoded_tokens(encoded) as decoded:
-        verdict = dec.verify_roundtrip(staged, decoded)
-        tok = decoded.agg(
-            F.sum(F.size("tokens")).cast("long").alias("tok_sum"))
-        blocks = encoded.agg(F.count("*").cast("long").alias("n_blocks"))
-        manifest = pl.read_manifest(spark, out_dir).filter(
-            F.col("status") == "done").agg(
-            F.count("*").cast("long").alias("manifest_buckets"),
-            F.sum("n_rows").cast("long").alias("manifest_row_sum"))
-        consts = spark.createDataFrame(
-            [(s["groups_before"], s["groups_after"],
-              s["buckets_rewritten"],
-              int(s["files_after"] < s["files_before"]),
-              int(crc0 == crc1))],
-            "groups_before long, groups_after long, "
-            "buckets_rewritten long, files_reduced long, "
-            "crc_preserved long")
-        return _finalize(
-            verdict.crossJoin(blocks).crossJoin(manifest).crossJoin(tok)
-            .crossJoin(consts),
-            in_dir, out_dir)
+    crc1 = encoded.agg(pl.block_crc()).first()[0]
+    decoded = dec.decode_tokens(encoded)
+    verdict = dec.verify_roundtrip(staged, decoded)
+    tok = decoded.agg(
+        F.sum(F.size("tokens")).cast("long").alias("tok_sum"))
+    blocks = encoded.agg(F.sum("n_chunks").cast("long").alias("n_blocks"))
+    manifest = pl.read_manifest(spark, out_dir).filter(
+        F.col("status") == "done").agg(
+        F.count("*").cast("long").alias("manifest_buckets"),
+        F.sum("n_rows").cast("long").alias("manifest_row_sum"))
+    consts = spark.createDataFrame(
+        [(s["groups_before"], s["groups_after"],
+          s["buckets_rewritten"],
+          int(s["files_after"] < s["files_before"]),
+          int(crc0 == crc1))],
+        "groups_before long, groups_after long, "
+        "buckets_rewritten long, files_reduced long, "
+        "crc_preserved long")
+    return _finalize(
+        verdict.crossJoin(blocks).crossJoin(manifest).crossJoin(tok)
+        .crossJoin(consts),
+        in_dir, out_dir)
 
 
 _Q_PIPELINE_COMPACT_SQL = """
@@ -2037,7 +2034,7 @@ SELECT CAST(n AS BIGINT) AS n_source,
        CAST(0 AS BIGINT) AS n_mismatch,
        nb AS n_blocks,
        CAST(5 AS BIGINT) AS manifest_buckets,
-       nb AS manifest_row_sum,
+       CAST(n AS BIGINT) AS manifest_row_sum,
        toks AS tok_sum,
        CAST(5 AS BIGINT) AS groups_before,
        CAST(1 AS BIGINT) AS groups_after,
@@ -2078,25 +2075,25 @@ def _q_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     out_dir = _scratch_dir("e2e_out")
     enc.write_encoded(enc.encode_tokens(seq, chunk_size=4096), out_dir)
     encoded = spark.read.parquet(out_dir)
-    with dec.decoded_tokens(encoded) as decoded:
-        verdict = dec.verify_roundtrip(seq, decoded)
-        tok = decoded.agg(
-            F.sum(F.size("tokens")).cast("long").alias("tok_sum"))
-        blocks = encoded.agg(F.count("*").cast("long").alias("n_blocks"))
-        stages = (
-            docs.agg(F.count("*").cast("long").alias("n_docs"))
-            .crossJoin(d1.agg(
-                F.count("*").cast("long").alias("n_after_exact")))
-            .crossJoin(d2.agg(
-                F.count("*").cast("long").alias("n_after_near")))
-            .crossJoin(d3.agg(
-                F.count("*").cast("long").alias("n_kept"),
-                F.sum("doc_id").cast("long").alias("kept_id_checksum"),
-                F.sum(F.length("text")).cast("long")
-                .alias("kept_chars_checksum")))
-        )
-        return _finalize(stages.crossJoin(blocks).crossJoin(tok)
-                         .crossJoin(verdict.select("n_mismatch")), out_dir)
+    decoded = dec.decode_tokens(encoded)
+    verdict = dec.verify_roundtrip(seq, decoded)
+    tok = decoded.agg(
+        F.sum(F.size("tokens")).cast("long").alias("tok_sum"))
+    blocks = encoded.agg(F.sum("n_chunks").cast("long").alias("n_blocks"))
+    stages = (
+        docs.agg(F.count("*").cast("long").alias("n_docs"))
+        .crossJoin(d1.agg(
+            F.count("*").cast("long").alias("n_after_exact")))
+        .crossJoin(d2.agg(
+            F.count("*").cast("long").alias("n_after_near")))
+        .crossJoin(d3.agg(
+            F.count("*").cast("long").alias("n_kept"),
+            F.sum("doc_id").cast("long").alias("kept_id_checksum"),
+            F.sum(F.length("text")).cast("long")
+            .alias("kept_chars_checksum")))
+    )
+    return _finalize(stages.crossJoin(blocks).crossJoin(tok)
+                     .crossJoin(verdict.select("n_mismatch")), out_dir)
 
 
 _Q_PIPELINE_E2E_SQL = "WITH RECURSIVE d1 AS (\n" + """

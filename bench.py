@@ -322,17 +322,6 @@ def main() -> None:
     extra["q_verify_checksum_best"] = round(min(reps), 3)
     extra["checksum_mismatch"] = int(v2s[-1]["n_mismatch"])
 
-    # ---- reassembly-free per-chunk verify (zero exchanges: both sides
-    # hash the same chunk grid; the win grows with long-document corpora)
-    v3s = []
-    reps = timed_reps(lambda: v3s.append(dec.verify_encoded(
-        seq, spark.read.parquet(out_dir),
-        chunk_size=enc.DEFAULT_CHUNK).first()), 3,
-                      tag="q_verify_chunks")
-    extra["q_verify_chunks_sec"] = round(statistics.median(reps), 3)
-    extra["q_verify_chunks_best"] = round(min(reps), 3)
-    extra["chunk_verify_mismatch"] = int(v3s[-1]["n_mismatch"])
-
     # ---- rowwise-vs-columnar decode contrast (the reference's parqbench
     # row-by-row vs columnar reader comparison, main.rs:33-39) on a
     # bounded sample — the ratio is the point, not the absolute time
@@ -341,7 +330,7 @@ def main() -> None:
     t_col = t_row = 1e18  # interleaved best-of-3, like the kernel contrast
     for _ in range(3):
         t0 = time.time()
-        dec.decode_blocks(sample).agg(F.sum(F.size("tokens"))).first()
+        dec.decode_tokens(sample).agg(F.sum(F.size("tokens"))).first()
         t_col = min(t_col, time.time() - t0)
         t0 = time.time()
         dec.decode_blocks_rowwise(sample).agg(F.sum(F.size("tokens"))).first()
@@ -356,7 +345,7 @@ def main() -> None:
     from parquet_playground_rs_spark.functions import batch_decode, kernels
     f0 = sorted(str(p) for p in Path(out_dir).glob("*.parquet"))[0]
     blocks = pq.read_table(f0, columns=["block"]).column("block") \
-        .combine_chunks()
+        .combine_chunks().flatten()
     t_kc = t_kr = 1e18  # interleaved best-of-3: host noise resistance
     for _ in range(3):
         t0 = time.time()
@@ -865,7 +854,7 @@ def main() -> None:
 
     headline_keys = [  # priority order; the budget trims from the END
         "compression_vs_reference", "n_mismatch", "checksum_mismatch",
-        "chunk_verify_mismatch", "encode_tokens_per_sec",
+        "encode_tokens_per_sec",
         "host_noise_index_trimmed", "calib_gbps_median",
         "q_pipeline_encode_sec", "pipeline_overhead_vs_plain",
         "q_pipeline_resume_sec", "pipeline_resume_skipped_buckets",
@@ -882,7 +871,7 @@ def main() -> None:
         "ivf_float_query_scan_bytes", "corpus_embedding_col_bytes",
         "fsst_over_bitpack_decode", "kernel_rowwise_over_columnar",
         "decode_rowwise_over_columnar",
-        "q_verify_checksum_sec", "q_verify_chunks_sec",
+        "q_verify_checksum_sec",
         "q_streaming_sessions_state_sec", "streaming_state_max_rows",
         "q_streaming_sessions_bucketed_sec",
         "streaming_bucketed_events_per_sec",

@@ -118,10 +118,6 @@ def area_decode(spark, results):
     sc.setJobDescription("decode: encoded scan only (noop)")
     timeit("decode_scan_only",
            lambda: noop(spark.read.parquet(out_dir)), results=results)
-    sc.setJobDescription("decode: blocks no reassembly (noop)")
-    timeit("decode_blocks_noop",
-           lambda: noop(dec.decode_blocks(spark.read.parquet(out_dir))),
-           results=results)
     sc.setJobDescription("decode: full decode_tokens (noop)")
     timeit("decode_tokens_noop",
            lambda: noop(dec.decode_tokens(spark.read.parquet(out_dir))),
@@ -144,12 +140,6 @@ def area_decode(spark, results):
            lambda: dec.verify_roundtrip(
                seq, dec.decode_tokens(spark.read.parquet(out_dir)),
                method="checksum").first(),
-           results=results)
-    sc.setJobDescription("decode: verify chunks")
-    timeit("verify_chunks",
-           lambda: dec.verify_encoded(
-               seq, spark.read.parquet(out_dir),
-               chunk_size=enc.DEFAULT_CHUNK).first(),
            results=results)
     sc.setJobDescription(None)
 

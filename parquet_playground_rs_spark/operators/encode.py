@@ -8,10 +8,18 @@ through ``mapInArrow`` tasks; Catalyst handles scan/pruning, the kernels
 sink provides the general-purpose layer (the reference's
 `Compression::ZSTD(3)`, main.rs:91).
 
-Skew handling (new-engine requirement, no reference analog): long-tail
-documents are split into fixed-size chunks *before* encoding with
-JVM-side `slice`/`posexplode`, so no single Python batch ever holds a
-pathological row; chunks re-assemble at decode via (doc_id, chunk_idx).
+One row per document: ``block`` is an ``array<binary>`` of self-describing
+blobs of at most ``chunk_size`` tokens each, so the kernels stay
+cache-sized on long-tail documents while decode stays a pure map (no
+reassembly). The split is offsets arithmetic inside the mapper
+(``_split_offsets``); the token values are never copied to chunk them.
+
+Row-level ``codec`` and ``meta`` of a multi-block document: ``codec`` is
+the codec that encoded most of the document's tokens (ties go to the
+lower codec id); in ``meta`` the counts and bytes are summed and
+min/max combined, while the per-block-only fields (``n_unique``,
+``n_runs``, ``bit_width``, ``dict_size``) are NULL. A single-block row
+carries its block's values unchanged.
 """
 
 from __future__ import annotations
@@ -23,9 +31,9 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions import kernels, selector
+from ..functions import kernels
 
-DEFAULT_CHUNK = 16384          # tokens per encoded block for skew-split rows
+DEFAULT_CHUNK = 16384          # max tokens per encoded block
 DEFAULT_SALT_BUCKETS = 1024    # salt space for the repartition key
 
 META_FIELDS = [
@@ -44,19 +52,18 @@ ENCODED_ARROW_SCHEMA = pa.schema(
     [
         pa.field("doc_id", pa.string()),
         pa.field("source", pa.string()),
-        pa.field("chunk_idx", pa.int32()),
         pa.field("n_chunks", pa.int32()),
         pa.field("codec", pa.string()),
-        pa.field("block", pa.binary()),
+        pa.field("block", pa.list_(pa.binary())),
         pa.field("meta", pa.struct(META_FIELDS)),
     ]
 )
 
 ENCODED_DDL = (
-    "doc_id string, source string, chunk_idx int, n_chunks int, codec string, "
-    "block binary, meta struct<n_tok:int, min_val:bigint, max_val:bigint, "
-    "n_unique:int, n_runs:int, bit_width:int, dict_size:int, "
-    "input_bytes:bigint, output_bytes:bigint>"
+    "doc_id string, source string, n_chunks int, codec string, "
+    "block array<binary>, meta struct<n_tok:int, min_val:bigint, "
+    "max_val:bigint, n_unique:int, n_runs:int, bit_width:int, "
+    "dict_size:int, input_bytes:bigint, output_bytes:bigint>"
 )
 
 
@@ -74,38 +81,68 @@ def list_to_numpy(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
 
 
 def _split_offsets(offsets: np.ndarray, chunk_size: int):
-    """Refine a list-offsets array so no row exceeds chunk_size — the
-    zero-copy twin of split_skew: the values buffer is untouched, chunks
-    are adjacent slices, so the refined array is itself a valid offsets
-    array. Returns (new_offsets, parent row index per chunk, chunk_idx,
-    n_chunks per chunk row)."""
+    """Refine a list-offsets array so no row exceeds chunk_size. The
+    values buffer is untouched and blocks are adjacent slices, so the
+    refined array is itself a valid offsets array. An empty document
+    keeps one empty block. Returns (block offsets, blocks per document)."""
     lens = np.diff(offsets)
     n_chunks = np.maximum(-(-lens // chunk_size), 1)
-    m = int(n_chunks.sum())
-    row_rep = np.repeat(np.arange(lens.size), n_chunks)
-    pref = np.concatenate(([0], np.cumsum(n_chunks)))[:-1]
-    chunk_idx = (np.arange(m) - np.repeat(pref, n_chunks)).astype(np.int64)
-    starts_out = offsets[:-1][row_rep] + chunk_idx * chunk_size
-    new_offsets = np.concatenate((starts_out, offsets[-1:]))
-    n_chunks_out = np.repeat(n_chunks, n_chunks)
-    return new_offsets, row_rep, chunk_idx.astype(np.int32), \
-        n_chunks_out.astype(np.int32)
+    first = np.concatenate(([0], np.cumsum(n_chunks)))[:-1]
+    chunk_idx = np.arange(int(n_chunks.sum())) - np.repeat(first, n_chunks)
+    starts = np.repeat(offsets[:-1], n_chunks) + chunk_idx * chunk_size
+    return np.concatenate((starts, offsets[-1:])), n_chunks
+
+
+def _document_columns(codec_ids: np.ndarray, s: dict, aux: dict,
+                      n_chunks: np.ndarray) -> tuple[np.ndarray, pa.Array]:
+    """Fold per-block codec ids and stats into per-document (codec id,
+    meta), by the rule in the module docstring."""
+    n_docs = n_chunks.size
+    first = np.concatenate(([0], np.cumsum(n_chunks)))[:-1]
+    multi = n_chunks > 1
+    n_codecs = len(kernels.CODEC_NAMES)
+    doc_of_block = np.repeat(np.arange(n_docs), n_chunks)
+    tokens_by_codec = np.bincount(
+        doc_of_block * n_codecs + codec_ids, weights=s["n_tok"],
+        minlength=n_docs * n_codecs).reshape(n_docs, n_codecs)
+    doc_codec = np.where(multi, tokens_by_codec.argmax(axis=1),
+                         codec_ids[first])
+    n_tok = np.add.reduceat(s["n_tok"], first)
+    dict_size = aux["dict_size"][first]
+    cols = {
+        "n_tok": pa.array(n_tok, type=pa.int32()),
+        "min_val": pa.array(np.minimum.reduceat(s["min"], first),
+                            type=pa.int64()),
+        "max_val": pa.array(np.maximum.reduceat(s["max"], first),
+                            type=pa.int64()),
+        # exact cardinality is only computed where the dict codec ran;
+        # everywhere else it is honestly NULL (a 0 would be a lie the
+        # lineage consumers can't distinguish from "empty")
+        "n_unique": pa.array(dict_size, type=pa.int32(),
+                             mask=multi | (dict_size == 0)),
+        "n_runs": pa.array(s["n_runs"][first], type=pa.int32(), mask=multi),
+        "bit_width": pa.array(aux["bw"][first], type=pa.int32(), mask=multi),
+        "dict_size": pa.array(dict_size, type=pa.int32(), mask=multi),
+        "input_bytes": pa.array(4 * n_tok, type=pa.int64()),
+        "output_bytes": pa.array(np.add.reduceat(aux["blob_bytes"], first),
+                                 type=pa.int64()),
+    }
+    meta = pa.StructArray.from_arrays(
+        [cols[name] for name, _ in META_FIELDS],
+        fields=[pa.field(name, typ) for name, typ in META_FIELDS])
+    return doc_codec, meta
 
 
 def encode_arrow_batch(batch: pa.RecordBatch, enable_fsst: bool = True,
                        fsst_min_ratio: float = 3.0,
-                       chunk_size: int | None = None) -> pa.RecordBatch:
-    """Encode one Arrow batch.
+                       chunk_size: int = DEFAULT_CHUNK) -> pa.RecordBatch:
+    """Encode one Arrow batch of (doc_id, source, tokens) documents into
+    one ENCODED_ARROW_SCHEMA row each.
 
-    Two input shapes:
-    - pre-chunked (doc_id, source, chunk_idx, n_chunks, tokens) — the
-      JVM split_skew path; chunk_size=None.
-    - raw (doc_id, source, tokens) with chunk_size set — the skew split
-      happens HERE as pure offsets arithmetic (_split_offsets): no JVM
-      Generate copy, no values movement at all.
-
-    Fully batch-vectorized (functions/batch_encode.py): segmented stats +
-    group packing; no per-row Python in the hot path. fsst_min_ratio tunes
+    Fully batch-vectorized (functions/batch_encode.py): every block of
+    the batch is encoded by one call, segmented stats + group packing, no
+    per-row Python in the hot path; the blobs come back as one buffer
+    that the ``block`` list column wraps zero-copy. fsst_min_ratio tunes
     the FSST trial gate (3.0 = throughput-first default; 2.0 admits
     Zipfian token blocks, see functions/batch_encode.py).
     """
@@ -114,66 +151,31 @@ def encode_arrow_batch(batch: pa.RecordBatch, enable_fsst: bool = True,
     from ..functions import batch_encode
 
     values, offsets = list_to_numpy(batch.column("tokens"))
-    if chunk_size is None:
-        n = batch.num_rows
-        doc_id_arr = batch.column("doc_id")
-        source_arr = batch.column("source")
-        chunk_idx_arr = batch.column("chunk_idx")
-        n_chunks_arr = batch.column("n_chunks")
-    else:
-        offsets, row_rep, chunk_idx, n_chunks_out = _split_offsets(
-            offsets, chunk_size)
-        n = chunk_idx.size
-        take = pa.array(row_rep, type=pa.int64())
-        doc_id_arr = pc.take(batch.column("doc_id"), take)
-        source_arr = pc.take(batch.column("source"), take)
-        chunk_idx_arr = pa.array(chunk_idx, type=pa.int32())
-        n_chunks_arr = pa.array(n_chunks_out, type=pa.int32())
-
+    block_offsets, n_chunks = _split_offsets(offsets, chunk_size)
     data, blob_offsets, codec_ids, s, aux = batch_encode.encode_batch_columnar(
-        values, offsets, enable_fsst=enable_fsst,
+        values, block_offsets, enable_fsst=enable_fsst,
         fsst_min_ratio=fsst_min_ratio)
     if blob_offsets[-1] > 2**31 - 1:  # Arrow binary offsets are int32
         raise ValueError("encoded batch exceeds 2GiB; lower Arrow batch size")
-    # zero-copy: one buffer + offsets, no per-row bytes objects
-    blocks = pa.Array.from_buffers(
-        pa.binary(), n,
+    blobs = pa.Array.from_buffers(
+        pa.binary(), blob_offsets.size - 1,
         [None, pa.py_buffer(blob_offsets.astype(np.int32)),
          pa.py_buffer(data)])
-    names = pa.array([kernels.CODEC_NAMES[i] for i in range(len(kernels.CODEC_NAMES))],
+    block = pa.ListArray.from_arrays(
+        pa.array(np.concatenate(([0], np.cumsum(n_chunks))), type=pa.int32()),
+        blobs)
+    doc_codec, meta = _document_columns(codec_ids, s, aux, n_chunks)
+    names = pa.array([kernels.CODEC_NAMES[i]
+                      for i in range(len(kernels.CODEC_NAMES))],
                      type=pa.string())
-    codecs = pc.take(names, pa.array(codec_ids, type=pa.int32()))
-    dict_sizes = aux["dict_size"]
-    meta_cols = {
-        "n_tok": s["n_tok"],
-        "min_val": s["min"],
-        "max_val": s["max"],
-        # exact cardinality is only computed where the dict codec ran;
-        # everywhere else it is honestly NULL (a 0 would be a lie the
-        # lineage consumers can't distinguish from "empty")
-        "n_unique": pa.array(dict_sizes, type=pa.int32(),
-                             mask=dict_sizes == 0),
-        "n_runs": s["n_runs"],
-        "bit_width": aux["bw"],
-        "dict_size": dict_sizes,
-        "input_bytes": 4 * s["n_tok"],
-        "output_bytes": aux["blob_bytes"],
-    }
-
-    meta = pa.StructArray.from_arrays(
-        [meta_cols[name] if isinstance(meta_cols[name], pa.Array)
-         else pa.array(meta_cols[name], type=typ)
-         for name, typ in META_FIELDS],
-        fields=[pa.field(name, typ) for name, typ in META_FIELDS],
-    )
+    codecs = pc.take(names, pa.array(doc_codec, type=pa.int32()))
     return pa.RecordBatch.from_arrays(
         [
-            doc_id_arr,
-            source_arr,
-            chunk_idx_arr,
-            n_chunks_arr,
+            batch.column("doc_id"),
+            batch.column("source"),
+            pa.array(n_chunks, type=pa.int32()),
             codecs,
-            blocks,
+            block,
             meta,
         ],
         schema=ENCODED_ARROW_SCHEMA,
@@ -186,12 +188,13 @@ def encode_arrow_batch(batch: pa.RecordBatch, enable_fsst: bool = True,
 # the reference turns stats down because they buy "not much benefit" on
 # its data; here the high-entropy `block` binary column gets per-column
 # opt-out (footer bytes saved, nothing can prune on codec blobs anyway)
-# while doc_id/source/chunk columns keep stats for scan pruning.
+# while doc_id/source/n_chunks keep stats for scan pruning. The key names
+# the leaf column path of the array<binary> column.
 # skip_arrow_metadata (main.rs:115-117) has no Spark analog: parquet-mr
 # never writes an Arrow schema blob in the first place.
 ENCODED_WRITE_OPTIONS = {
     "parquet.writer.version": "v2",
-    "parquet.column.statistics.enabled#block": "false",
+    "parquet.column.statistics.enabled#block.list.element": "false",
 }
 
 # E5 statistics-granularity modes, mirroring the reference's CLI enum
@@ -271,98 +274,38 @@ def write_encoded_bucketed(df: DataFrame, table: str, path: str,
     w.saveAsTable(table)
 
 
-def split_skew(df: DataFrame, chunk_size: int = DEFAULT_CHUNK,
-               passthrough: tuple[str, ...] = ()) -> DataFrame:
-    """Chunk long-tail documents JVM-side; output one row per chunk.
-
-    Single scan: a filter-union formulation reads the input twice (measured
-    ~13% of encode wall time even with zero long rows), so instead every row
-    goes through one conditional posexplode — short rows (the overwhelming
-    majority) explode a 1-element array (one JVM-side copy, no slicing) and
-    keep chunk_idx=0, n_chunks=1.
-
-    `passthrough` names extra columns to carry through unchanged (each
-    chunk row repeats its document's value) — e.g. the file-scope
-    pipeline's bucket column.
-    """
-    # NULL n_tok would otherwise flow through when()'s otherwise-branch with
-    # greatest(1, NULL)=1 and reach the Arrow encoder with possibly-NULL
-    # tokens; recompute it from the array so the behavior is intentional.
-    n_tok = F.coalesce(F.col("n_tok"), F.size("tokens"))
-    n_chunks = F.greatest(
-        F.lit(1), F.ceil(n_tok / F.lit(chunk_size))
-    ).cast("int")
-    chunks = F.when(
-        n_tok <= chunk_size, F.array(F.col("tokens"))
-    ).otherwise(
-        F.transform(
-            F.sequence(F.lit(0), n_chunks - 1),
-            lambda c: F.slice(F.col("tokens"), c * chunk_size + 1, chunk_size),
-        )
-    )
-    extra = list(passthrough)
-    return (
-        df.select("doc_id", "source", n_chunks.alias("n_chunks"),
-                  *extra,
-                  F.posexplode(chunks).alias("chunk_idx", "tokens"))
-        .select("doc_id", "source", "chunk_idx", "n_chunks", *extra,
-                "tokens")
-    )
-
-
 def salted_repartition(df: DataFrame, num_partitions: int,
                        salt_buckets: int = DEFAULT_SALT_BUCKETS) -> DataFrame:
-    """Deterministic salted repartition on (source, hash(doc_id), chunk_idx).
+    """Deterministic salted repartition of documents on hash(source, doc_id).
 
     The salt is derived from the data (xxhash64), never from randomness, so
     re-runs land identical rows in identical buckets — required for the
     resumable manifests (plans/pipeline.py).
     """
-    salt = F.pmod(
-        F.xxhash64(F.col("source"), F.col("doc_id"), F.col("chunk_idx")),
-        F.lit(salt_buckets),
-    )
+    salt = F.pmod(F.xxhash64(F.col("source"), F.col("doc_id")),
+                  F.lit(salt_buckets))
     return df.repartition(num_partitions, salt)
 
 
 def encode_tokens(df: DataFrame, chunk_size: int = DEFAULT_CHUNK,
                   num_partitions: int | None = None,
                   enable_fsst: bool = True,
-                  fsst_min_ratio: float = 3.0,
-                  mapper_split: bool | None = None) -> DataFrame:
-    """Full encode operator: skew split -> [salted repartition] -> encode.
+                  fsst_min_ratio: float = 3.0) -> DataFrame:
+    """Full encode operator: [salted repartition] -> one Arrow map.
 
     Input:  (doc_id string, tokens array<int>, n_tok int, source string)
-    Output: ENCODED_DDL rows, one per (doc_id, chunk_idx).
+    Output: ENCODED_DDL rows, one per document.
 
-    Split placement: by default the skew split runs INSIDE the Arrow
-    mapper as offsets arithmetic (zero data copy — measured ~18% of the
-    map-only job was the JVM Generate/posexplode copy). When
-    num_partitions is set the split must happen JVM-side instead, so the
-    salted repartition can balance chunk rows across the shuffle
-    (mapper_split=False forces the JVM path explicitly). Arrow batches
-    stay bounded either way via spark.sql.execution.arrow.maxBytesPerBatch;
-    the mapper path additionally requires single documents to fit one
-    Arrow row (< 2^31 tokens) — true by construction for training
-    sequences, and the JVM path remains available for anything wilder.
+    num_partitions, when set, balances whole documents across a salted
+    shuffle before the map. Arrow batches stay bounded via
+    spark.sql.execution.arrow.maxBytesPerBatch; a single document must
+    fit one Arrow row (< 2^31 tokens), true by construction for training
+    sequences.
     """
-    if mapper_split is None:
-        mapper_split = num_partitions is None
-    if not mapper_split:
-        chunked = split_skew(df, chunk_size)
-        if num_partitions:
-            chunked = salted_repartition(chunked, num_partitions)
-
-        def mapper(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-            for batch in batches:
-                if batch.num_rows:
-                    yield encode_arrow_batch(batch, enable_fsst=enable_fsst,
-                                             fsst_min_ratio=fsst_min_ratio)
-
-        return chunked.mapInArrow(mapper, ENCODED_DDL)
-
     src = df.select(F.col("doc_id").cast("string").alias("doc_id"),
                     "source", "tokens")
+    if num_partitions:
+        src = salted_repartition(src, num_partitions)
 
     def mapper(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:

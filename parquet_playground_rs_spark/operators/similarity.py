@@ -19,9 +19,13 @@ filtered to similarity >= threshold.
 
 from __future__ import annotations
 
+import logging
+
 import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+_log = logging.getLogger(__name__)
 
 
 def _dot(a, b):
@@ -1258,7 +1262,7 @@ def _maybe_recover_cell_swap(spark, path: str,
     LIVE writer owns the swap and finishes it itself — return without
     recovering. No journal (the overwhelmingly common case) costs one
     FS existence probe."""
-    from ..plans.pipeline import _JobLock, _hadoop_fs
+    from ..plans.pipeline import LockHeldError, _hadoop_fs, _JobLock
 
     fs, _, jvm = _hadoop_fs(spark, path)
     Path = jvm.org.apache.hadoop.fs.Path
@@ -1266,8 +1270,14 @@ def _maybe_recover_cell_swap(spark, path: str,
         return 0
     try:
         lock = _JobLock(spark, path, lease_sec=lock_lease_sec).acquire()
-    except Exception:
+    except LockHeldError:
         return 0  # live writer mid-swap; it completes the publish
+    except Exception:
+        # not contention (FS error, permissions, bad path): the query
+        # still runs on the published cells, but the failure is reported
+        _log.warning("IVF-PQ cell-swap recovery skipped for %s", path,
+                     exc_info=True)
+        return 0
     try:
         return _recover_cell_swap(spark, path)
     finally:

@@ -5,7 +5,8 @@ batch, /root/reference/src/bin/js2pq/main.rs:46-131). The north rule demands
 restartable runs with per-partition lineage. Design:
 
 - Work is keyed by a deterministic **bucket** = pmod(xxhash64(source,
-  doc_id, chunk_idx), n_buckets). Buckets, not Spark partition ids, are the
+  doc_id), n_buckets) — a whole document, all of its blocks, lands in
+  one bucket. Buckets, not Spark partition ids, are the
   resume unit: they're a pure function of the data, so a restart at any
   parallelism reproduces the same buckets.
 - Each completed bucket writes its encoded rows under
@@ -28,7 +29,7 @@ restartable runs with per-partition lineage. Design:
     regrouping; the catalog fingerprint covers file sizes.
   * **re-scan** (default here) — each group re-scans the column-pruned
     source and filters to its hash buckets: 2.35x plain at 8M rows.
-  * **staging** (`stage_input=True`) — materialize the chunked work
+  * **staging** (`stage_input=True`) — materialize the bucketed work
     list once under ``out/staging/data/bucket=<b>/``; group reads
     partition-prune. Wins only when re-deriving the source is
     expensive (remote store, JSON decode): the raw-token
@@ -65,9 +66,15 @@ _MANIFEST_COLS = [p.split(" ")[0] for p in MANIFEST_SCHEMA.split(", ")]
 
 def bucket_col(n_buckets: int):
     return F.pmod(
-        F.xxhash64(F.col("source"), F.col("doc_id"), F.col("chunk_idx")),
-        F.lit(n_buckets),
+        F.xxhash64(F.col("source"), F.col("doc_id")), F.lit(n_buckets),
     ).cast("int")
+
+
+def block_crc():
+    """Aggregate: the sum of the CRC32 of every blob in the group — the
+    manifest's content checksum, recomputed by compaction's read-back."""
+    return F.sum(F.aggregate("block", F.lit(0).cast("long"),
+                             lambda acc, b: acc + F.crc32(b)))
 
 
 def _manifest_dir(out: str) -> str:
@@ -214,6 +221,10 @@ def _read_small_file(spark: SparkSession, path: str) -> str | None:
 _LOCK_FILE = "job.lock"
 
 
+class LockHeldError(RuntimeError):
+    """Another writer holds, or won the race for, a `_JobLock`."""
+
+
 class _JobLock:
     """Single-writer lease on an output dir (round-7 judge task 5).
 
@@ -296,7 +307,7 @@ class _JobLock:
         except Exception:
             won = False
         if not won:
-            raise RuntimeError(
+            raise LockHeldError(
                 f"lost the stale-lock break race for {self._path} to a "
                 "concurrent writer; retry after it finishes")
         moved = _read_small_file(self._spark, str(claimed))
@@ -311,7 +322,7 @@ class _JobLock:
             # a faster breaker already installed a fresh lock and the
             # rename moved THAT: restore it and back off
             fs.rename(claimed, jpath)
-            raise RuntimeError(
+            raise LockHeldError(
                 f"lost the stale-lock break race for {self._path}: a "
                 "concurrent writer re-acquired it first")
         fs.delete(claimed, False)
@@ -329,7 +340,7 @@ class _JobLock:
             age = time.time() - \
                 fs.getFileStatus(jpath).getModificationTime() / 1000.0
             if age < self._lease:
-                raise RuntimeError(
+                raise LockHeldError(
                     f"another writer holds {self._path} (heartbeat "
                     f"{age:.1f}s ago, lease {self._lease:.0f}s): "
                     "refusing to interleave commit groups with a live "
@@ -346,7 +357,7 @@ class _JobLock:
         try:
             stream = fs.create(jpath, False)  # atomic create-if-absent
         except Exception as e:
-            raise RuntimeError(
+            raise LockHeldError(
                 f"could not acquire {self._path} — lost the creation "
                 f"race to a concurrent writer: {e}") from None
         try:
@@ -358,7 +369,7 @@ class _JobLock:
         # create and here (a delete-based breaker from an older build),
         # refuse now instead of interleaving a whole run
         if self._read_token() != self._token:
-            raise RuntimeError(
+            raise LockHeldError(
                 f"could not acquire {self._path}: the lock was replaced "
                 "immediately after creation by a concurrent writer")
         self._stop.clear()
@@ -435,10 +446,10 @@ def drop_staging(spark: SparkSession, out: str) -> None:
         fs.delete(jpath, True)
 
 
-def _ensure_staged(spark: SparkSession, chunked: DataFrame, out: str,
+def _ensure_staged(spark: SparkSession, work: DataFrame, out: str,
                    n_buckets: int, chunk_size: int,
                    files_per_bucket: int) -> DataFrame:
-    """Write the chunked+bucketed work list ONCE under
+    """Write the bucketed work list ONCE under
     out/staging/data/bucket=<b>/, or reuse a finished staging from a
     previous (killed) run when its params match; returns a DataFrame over
     the staged files whose scans PRUNE to the requested buckets.
@@ -458,13 +469,13 @@ def _ensure_staged(spark: SparkSession, chunked: DataFrame, out: str,
             staged = spark.read.parquet(data_dir)
             return staged.withColumn("bucket", F.col("bucket").cast("int"))
         drop_staging(spark, out)  # params changed: stale staging is invalid
-    salt = F.pmod(F.xxhash64(F.col("doc_id"), F.col("chunk_idx"), F.lit(13)),
+    salt = F.pmod(F.xxhash64(F.col("doc_id"), F.lit(13)),
                   F.lit(files_per_bucket))
     # snappy, not the session's zstd: staging is write-once scratch that
     # every commit group re-reads — cheap compression wins on both the
     # write CPU and the read stability (32 concurrent zstd readers
     # showed 5x variance; the same reasoning as bench.py's input cache)
-    (chunked.repartition(F.col("bucket"), salt)
+    (work.repartition(F.col("bucket"), salt)
      .write.mode("overwrite").option("compression", "snappy")
      .partitionBy("bucket").parquet(data_dir))
     _write_small_file(spark, marker, json.dumps(
@@ -506,7 +517,7 @@ def run_encode_job(
     commit granularity stops taxing wall-clock. Incompatible with
     `fail_after_buckets` (the kill test needs deterministic ordering).
 
-    `stage_input=True` writes the chunked+bucketed work list ONCE under
+    `stage_input=True` writes the bucketed work list ONCE under
     out/staging partitioned by bucket, and every commit group reads only
     its bucket dirs via partition pruning — G full source re-scans
     become 1 scan + 1 write + a 1/G-pruned read per group. Staging is
@@ -523,7 +534,7 @@ def run_encode_job(
     prefer `run_encode_job_files` below — it needs neither staging nor
     re-scans and meets the <=1.3x commit-overhead bar.
 
-    `cache_input` persists the chunked+bucketed frame (DISK_ONLY) so the
+    `cache_input` persists the bucketed work frame (DISK_ONLY) so the
     G commit groups read the cache instead of re-scanning the source —
     the in-session alternative to `stage_input` (which it overrides when
     explicitly enabled): the persist dies with the session, so a killed
@@ -537,8 +548,8 @@ def run_encode_job(
     if not pending:
         return summary
 
-    chunked = enc.split_skew(source_df, chunk_size)
-    chunked = chunked.withColumn("bucket", bucket_col(n_buckets))
+    work = source_df.select("doc_id", "source", "tokens") \
+        .withColumn("bucket", bucket_col(n_buckets))
     # one pass per commit-group of buckets: each group is an independent,
     # idempotent write whose manifest rows land only after success
     group = buckets_per_commit or len(pending)
@@ -547,14 +558,14 @@ def run_encode_job(
     if cache_input and group < len(pending):
         from pyspark import StorageLevel
 
-        persisted_input = chunked.persist(StorageLevel.DISK_ONLY)
-        chunked = persisted_input
+        persisted_input = work.persist(StorageLevel.DISK_ONLY)
+        work = persisted_input
     elif bool(stage_input) and group < len(pending):
         # files per bucket dir sized so ONE commit group's read still
         # fans out over every core: group buckets x files >= parallelism
         fpb = max(1, -(-spark.sparkContext.defaultParallelism // group))
-        chunked = _ensure_staged(spark, chunked, out, n_buckets,
-                                 chunk_size, files_per_bucket=fpb)
+        work = _ensure_staged(spark, work, out, n_buckets,
+                              chunk_size, files_per_bucket=fpb)
         staged = True
     groups = [pending[gi: gi + group] for gi in range(0, len(pending), group)]
     try:
@@ -568,8 +579,9 @@ def run_encode_job(
 
             lock = threading.Lock()
             with ThreadPoolExecutor(max_workers=concurrent_commits) as ex:
-                futs = [ex.submit(_process_commit_group, spark, chunked,
-                                  batch, out, statistics, summary, lock)
+                futs = [ex.submit(_process_commit_group, spark, work,
+                                  batch, out, chunk_size, statistics,
+                                  summary, lock)
                         for batch in groups]
                 for f in futs:
                     f.result()  # propagate the first failure
@@ -578,7 +590,7 @@ def run_encode_job(
                 if fail_after_buckets is not None and \
                         summary["processed_buckets"] >= fail_after_buckets:
                     raise RuntimeError("injected failure for resume test")
-                _process_commit_group(spark, chunked, batch, out,
+                _process_commit_group(spark, work, batch, out, chunk_size,
                                       statistics, summary, None)
     finally:
         if persisted_input is not None:
@@ -590,10 +602,10 @@ def run_encode_job(
     return summary
 
 
-def _process_commit_group(spark, chunked, batch_buckets, out, statistics,
-                          summary, lock) -> None:
+def _process_commit_group(spark, work, batch_buckets, out, chunk_size,
+                          statistics, summary, lock) -> None:
     t0 = time.time()
-    part = chunked.filter(F.col("bucket").isin(batch_buckets))
+    part = work.filter(F.col("bucket").isin(batch_buckets))
     # rebalance on the partition columns BEFORE the partitioned write:
     # without it every write task opens a file in every (source,
     # bucket) dir it touches — tasks x dirs small files (measured
@@ -602,7 +614,7 @@ def _process_commit_group(spark, chunked, batch_buckets, out, statistics,
     # price is one shuffle of the group's COMPRESSED blocks (~0.5x
     # input bytes), the standard trade for dynamic-partitioned sinks.
     encoded = (
-        _encode_with_bucket(part)
+        _encode_with_bucket(part, chunk_size)
         .repartition(F.col("source"), F.col("bucket"))
         .persist()
     )
@@ -615,10 +627,10 @@ def _process_commit_group(spark, chunked, batch_buckets, out, statistics,
         codec_names = sorted(CODEC_IDS)
         stats = encoded.groupBy("bucket").agg(
             F.count("*").alias("n_rows"),
-            F.countDistinct("doc_id").alias("n_docs"),
+            F.count("*").alias("n_docs"),
             F.sum("meta.input_bytes").alias("input_bytes"),
             F.sum("meta.output_bytes").alias("output_bytes"),
-            F.sum(F.crc32(F.col("block"))).alias("block_crc"),
+            block_crc().alias("block_crc"),
             *[F.sum(F.when(F.col("codec") == c, 1).otherwise(0))
               .alias(f"_codec_{c}") for c in codec_names],
         )
@@ -672,20 +684,23 @@ def _tally(summary: dict, row: dict) -> None:
     summary["output_bytes"] += row["output_bytes"]
 
 
-def _encode_with_bucket(chunked_with_bucket: DataFrame) -> DataFrame:
-    """Encode while carrying the bucket column through the Arrow map."""
+def _encode_with_bucket(docs_with_bucket: DataFrame,
+                        chunk_size: int) -> DataFrame:
+    """Encode (doc_id, source, tokens, bucket) documents, carrying the
+    bucket column through the Arrow map."""
     import pyarrow as pa
 
     def mapper(batches):
         for batch in batches:
             if not batch.num_rows:
                 continue
-            out = enc.encode_arrow_batch(batch)
+            out = enc.encode_arrow_batch(batch, chunk_size=chunk_size)
             yield out.append_column(
                 "bucket", batch.column("bucket").cast(pa.int32())
             )
 
-    return chunked_with_bucket.mapInArrow(mapper, enc.ENCODED_DDL + ", bucket int")
+    return docs_with_bucket.mapInArrow(mapper,
+                                       enc.ENCODED_DDL + ", bucket int")
 
 
 # ---------------------------------------------------------------------------
@@ -694,7 +709,7 @@ def _encode_with_bucket(chunked_with_bucket: DataFrame) -> DataFrame:
 #
 # Round-5 finding (BENCH/BASELINE.md): with data-hash buckets, commit
 # granularity must either re-scan the source per group (2.35x plain at 8M
-# rows) or materialize the chunked raw tokens once (staging — measured
+# rows) or materialize the raw tokens once (staging — measured
 # 8.2x: the encode runs at 165M tok/s, so ONE extra materialization of
 # its 12.4 GB input costs ~6x the encode itself). The design that meets
 # the <=1.3x bar keys the resume unit by INPUT FILE GROUP instead: each
@@ -1380,9 +1395,7 @@ def _process_file_commit_group(spark, buckets, sizes, batch_buckets, out,
       output (compressed, ~0.25x its input) — no persist of the
       encoded frame, and the read-back doubles as a commit-readability
       check before the manifest rows land;
-    - n_docs counts chunk_idx==0 rows, which is EXACT here (a doc's
-      chunks all live in one file, hence one bucket) and avoids the
-      countDistinct shuffle;
+    - n_docs is the row count: one row per document;
     - output lands in an Iceberg-snapshot-shaped layout
       ``out/data/commit=<group>/source=<s>/``: a STATIC overwrite of
       the group's own commit dir is idempotent on retry (no dynamic
@@ -1450,9 +1463,9 @@ def _process_file_commit_group(spark, buckets, sizes, batch_buckets, out,
                     F.lit("file outside this commit group's plan: "),
                     F.input_file_name()))).cast("int"))
             .drop("_base", "_fbucket"))
-        chunked = enc.split_skew(tagged, chunk_size,
-                                 passthrough=("bucket",))
-        encoded = _encode_with_bucket(chunked)
+        encoded = _encode_with_bucket(
+            tagged.select("doc_id", "source", "tokens", "bucket"),
+            chunk_size)
         commit_dir = os.path.join(out, "data",
                                   f"commit={batch_buckets[0]:05d}")
         if FILE_COMMIT_REPARTITION:
@@ -1474,11 +1487,10 @@ def _process_file_commit_group(spark, buckets, sizes, batch_buckets, out,
         # land — a stronger commit protocol, not just a cheaper one.
         stats = spark.read.parquet(commit_dir).groupBy("bucket").agg(
             F.count("*").alias("n_rows"),
-            F.sum(F.when(F.col("chunk_idx") == 0, 1).otherwise(0))
-            .alias("n_docs"),
+            F.count("*").alias("n_docs"),
             F.sum("meta.input_bytes").alias("input_bytes"),
             F.sum("meta.output_bytes").alias("output_bytes"),
-            F.sum(F.crc32(F.col("block"))).alias("block_crc"),
+            block_crc().alias("block_crc"),
             *[F.sum(F.when(F.col("codec") == c, 1).otherwise(0))
               .alias(f"_codec_{c}") for c in codec_names],
         )
@@ -1748,7 +1760,7 @@ def _compact_locked(spark, out, target_group_output_bytes,
         got = {int(r["bucket"]): (int(r["n_rows"]), int(r["block_crc"]))
                for r in spark.read.parquet(new_dir).groupBy("bucket").agg(
                    F.count("*").alias("n_rows"),
-                   F.sum(F.crc32(F.col("block"))).alias("block_crc"))
+                   block_crc().alias("block_crc"))
                .collect()}
         if got != expect:
             raise IOError(
@@ -1794,11 +1806,7 @@ def _compact_locked(spark, out, target_group_output_bytes,
 
 
 def verify_job(spark: SparkSession, source_df: DataFrame, out: str) -> dict:
-    """Decode everything under `out` and compare with the source table.
-
-    The decode cache (if decode_tokens materialized one) is released
-    before returning — composed jobs must not leak cached blocks into the
-    session (round-3 cache-lifecycle finding)."""
-    with dec.decoded_tokens(read_encoded(spark, out)) as decoded:
-        row = dec.verify_roundtrip(source_df, decoded).first()
+    """Decode everything under `out` and compare with the source table."""
+    decoded = dec.decode_tokens(read_encoded(spark, out))
+    row = dec.verify_roundtrip(source_df, decoded).first()
     return {k: row[k] for k in ("n_source", "n_decoded", "n_joined", "n_mismatch")}

@@ -2,9 +2,29 @@
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
+
+_log = logging.getLogger(__name__)
+
+_DEFAULT_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager")
+
+
+def _jvm_has_class(spark: SparkSession, name: str) -> bool:
+    """Whether the driver JVM's context classloader can load `name`."""
+    from py4j.protocol import Py4JJavaError
+
+    jvm = spark._jvm
+    loader = jvm.java.lang.Thread.currentThread().getContextClassLoader()
+    try:
+        jvm.java.lang.Class.forName(name, False, loader)
+    except Py4JJavaError:
+        return False
+    return True
 
 
 def get_spark(app: str = "parquet_playground_rs_spark", cores: int | None = None,
@@ -65,13 +85,6 @@ def get_spark(app: str = "parquet_playground_rs_spark", cores: int | None = None
     # Spark's default, so each is env-overridable and applied only for
     # local masters.
     if master.startswith("local"):
-        ckpt_mgr = os.environ.get(
-            "SPARK_GRAFT_CHECKPOINT_MANAGER",
-            "org.apache.spark.sql.execution.streaming.checkpointing."
-            "FileSystemBasedCheckpointFileManager")
-        if ckpt_mgr:
-            b = b.config("spark.sql.streaming.checkpointFileManagerClass",
-                         ckpt_mgr)
         # Spark 4.1 additionally writes a shadow ".checksum" file per
         # checkpoint file (corruption detection for remote stores);
         # on a local FS that doubles the exec-prone create/rename ops
@@ -80,4 +93,17 @@ def get_spark(app: str = "parquet_playground_rs_spark", cores: int | None = None
                      os.environ.get("SPARK_GRAFT_CKPT_CHECKSUM", "false"))
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    if master.startswith("local"):
+        # The manager is a Spark-internal class whose package has moved
+        # between releases (4.0 -> 4.1): set it only when this JVM has it,
+        # else every streaming query would fail at start. It is a runtime
+        # SQL conf, so it can be set once the JVM is up to be asked.
+        ckpt_mgr = os.environ.get("SPARK_GRAFT_CHECKPOINT_MANAGER",
+                                  _DEFAULT_CHECKPOINT_MANAGER)
+        if ckpt_mgr and _jvm_has_class(spark, ckpt_mgr):
+            spark.conf.set("spark.sql.streaming.checkpointFileManagerClass",
+                           ckpt_mgr)
+        elif ckpt_mgr:
+            _log.warning("checkpoint manager %s not found; using Spark's "
+                         "default", ckpt_mgr)
     return spark

@@ -105,7 +105,6 @@ def main() -> None:
     emit("verify_checksum", dec.verify_roundtrip(
         seq, dec.decode_tokens(spark.read.parquet(out_dir)),
         method="checksum"))
-    dec.release_all_decode_caches()
     spark.stop()
 
 

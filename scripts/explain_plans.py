@@ -4,7 +4,7 @@
 Checks the scale-critical plan properties explicitly:
 - parquet scans show PushedFilters / narrow ReadSchema (column pruning);
 - the encode path has NO exchange (shuffle) unless salting is requested;
-- decode reassembly shuffles only the multi-chunk slice;
+- decode is one map over the scan: no Exchange, no persist;
 - broadcast joins where a side is small (tokenizer vocab, ANN queries).
 """
 
@@ -85,38 +85,32 @@ def main() -> None:
         ["BroadcastHashJoin present -> %s" % ("PASS" if "BroadcastHashJoin" in p else "FAIL")],
     ))
 
-    # 4. decode reassembly over a COMPOSED encode: the input must be
-    # persisted so encode runs once (round-1 finding: both filter branches
-    # re-executed the whole upstream — encode ran 2x)
+    # 4. decode over a COMPOSED encode: one document per row, so decode
+    # is a second map chained on the encode map — encode runs once
     encoded = enc.encode_tokens(seq, chunk_size=enc.DEFAULT_CHUNK)
     p = plan_of(dec.decode_tokens(encoded))
     n_exchanges = len(re.findall(r"\(\d+\) Exchange", p))
     n_maps = len(re.findall(r"\(\d+\) (?:Python)?MapInArrow", p))
     sections.append((
-        "Decode + reassembly of a composed encode: single-execution",
+        "Decode of a composed encode: one map chain, single execution",
         p,
-        [f"Exchange count = {n_exchanges} (expected: 1, for the rare "
-         "multi-chunk groupBy; single-chunk rows bypass it via union)",
-         "InMemoryTableScan present (both branches read the persisted "
-         "encode, not a replay) -> %s"
-         % ("PASS" if "InMemoryTableScan" in p else "FAIL"),
-         f"MapInArrow nodes printed = {n_maps} (expected: 3 — two live "
-         "decode branches + the ONE cached encode inside the "
-         "InMemoryRelation definition, which executes once; round 1 had "
-         "two full encode+decode chains executing)"],
+        [f"Exchange count = {n_exchanges} (expected: 0) -> %s"
+         % ("PASS" if n_exchanges == 0 else "FAIL"),
+         f"MapInArrow nodes = {n_maps} (expected: 2, encode + decode) "
+         "-> %s" % ("PASS" if n_maps == 2 else "FAIL")],
     ))
 
-    # 4b. decode over a parquet scan: no persist, n_chunks filter pushed
+    # 4b. decode over a parquet scan: one map, no Exchange, no persist
     enc.write_encoded(enc.encode_tokens(seq, chunk_size=enc.DEFAULT_CHUNK),
                       "/tmp/plans_encoded")
     p = plan_of(dec.decode_tokens(spark.read.parquet("/tmp/plans_encoded")))
     sections.append((
-        "Decode of an encoded parquet table: free re-scan, pushed filters",
+        "Decode of an encoded parquet table: one map over the scan",
         p,
-        ["no InMemoryTableScan (re-scan is free) -> %s"
-         % ("PASS" if "InMemoryTableScan" not in p else "FAIL"),
-         "n_chunks filter pushed to scan -> %s"
-         % ("PASS" if "n_chunks" in p and "PushedFilters" in p else "CHECK")],
+        ["no Exchange in decode -> %s"
+         % ("PASS" if "Exchange" not in p else "FAIL"),
+         "no InMemoryTableScan -> %s"
+         % ("PASS" if "InMemoryTableScan" not in p else "FAIL")],
     ))
 
     # 4c. vocab build: the rank must not move the word set to one task
@@ -169,10 +163,10 @@ def main() -> None:
 
     # 4f. bucket layout: partition pruning on the resume unit
     from parquet_playground_rs_spark.plans import pipeline as pl
-    chunked = enc.split_skew(seq, enc.DEFAULT_CHUNK) \
+    docs_b = seq.select("doc_id", "source", "tokens") \
         .withColumn("bucket", pl.bucket_col(8))
-    enc.write_encoded(pl._encode_with_bucket(chunked), "/tmp/plans_buckets",
-                      partition_by="bucket")
+    enc.write_encoded(pl._encode_with_bucket(docs_b, enc.DEFAULT_CHUNK),
+                      "/tmp/plans_buckets", partition_by="bucket")
     p = plan_of(spark.read.parquet("/tmp/plans_buckets")
                 .filter(F.col("bucket") == 3))
     sections.append((
@@ -425,8 +419,8 @@ def main() -> None:
                   .join(F.broadcast(fmap), "_base", "left")
                   .withColumn("bucket", F.col("_fbucket").cast("int"))
                   .drop("_base", "_fbucket"))
-        chunked = enc.split_skew(tagged, 4096, passthrough=("bucket",))
-        p = plan_of(pl._encode_with_bucket(chunked))
+        p = plan_of(pl._encode_with_bucket(
+            tagged.select("doc_id", "source", "tokens", "bucket"), 4096))
         sections.append((
             "File-scope commit group: one scan, broadcast bucket join, "
             "zero Exchange",

@@ -142,8 +142,8 @@ def main() -> None:
     # ---- round-trip at 3.1B tokens against the pipeline's own output
     bench.calibrate("verify")
     t0 = time.time()
-    with dec.decoded_tokens(pl.read_encoded(spark, pipe_dir)) as decoded:
-        v = dec.verify_roundtrip(seq, decoded, method="checksum").first()
+    decoded = dec.decode_tokens(pl.read_encoded(spark, pipe_dir))
+    v = dec.verify_roundtrip(seq, decoded, method="checksum").first()
     out["verify_checksum_sec"] = round(time.time() - t0, 2)
     out["verify_tokens_per_sec"] = round(
         out["total_tokens"] / (time.time() - t0), 0)

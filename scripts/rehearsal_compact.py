@@ -99,7 +99,7 @@ def main() -> None:
         t0 = time.time()
         row = pl.read_encoded(spark, out_dir).agg(
             F.count("*").alias("n"),
-            F.sum(F.crc32("block")).alias("crc")).first()
+            pl.block_crc().alias("crc")).first()
         return time.time() - t0, (row["n"], row["crc"])
 
     out: dict = {"n_base_rows": N_BASE, "base_files": BASE_FILES,

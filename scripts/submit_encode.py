@@ -64,16 +64,17 @@ def main() -> None:
                          "sources (JSON/object stores), measured 2x "
                          "SLOWER for local columnar inputs")
     ap.add_argument("--stage-input", action="store_true",
-                    help="[hash scope] materialize the chunked work "
+                    help="[hash scope] materialize the bucketed work "
                          "list once under output/staging (resumable); "
                          "wins only for expensive-to-rederive sources — "
                          "the materialization alone costs ~6x the "
                          "encode at the 8M rehearsal")
     ap.add_argument("--verify",
                     choices=["none", "chunks", "checksum", "hash", "exact"],
-                    default="chunks",
-                    help="'chunks' = reassembly-free per-chunk checksum "
-                         "(zero exchanges, the 10^12-row default)")
+                    default="checksum",
+                    help="'checksum' = join-free (count, xor-hash) "
+                         "verify, the 10^12-row default; 'chunks' is "
+                         "the same verify under its earlier name")
     ap.add_argument("--statistics", choices=["none", "chunk", "page"],
                     default="page",
                     help="parquet statistics granularity (reference E5 enum)")
@@ -165,13 +166,9 @@ def main() -> None:
             cache_input=args.cache_input,
             stage_input=args.stage_input)
     if args.verify != "none":
-        if args.verify == "chunks":
-            row = dec.verify_encoded(src, pl.read_encoded(spark, args.output),
-                                     chunk_size=args.chunk_size).first()
-        else:
-            decoded = dec.decode_tokens(pl.read_encoded(spark, args.output))
-            row = dec.verify_roundtrip(src, decoded,
-                                       method=args.verify).first()
+        method = "checksum" if args.verify == "chunks" else args.verify
+        decoded = dec.decode_tokens(pl.read_encoded(spark, args.output))
+        row = dec.verify_roundtrip(src, decoded, method=method).first()
         summary["verify"] = {k: int(row[k]) for k in
                              ("n_source", "n_decoded", "n_joined", "n_mismatch")}
         if row["n_mismatch"] != 0:

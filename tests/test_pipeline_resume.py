@@ -106,7 +106,8 @@ def test_staging_pruned_read(spark, seq, tmp_path):
     directories, not the whole staged work list."""
     out = str(tmp_path / "run_prune")
     from pyspark.sql import functions as F
-    chunked = pl.enc.split_skew(seq, 512).withColumn("bucket", pl.bucket_col(4))
+    chunked = seq.select("doc_id", "source", "tokens") \
+        .withColumn("bucket", pl.bucket_col(4))
     staged = pl._ensure_staged(spark, chunked, out, 4, 512, files_per_bucket=2)
     plan = staged.filter(F.col("bucket").isin([1, 3])) \
         ._jdf.queryExecution().executedPlan().toString()
@@ -142,8 +143,8 @@ def test_staged_matches_unstaged(spark, seq, tmp_path):
 
 
 def test_bucket_assignment_deterministic(spark, seq):
-    a = seq.withColumn("chunk_idx", F.lit(0)).withColumn("b", pl.bucket_col(16))
-    b = seq.repartition(11).withColumn("chunk_idx", F.lit(0)).withColumn("b", pl.bucket_col(16))
+    a = seq.withColumn("b", pl.bucket_col(16))
+    b = seq.repartition(11).withColumn("b", pl.bucket_col(16))
     am = {r["doc_id"]: r["b"] for r in a.collect()}
     bm = {r["doc_id"]: r["b"] for r in b.collect()}
     assert am == bm
@@ -600,7 +601,7 @@ def test_lock_heartbeat_survives_transient_fs_errors(spark, tmp_path,
 # ---------------------------------------------------------------------------
 
 def _crc_sum(df):
-    return df.agg(F.sum(F.crc32("block"))).first()[0]
+    return df.agg(pl.block_crc()).first()[0]
 
 
 def test_compact_merges_groups_exactly(spark, seq, seq_path, tmp_path):

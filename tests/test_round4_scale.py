@@ -253,32 +253,18 @@ def test_connected_components_fewer_jobs_than_eager_loop(spark):
 # ------------------------------------------------- decode cache lifecycle
 
 def test_verify_job_releases_decode_cache(spark, tmp_path):
-    from parquet_playground_rs_spark.operators import decode as dec
+    """verify_job leaves no cached blocks behind in the session."""
     from parquet_playground_rs_spark.plans import pipeline
     from parquet_playground_rs_spark.sources.generator import sequences_df
 
-    dec.release_all_decode_caches()  # clean slate
     seq = sequences_df(spark, 200, seed=42, partitions=2)
     out = str(tmp_path / "pipe")
     pipeline.run_encode_job(spark, seq, out, n_buckets=4, chunk_size=1024)
+    jsc = spark.sparkContext._jsc.sc()
+    before = jsc.getPersistentRDDs().size()
     verdict = pipeline.verify_job(spark, seq, out)
     assert verdict["n_mismatch"] == 0
-    assert dec._LIVE_DECODE_CACHES == []
-    assert dec.release_all_decode_caches() == 0
-
-
-def test_decoded_tokens_context_manager(spark):
-    from parquet_playground_rs_spark.operators import decode as dec
-    from parquet_playground_rs_spark.operators import encode as enc
-    from parquet_playground_rs_spark.sources.generator import sequences_df
-
-    dec.release_all_decode_caches()
-    seq = sequences_df(spark, 100, seed=1, partitions=2)
-    encoded = enc.encode_tokens(seq, chunk_size=512)  # composed -> caches
-    with dec.decoded_tokens(encoded) as decoded:
-        assert decoded.count() == 100
-        assert len(dec._LIVE_DECODE_CACHES) == 1
-    assert dec._LIVE_DECODE_CACHES == []
+    assert jsc.getPersistentRDDs().size() == before
 
 
 def test_pipeline_concurrent_commits_match_sequential(spark, tmp_path):

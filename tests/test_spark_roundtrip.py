@@ -15,6 +15,18 @@ from parquet_playground_rs_spark.operators import encode as enc
 from parquet_playground_rs_spark.sources.generator import sequences_df
 
 N_ROWS = 400
+EDGE_CHUNK = 256
+
+
+def _mixed_codec_doc() -> list[int]:
+    """Four blocks at EDGE_CHUNK that the selector encodes with different
+    codecs: a constant run, a ramp, full-range noise, a short tail."""
+    rng = np.random.default_rng(5)
+    return (
+        [7] * EDGE_CHUNK
+        + list(range(1000, 1000 + 3 * EDGE_CHUNK, 3))
+        + rng.integers(-2**31, 2**31 - 1, EDGE_CHUNK).tolist()
+        + rng.integers(0, 4, 100).tolist())
 
 
 @pytest.fixture(scope="module")
@@ -22,6 +34,19 @@ def seq(spark):
     df = sequences_df(spark, N_ROWS, seed=42, partitions=4).cache()
     df.count()
     return df
+
+
+@pytest.fixture(scope="module")
+def edge(spark):
+    """Block-boundary documents at chunk_size=EDGE_CHUNK: empty, exactly
+    one block, one token over, and a multi-codec multi-block document."""
+    rows = [("e_empty", []), ("e_exact", list(range(EDGE_CHUNK))),
+            ("e_plus1", list(range(EDGE_CHUNK + 1))),
+            ("e_mixed", _mixed_codec_doc())]
+    df = spark.createDataFrame(
+        [(d, t, len(t), "web") for d, t in rows],
+        "doc_id string, tokens array<int>, n_tok int, source string")
+    return df.cache()
 
 
 def test_generator_shape_and_determinism(spark, seq):
@@ -67,14 +92,18 @@ def test_roundtrip_with_small_byte_bounded_batches(spark, seq):
         spark.conf.set(key, old)
 
 
-@pytest.mark.parametrize("batch_size", [1, 7, 100, 10000])
-def test_roundtrip_across_arrow_batch_sizes(spark, seq, batch_size):
+@pytest.mark.parametrize("batch_size", [1, 7, 100, 8192, 10000])
+def test_roundtrip_across_arrow_batch_sizes(spark, seq, edge, batch_size):
+    """Multi-block documents and block-boundary edge documents round-trip
+    whatever the Arrow batch boundaries."""
     old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(batch_size))
     try:
-        encoded = enc.encode_tokens(seq, chunk_size=256)
-        res = dec.verify_roundtrip(seq, dec.decode_tokens(encoded)).first()
-        assert res["n_mismatch"] == 0 and res["n_joined"] == N_ROWS
+        for src in (seq, edge):
+            encoded = enc.encode_tokens(src, chunk_size=EDGE_CHUNK)
+            res = dec.verify_roundtrip(src, dec.decode_tokens(encoded)).first()
+            assert res["n_mismatch"] == 0
+            assert res["n_joined"] == res["n_source"] == src.count()
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
 
@@ -89,78 +118,119 @@ def test_roundtrip_through_parquet(spark, seq, tmp_path):
 
 
 def test_composed_decode_is_single_execution(spark, seq):
-    """decode_tokens over a composed (non-scan, un-cached) encode pipeline
-    must persist its input so encode runs ONCE, not once per branch."""
+    """decode_tokens over a composed encode pipeline is one chain of two
+    maps: encode runs once, nothing is persisted, nothing shuffled."""
     encoded = enc.encode_tokens(seq, chunk_size=512)
     out = dec.decode_tokens(encoded)
     plan = out._jdf.queryExecution().executedPlan().toString()
-    # both branches read the persisted relation instead of replaying encode
-    assert "InMemoryTableScan" in plan
-    # the encode mapper chain must not appear as a live (non-cached) node:
-    # executedPlan prints cached subtrees only inside InMemoryRelation
+    assert "Exchange" not in plan
+    assert plan.count("InMemoryRelation") == 1  # the cached source only
+    assert plan.count("MapInArrow") == 2
     res = dec.verify_roundtrip(seq, out).first()
     assert res["n_mismatch"] == 0 and res["n_joined"] == N_ROWS
 
 
 def test_scan_input_decode_skips_materialization(spark, seq, tmp_path):
-    """Parquet-scan inputs re-scan for free: no persist, and the n_chunks
-    filters push into the scan."""
+    """Parquet-scan inputs decode as one map over the scan: no persist,
+    no exchange."""
     out_dir = str(tmp_path / "enc_scan")
     enc.encode_tokens(seq, chunk_size=512).write.parquet(out_dir)
     encoded = spark.read.parquet(out_dir)
     out = dec.decode_tokens(encoded)
     plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "InMemoryTableScan" not in plan
-    assert "PushedFilters" in plan or "n_chunks" in plan
+    assert "InMemoryTableScan" not in plan and "Exchange" not in plan
     res = dec.verify_roundtrip(seq, out).first()
     assert res["n_mismatch"] == 0 and res["n_joined"] == N_ROWS
 
 
+def test_long_document_decode_plan_is_one_map(spark, tmp_path):
+    """A Zipfian long-document table (most documents span many blocks)
+    decodes with no Exchange and no InMemoryRelation in its plan, and its
+    checksum matches the source."""
+    rng = np.random.default_rng(11)
+    vocab = rng.choice(2**31, 5000, replace=False).astype(np.int64)
+    rows = []
+    for i, n in enumerate(rng.integers(100, 3000, 24)):
+        ranks = np.minimum(rng.zipf(1.2, n), vocab.size) - 1
+        rows.append((f"z{i:03d}", vocab[ranks].tolist(), int(n), "web"))
+    src = spark.createDataFrame(
+        rows, "doc_id string, tokens array<int>, n_tok int, source string")
+    out_dir = str(tmp_path / "enc_long")
+    enc.write_encoded(enc.encode_tokens(src, chunk_size=256), out_dir)
+    encoded = spark.read.parquet(out_dir)
+    assert encoded.filter(F.col("n_chunks") > 1).count() > 20
+    decoded = dec.decode_tokens(encoded)
+    plan = decoded._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan and "InMemoryRelation" not in plan
+    res = dec.verify_roundtrip(src, decoded, method="checksum").first()
+    assert res["n_mismatch"] == 0 and res["n_decoded"] == 24
+
+
+def test_lost_block_fails_loudly(spark, seq, tmp_path):
+    """A multi-block row that lost one blob in storage must fail the
+    decode instead of returning a shorter document."""
+    import glob
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    out_dir = str(tmp_path / "enc_lost")
+    enc.write_encoded(enc.encode_tokens(seq, chunk_size=256).coalesce(1),
+                      out_dir)
+    (path,) = glob.glob(out_dir + "/*.parquet")
+    t = pq.read_table(path)
+    blocks = t.column("block").to_pylist()
+    victim = next(i for i, b in enumerate(blocks) if len(b) > 1)
+    blocks[victim] = blocks[victim][:-1]
+    t = t.set_column(t.schema.get_field_index("block"), "block",
+                     pa.array(blocks, type=t.schema.field("block").type))
+    bad_dir = tmp_path / "enc_lost_bad"
+    bad_dir.mkdir()
+    pq.write_table(t, str(bad_dir / "part-0.parquet"))
+    with pytest.raises(Exception, match="block count does not match"):
+        dec.decode_tokens(spark.read.parquet(str(bad_dir))).collect()
+
+
 def test_split_offsets_edges():
-    """Mapper-side split: offsets refinement must mirror split_skew exactly
+    """Mapper-side split: block offsets over an untouched values buffer
     (empty rows, exact multiples, 1-token rows, long tails)."""
     offsets = np.array([0, 0, 5, 5, 21, 22, 1046], dtype=np.int64)
-    new_off, row_rep, chunk_idx, n_chunks = enc._split_offsets(offsets, 8)
+    new_off, n_chunks = enc._split_offsets(offsets, 8)
     lens = np.diff(offsets)
     exp_chunks = [1, 1, 1, 2, 1, 128]
-    assert list(np.bincount(row_rep, minlength=6)) == exp_chunks
+    assert list(n_chunks) == exp_chunks
     assert new_off[0] == 0 and new_off[-1] == 1046
     out_lens = np.diff(new_off)
     assert out_lens.max() <= 8 and (out_lens >= 0).all()
-    # per-parent reassembly
+    # each document's blocks are adjacent and add up to the document
+    first = np.concatenate(([0], np.cumsum(n_chunks)))
     for i in range(6):
-        assert out_lens[row_rep == i].sum() == lens[i]
-    # chunk_idx sequential per parent, n_chunks constant per parent
-    for i in range(6):
-        ci = chunk_idx[row_rep == i]
-        assert list(ci) == list(range(exp_chunks[i]))
-        assert set(n_chunks[row_rep == i]) == {exp_chunks[i]}
+        assert out_lens[first[i]:first[i + 1]].sum() == lens[i]
+        assert new_off[first[i]] == offsets[i]
 
 
-def test_mapper_split_equals_jvm_split(spark, seq):
-    """Both split placements must produce identical encoded chunk sets."""
-    a = enc.encode_tokens(seq, chunk_size=512, mapper_split=True)
-    b = enc.encode_tokens(seq, chunk_size=512, mapper_split=False)
-    cols = ["doc_id", "chunk_idx", "n_chunks", "codec"]
-    ha = a.select(*cols, F.xxhash64("block").alias("h"))
-    hb = b.select(*cols, F.xxhash64("block").alias("h"))
-    assert ha.exceptAll(hb).count() == 0
-    assert hb.exceptAll(ha).count() == 0
+def test_skew_split_chunks_longtail(spark, seq, edge):
+    """Every blob obeys the size cap, each row holds n_chunks blobs that
+    add up to the document, long documents do split, and the mixed
+    document's blocks use different codecs."""
+    from parquet_playground_rs_spark.functions import kernels
 
-
-def test_skew_split_chunks_longtail(spark, seq):
-    chunked = enc.split_skew(seq, chunk_size=512)
-    # every chunk obeys the size cap
-    assert chunked.filter(F.size("tokens") > 512).count() == 0
-    # chunk sizes reassemble to the original n_tok
-    sizes = (
-        chunked.groupBy("doc_id").agg(F.sum(F.size("tokens")).alias("s"))
-        .join(seq.select("doc_id", "n_tok"), "doc_id")
-        .filter(F.col("s") != F.col("n_tok"))
-    )
-    assert sizes.count() == 0
-    # a long doc actually split
-    assert chunked.filter(F.col("n_chunks") > 1).count() > 0
+    rows = enc.encode_tokens(seq.unionByName(edge), chunk_size=EDGE_CHUNK) \
+        .select("doc_id", "n_chunks", "block", "meta.n_tok").collect()
+    want = {r["doc_id"]: r["n_tok"]
+            for r in seq.unionByName(edge).collect()}
+    assert {r["doc_id"] for r in rows} == set(want)
+    for r in rows:
+        sizes = [kernels.decode(b).size for b in r["block"]]
+        assert len(sizes) == r["n_chunks"] >= 1
+        assert max(sizes) <= EDGE_CHUNK
+        assert sum(sizes) == r["n_tok"] == want[r["doc_id"]]
+    assert sum(r["n_chunks"] > 1 for r in rows) > 1
+    by_id = {r["doc_id"]: r for r in rows}
+    assert [by_id[d]["n_chunks"] for d in ("e_empty", "e_exact", "e_plus1")] \
+        == [1, 1, 2]
+    mixed = by_id["e_mixed"]["block"]
+    assert len(mixed) == 4 and len({b[0] for b in mixed}) >= 3
 
 
 def test_compression_beats_plain(spark, seq):
@@ -243,12 +313,11 @@ def test_checksum_verify_matches_and_catches_corruption(spark, seq):
 def test_rowwise_decoder_matches_columnar(spark, seq):
     """S5/A6 contrast path: identical output, different execution shape."""
     encoded = enc.encode_tokens(seq.limit(80), chunk_size=256).cache()
-    key = ["doc_id", "chunk_idx"]
-    a = {tuple(r[k] for k in key): r["tokens"]
-         for r in dec.decode_blocks(encoded).collect()}
-    b = {tuple(r[k] for k in key): r["tokens"]
+    a = {r["doc_id"]: r["tokens"]
+         for r in dec.decode_tokens(encoded).collect()}
+    b = {r["doc_id"]: r["tokens"]
          for r in dec.decode_blocks_rowwise(encoded).collect()}
-    assert a == b and len(a) >= 80
+    assert a == b and len(a) == 80
     encoded.unpersist()
 
 
@@ -280,19 +349,18 @@ def test_checksum_verify_empty_inputs(spark):
 
 
 def test_decode_tokens_release_cache(spark):
-    """r3: the cache decode_tokens auto-creates for a composed pipeline is
-    releasable; no cached blocks leak once the caller is done."""
+    """decode_tokens persists nothing, even over a composed pipeline, so
+    no cached blocks can leak; release_decode_cache is a no-op."""
     from parquet_playground_rs_spark.sources.generator import sequences_df
 
     seq2 = sequences_df(spark, 50, seed=7, partitions=2)
-    decoded = dec.decode_tokens(enc.encode_tokens(seq2, chunk_size=64))
-    assert decoded.count() == 50
     jsc = spark.sparkContext._jsc.sc()
     before = jsc.getPersistentRDDs().size()
-    assert dec.release_decode_cache(decoded) is True
-    assert jsc.getPersistentRDDs().size() < before
-    assert dec.release_decode_cache(decoded) is False  # idempotent
-    # a cheap-rescan input (parquet scan) creates nothing to release
+    decoded = dec.decode_tokens(enc.encode_tokens(seq2, chunk_size=64))
+    assert decoded.count() == 50
+    assert jsc.getPersistentRDDs().size() == before
+    assert dec.release_decode_cache(decoded) is False
+    # nor over a parquet scan
     import tempfile
     with tempfile.TemporaryDirectory() as d:
         enc.write_encoded(enc.encode_tokens(seq2, chunk_size=64), d)
@@ -328,9 +396,10 @@ def test_statistics_granularity_modes(spark, tmp_path):
 
     from parquet_playground_rs_spark.sources.generator import sequences_df
 
-    # enough rows that the default writer splits data pages (page row
-    # limit 20k), so chunk mode's page coalescing is observable
-    seq2 = sequences_df(spark, 3000, seed=3, partitions=1).cache()
+    # enough rows that the default writer splits the ~1.7 MB block column
+    # into several 1 MiB data pages, so chunk mode's page coalescing is
+    # observable
+    seq2 = sequences_df(spark, 6000, seed=3, partitions=1).cache()
     encoded = enc.encode_tokens(seq2, chunk_size=512)
 
     def footer(path):
@@ -364,20 +433,6 @@ def test_statistics_granularity_modes(spark, tmp_path):
     seq2.unpersist()
 
 
-def test_release_all_decode_caches_after_composition(spark):
-    """Review r3: a derived frame loses the per-DataFrame persist handle;
-    the process-wide sweep must still release the cache."""
-    from parquet_playground_rs_spark.sources.generator import sequences_df
-
-    seq3 = sequences_df(spark, 40, seed=9, partitions=2)
-    composed = dec.decode_tokens(enc.encode_tokens(seq3, chunk_size=64)) \
-        .filter(F.col("n_tok") >= 0)
-    assert composed.count() == 40
-    assert dec.release_decode_cache(composed) is False  # handle lost
-    assert dec.release_all_decode_caches() >= 1
-    assert dec.release_all_decode_caches() == 0
-
-
 def test_bucketed_tables_join_without_exchange(spark, seq, tmp_path):
     """r3: co-located joins — encoded table and source bucketed by doc_id
     into the same bucket count must join with ZERO exchange and zero
@@ -407,33 +462,34 @@ def test_bucketed_tables_join_without_exchange(spark, seq, tmp_path):
 
 
 def test_fused_verify_matches_and_catches_corruption(spark, seq):
-    """r3: the reassembly-free per-chunk verify (both sides hash the same
-    chunk grid JVM-side, no join, no multi-chunk groupBy) agrees with the
-    exact join verify, detects token corruption, and requires the
-    matching chunk grid."""
+    """The checksum verify over decode_tokens needs no join and no
+    reassembly: it agrees with the exact join verify, detects token
+    corruption and row-count drift, and is vacuously correct on empty
+    inputs."""
     encoded = enc.encode_tokens(seq, chunk_size=512).cache()
     try:
-        ok = dec.verify_encoded(seq, encoded, chunk_size=512).first()
+        decoded = dec.decode_tokens(encoded)
+        ok = dec.verify_roundtrip(seq, decoded, method="checksum").first()
         assert ok["n_mismatch"] == 0
-        assert ok["n_source"] == ok["n_decoded"] == ok["n_joined"] > N_ROWS
+        assert ok["n_source"] == ok["n_decoded"] == ok["n_joined"] == N_ROWS
+        exact = dec.verify_roundtrip(seq, decoded).first()
+        assert exact["n_mismatch"] == 0 and exact["n_joined"] == N_ROWS
         # corruption: swap one document's tokens for another's
         bad_seq = seq.withColumn(
             "tokens",
             F.when(F.col("doc_id") == seq.first()["doc_id"],
                    F.array(F.lit(999))).otherwise(F.col("tokens")))
-        assert dec.verify_encoded(bad_seq, encoded, chunk_size=512) \
-            .first()["n_mismatch"] == -1
-        # wrong chunk grid is a mismatch, not a silent pass
-        assert dec.verify_encoded(seq, encoded, chunk_size=256) \
+        assert dec.verify_roundtrip(bad_seq, decoded, method="checksum") \
             .first()["n_mismatch"] == -1
         # row-count drift detected
-        assert dec.verify_encoded(seq.limit(100), encoded, chunk_size=512) \
+        assert dec.verify_roundtrip(seq.limit(100), decoded,
+                                    method="checksum") \
             .first()["n_mismatch"] == -1
     finally:
         encoded.unpersist()
     # empty inputs are vacuously correct
     empty = spark.createDataFrame(
         [], "doc_id string, tokens array<int>, n_tok int, source string")
-    empty_enc = enc.encode_tokens(empty, chunk_size=512)
-    r = dec.verify_encoded(empty, empty_enc, chunk_size=512).first()
+    empty_dec = dec.decode_tokens(enc.encode_tokens(empty, chunk_size=512))
+    r = dec.verify_roundtrip(empty, empty_dec, method="checksum").first()
     assert r["n_mismatch"] == 0 and r["n_source"] == 0

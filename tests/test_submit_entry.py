@@ -44,7 +44,7 @@ def test_submit_entry_encode_verify_and_resume(spark, seq_input, tmp_path,
     ])
     assert summary["processed_buckets"] == 4  # one per input file
     assert summary["resumed_buckets"] == 0
-    assert summary["n_rows"] >= 400  # chunk rows (chunk_size splits docs)
+    assert summary["n_rows"] == 400  # one row per document
     assert summary["verify"]["n_mismatch"] == 0
     assert summary["verify"]["n_joined"] == 400
 
@@ -68,5 +68,5 @@ def test_submit_entry_hash_scope(spark, seq_input, tmp_path, capsys,
         "--verify", "chunks",
     ])
     assert summary["verify"]["n_mismatch"] == 0
-    # chunks mode verifies per-chunk rows, one per encoded chunk
+    # one encoded row per document
     assert summary["verify"]["n_source"] == summary["n_rows"]
