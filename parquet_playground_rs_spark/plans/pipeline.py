@@ -1,55 +1,43 @@
-"""End-to-end resumable encode pipeline with per-bucket lineage manifests.
+"""Resumable encode pipeline with file-scope commits and lineage manifests.
 
 The reference is single-shot and non-resumable (one process, one in-memory
-batch, /root/reference/src/bin/js2pq/main.rs:46-131). The north rule demands
-restartable runs with per-partition lineage. Design:
+batch). This pipeline restarts where it stopped and records per-bucket
+lineage. Design:
 
-- Work is keyed by a deterministic **bucket** = pmod(xxhash64(source,
-  doc_id), n_buckets) — a whole document, all of its blocks, lands in
-  one bucket. Buckets, not Spark partition ids, are the
-  resume unit: they're a pure function of the data, so a restart at any
-  parallelism reproduces the same buckets.
-- Each completed bucket writes its encoded rows under
-  ``out/data/bucket=<b>/`` (idempotent overwrite of that directory only)
-  and appends one manifest JSON line under ``out/manifest/`` with lineage:
-  row count, input/output bytes, per-codec histogram, checksum.
-- Resume = read manifest, anti-join pending buckets, process only those.
-- Commit granularity (G > 1 groups) has three input strategies, chosen
-  by MEASUREMENT at the 8M-row rehearsal (BENCH/BASELINE.md round 5):
-  * **file-scope commits** (`run_encode_job_files`) — the resume unit
-    is a group of input files; each commit group reads ONLY its own
-    files, so total I/O equals the plain encode's and the remaining
-    cost is a small fixed amount per commit (job scheduling + the
-    commit-dir read-back). This is the 100-TB default and by far the
-    cheapest strategy (measured ~1.3-1.5x at the 8M rehearsal where
-    commits land every ~2 s of work; the per-commit cost is fixed, so
-    production-sized runs amortize it to noise). Round 6: each group's
-    manifest is ONE atomic file (tmp+rename) and orphan commit dirs
-    are cleaned on restart, so resumes stay idempotent under
-    regrouping; the catalog fingerprint covers file sizes.
-  * **re-scan** (default here) — each group re-scans the column-pruned
-    source and filters to its hash buckets: 2.35x plain at 8M rows.
-  * **staging** (`stage_input=True`) — materialize the bucketed work
-    list once under ``out/staging/data/bucket=<b>/``; group reads
-    partition-prune. Wins only when re-deriving the source is
-    expensive (remote store, JSON decode): the raw-token
-    materialization itself costs ~6x the encode at 8M rows. The
-    ``_STAGED.json`` marker makes staging resumable; it is deleted
-    after the last bucket commits.
+- The resume unit is a **bucket**: a fixed group of INPUT FILES, assigned
+  by name-sorted round-robin over the input catalog, so a restart at any
+  parallelism reproduces the same buckets. The catalog is versioned
+  (``out/catalog/``): an append adds only new files, in fresh buckets.
+- Pending buckets are processed in **commit groups**. A group scans ONLY
+  its own files, encodes them and writes ``out/data/commit=<g>/`` — total
+  I/O equals a plain encode's plus a fixed per-group cost (job scheduling
+  and a read-back of the committed dir for the manifest stats).
+- Each group commits ONE manifest file ``out/manifest/group-<g>.json``
+  (tmp-write + rename) holding a row per bucket: row count, input/output
+  bytes, per-codec histogram, block checksum and the input file list.
+  Every row carries ``group_size``, so a partial file reads as
+  uncommitted.
+- Manifests and the catalog are KB-sized, so they are listed and parsed
+  in plain driver code through the Hadoop FileSystem API (file://,
+  hdfs://, s3a:// alike) — no Spark job runs on the control plane.
+- Resume = the buckets of valid manifests are done; a ``commit=`` dir
+  without a valid manifest is deleted and its buckets re-encoded.
+- Compaction merges small groups into one whose manifest ``supersedes``
+  them; reads are manifest-driven, so one rename flips them.
 
-At cluster scale each "bucket commit" is one dynamic-partition-overwrite
-write; buckets are the engine's unit of progress and audit, mirroring what
-Iceberg snapshots would give (the sandbox has no Iceberg jars — the layout
-keeps the same semantics; see SURVEY.md §7 stage 4).
+The layout mirrors what Iceberg snapshots would give (no Iceberg jars are
+needed; see SURVEY.md §7 stage 4).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import threading
 import time
+from concurrent.futures import ThreadPoolExecutor
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import decode as dec
@@ -62,12 +50,6 @@ MANIFEST_SCHEMA = (
     "group_size int, supersedes string"
 )
 _MANIFEST_COLS = [p.split(" ")[0] for p in MANIFEST_SCHEMA.split(", ")]
-
-
-def bucket_col(n_buckets: int):
-    return F.pmod(
-        F.xxhash64(F.col("source"), F.col("doc_id")), F.lit(n_buckets),
-    ).cast("int")
 
 
 def block_crc():
@@ -90,101 +72,73 @@ def _hadoop_fs(spark: SparkSession, path: str):
     return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath, jvm
 
 
-def _read_manifest_flagged(spark: SparkSession, out: str) -> DataFrame | None:
-    """Manifest rows tagged with per-FILE validity (None if no manifest
-    dir yet). A group-<g>.json is valid iff every line parses (no
-    corrupt-record, bucket present), all lines agree on group_size, and
-    the line count equals it; legacy bucket-<b>.json rows (no
-    group_size) validate by parse alone — they are single atomic rows."""
-    mdir = _manifest_dir(out)
-    fs, jpath, _ = _hadoop_fs(spark, mdir)
-    if not fs.exists(jpath):
+def _parse_group_manifest(body: str) -> list[dict] | None:
+    """The rows of one group manifest, or None when the file is partial
+    or corrupt: every line must parse as an object with a ``bucket``,
+    and every row must carry ``group_size`` equal to the row count. A
+    crash mid-rename on a copy+delete store (S3A) leaves a prefix of the
+    file — a short count or a torn last line — so ALL of its buckets
+    read as pending instead of some reading committed."""
+    try:
+        rows = [json.loads(ln) for ln in body.splitlines() if ln.strip()]
+    except ValueError:
         return None
-    raw = (
-        spark.read.schema(MANIFEST_SCHEMA + ", _corrupt string")
-        .option("columnNameOfCorruptRecord", "_corrupt")
-        .option("pathGlobFilter", "*.json")
-        .json(mdir)
-        .withColumn("_mf", F.input_file_name())
-    )
-    w = Window.partitionBy("_mf")
-    bad = (F.col("_corrupt").isNotNull()
-           | F.col("bucket").isNull()).cast("int")
-    flagged = (
-        raw.withColumn("_n", F.count(F.lit(1)).over(w))
-        .withColumn("_nbad", F.sum(bad).over(w))
-        .withColumn("_ng", F.count("group_size").over(w))
-        .withColumn("_gmin", F.min("group_size").over(w))
-        .withColumn("_gmax", F.max("group_size").over(w))
-    )
-    valid = (F.col("_nbad") == 0) & (
-        (F.col("_ng") == 0)
-        | ((F.col("_ng") == F.col("_n"))
-           & (F.col("_gmin") == F.col("_gmax"))
-           & (F.col("_gmax") == F.col("_n")))
-    )
-    return flagged.withColumn("_file_valid", valid)
+    if not all(isinstance(r, dict) and r.get("bucket") is not None
+               for r in rows):
+        return None
+    if {r.get("group_size") for r in rows} != {len(rows)}:
+        return None
+    return rows
+
+
+def _read_group_manifests(spark: SparkSession, out: str
+                          ) -> tuple[dict[int, list[dict]], set[int]]:
+    """Every ``group-<g>.json`` under ``out/manifest/``, read on the
+    driver: ``(valid, invalid)`` — {group id: rows} of the valid files
+    and the ids of the partial/corrupt ones (`_parse_group_manifest`).
+    Leftover ``.json.tmp`` files are not manifests and are ignored."""
+    fs, jpath, _ = _hadoop_fs(spark, _manifest_dir(out))
+    valid: dict[int, list[dict]] = {}
+    invalid: set[int] = set()
+    if not fs.exists(jpath):
+        return valid, invalid
+    for st in fs.listStatus(jpath):
+        name = st.getPath().getName()
+        if not (name.startswith("group-") and name.endswith(".json")):
+            continue
+        try:
+            gid = int(name[6:-5])
+        except ValueError:
+            continue
+        body = _read_small_file(spark, st.getPath().toString())
+        if body is None:
+            continue  # collected between the listing and the read
+        rows = _parse_group_manifest(body)
+        if rows is None:
+            invalid.add(gid)
+        else:
+            valid[gid] = rows
+    return valid, invalid
 
 
 def read_manifest(spark: SparkSession, out: str) -> DataFrame:
-    """Manifest rows from VALID manifest files only.
-
-    Group manifests are self-validating (round-6 ADVICE high, hardened
-    round 7): every row carries group_size = the number of rows the
-    committing writer put in the file, so a PARTIAL group file — the
-    S3A crash-mid-rename window, where rename = copy+delete can leave
-    a prefix of the file — fails the count (or has a torn, unparseable
-    last line) and ALL of its buckets read as pending instead of some
-    reading committed. `_clean_stale_commit_dirs` applies the same
-    validity rule, deleting both the partial file and its commit dir."""
-    flagged = _read_manifest_flagged(spark, out)
-    if flagged is None:
-        return spark.createDataFrame([], MANIFEST_SCHEMA)
-    return flagged.filter(F.col("_file_valid")).select(*_MANIFEST_COLS)
+    """Manifest rows from VALID group manifests only, as a DataFrame
+    built on the driver (no Spark job reads the manifest files)."""
+    valid, _ = _read_group_manifests(spark, out)
+    rows = [tuple(r.get(c) for c in _MANIFEST_COLS)
+            for g in sorted(valid) for r in valid[g]]
+    return spark.createDataFrame(rows, MANIFEST_SCHEMA)
 
 
 def completed_buckets(spark: SparkSession, out: str) -> set[int]:
-    m = read_manifest(spark, out)
-    return {r["bucket"] for r in m.filter(F.col("status") == "done").collect()}
-
-
-def _write_manifest_row(spark: SparkSession, out: str, row: dict) -> None:
-    """Commit one bucket's manifest line: write tmp, then rename.
-
-    Goes through the Hadoop FileSystem API so the identical code runs on
-    file://, HDFS (atomic rename), and S3A (rename = copy+delete, but the
-    manifest file is tiny and the bucket data write already succeeded —
-    a crash between data and manifest just re-runs an idempotent bucket).
-    """
-    mdir = _manifest_dir(out)
-    fs, mpath, jvm = _hadoop_fs(spark, mdir)
-    try:
-        fs.setWriteChecksum(False)  # no .crc sidecars on local FS
-    except Exception:
-        pass
-    fs.mkdirs(mpath)
-    Path = jvm.org.apache.hadoop.fs.Path
-    final = Path(mdir, f"bucket-{row['bucket']:05d}.json")
-    tmp = Path(mdir, f"bucket-{row['bucket']:05d}.json.tmp")
-    stream = fs.create(tmp, True)
-    try:
-        stream.write(bytearray((json.dumps(row) + "\n").encode("utf-8")))
-    finally:
-        stream.close()
-    if fs.exists(final):
-        fs.delete(final, False)
-    if not fs.rename(tmp, final):
-        raise IOError(f"manifest rename failed for bucket {row['bucket']}")
-
-
-def _staging_dirs(out: str) -> tuple[str, str, str]:
-    sdir = os.path.join(out, "staging")
-    return sdir, os.path.join(sdir, "data"), os.path.join(sdir, "_STAGED.json")
+    valid, _ = _read_group_manifests(spark, out)
+    return {int(r["bucket"]) for rows in valid.values() for r in rows
+            if r.get("status") == "done"}
 
 
 def _write_small_file(spark: SparkSession, path: str, payload: str) -> None:
-    """tmp-write + rename of one small control file (same FS protocol as
-    the manifest rows)."""
+    """tmp-write + rename of one small control file (a manifest, a
+    catalog version) through the Hadoop FileSystem API."""
     fs, jpath, jvm = _hadoop_fs(spark, path)
     try:
         fs.setWriteChecksum(False)
@@ -269,8 +223,6 @@ class _JobLock:
 
     def __init__(self, spark: SparkSession, out: str,
                  lease_sec: float = 60.0):
-        import threading
-
         self._spark = spark
         self._path = os.path.join(out, _LOCK_FILE)
         self._lease = float(lease_sec)
@@ -328,7 +280,6 @@ class _JobLock:
         fs.delete(claimed, False)
 
     def acquire(self) -> "_JobLock":
-        import threading
         import uuid
 
         self._token = uuid.uuid4().hex
@@ -439,244 +390,6 @@ class _JobLock:
                 "interleaved commits into this output dir")
 
 
-def drop_staging(spark: SparkSession, out: str) -> None:
-    sdir, _, _ = _staging_dirs(out)
-    fs, jpath, _ = _hadoop_fs(spark, sdir)
-    if fs.exists(jpath):
-        fs.delete(jpath, True)
-
-
-def _ensure_staged(spark: SparkSession, work: DataFrame, out: str,
-                   n_buckets: int, chunk_size: int,
-                   files_per_bucket: int) -> DataFrame:
-    """Write the bucketed work list ONCE under
-    out/staging/data/bucket=<b>/, or reuse a finished staging from a
-    previous (killed) run when its params match; returns a DataFrame over
-    the staged files whose scans PRUNE to the requested buckets.
-
-    The write rebalances on (bucket, salt) so each bucket directory gets
-    ~files_per_bucket files — bounded file counts (not tasks x dirs) while
-    keeping enough files per bucket that a small commit group's read still
-    parallelizes across the executor cores. The salt is data-derived
-    (xxhash64), never random: re-staging reproduces identical layout.
-    """
-    sdir, data_dir, marker = _staging_dirs(out)
-    params = {"n_buckets": n_buckets, "chunk_size": chunk_size}
-    existing = _read_small_file(spark, marker)
-    if existing is not None:
-        prev = json.loads(existing)
-        if {k: prev.get(k) for k in params} == params:
-            staged = spark.read.parquet(data_dir)
-            return staged.withColumn("bucket", F.col("bucket").cast("int"))
-        drop_staging(spark, out)  # params changed: stale staging is invalid
-    salt = F.pmod(F.xxhash64(F.col("doc_id"), F.lit(13)),
-                  F.lit(files_per_bucket))
-    # snappy, not the session's zstd: staging is write-once scratch that
-    # every commit group re-reads — cheap compression wins on both the
-    # write CPU and the read stability (32 concurrent zstd readers
-    # showed 5x variance; the same reasoning as bench.py's input cache)
-    (work.repartition(F.col("bucket"), salt)
-     .write.mode("overwrite").option("compression", "snappy")
-     .partitionBy("bucket").parquet(data_dir))
-    _write_small_file(spark, marker, json.dumps(
-        {**params, "files_per_bucket": files_per_bucket, "ts": time.time()}))
-    staged = spark.read.parquet(data_dir)
-    return staged.withColumn("bucket", F.col("bucket").cast("int"))
-
-
-def run_encode_job(
-    spark: SparkSession,
-    source_df: DataFrame,
-    out: str,
-    n_buckets: int = 8,
-    chunk_size: int = enc.DEFAULT_CHUNK,
-    buckets_per_commit: int | None = None,
-    fail_after_buckets: int | None = None,
-    statistics: str = "page",
-    concurrent_commits: int = 1,
-    cache_input: bool = False,
-    stage_input: bool = False,
-) -> dict:
-    """Encode `source_df` into `out`, resuming past completed buckets.
-
-    SINGLE WRITER assumed: this hash-bucket mode does not take the
-    `out/job.lock` lease (use `run_encode_job_files`, the 100-TB
-    default, for enforced single-writer semantics) — two concurrent
-    drivers on one `out` would interleave bucket overwrites
-    undetected. `concurrent_commits` threads WITHIN one call are fine:
-    they write disjoint bucket partitions.
-
-    `fail_after_buckets` injects a crash for the kill-and-resume test.
-    `statistics` is the E5 granularity mode (none/chunk/page) forwarded to
-    the parquet sink. `concurrent_commits` > 1 overlaps commit groups
-    from driver threads: the groups are independent idempotent writes of
-    DISJOINT (source, bucket) partitions (dynamic overwrite stages under
-    per-job dirs, manifests are per-bucket files), so overlapping them
-    hides the fixed per-commit costs (job scheduling, the manifest
-    aggregation, the write commit walk) that otherwise serialize —
-    commit granularity stops taxing wall-clock. Incompatible with
-    `fail_after_buckets` (the kill test needs deterministic ordering).
-
-    `stage_input=True` writes the bucketed work list ONCE under
-    out/staging partitioned by bucket, and every commit group reads only
-    its bucket dirs via partition pruning — G full source re-scans
-    become 1 scan + 1 write + a 1/G-pruned read per group. Staging is
-    itself resumable (the _STAGED.json marker) and removed after the
-    final bucket commits. Default OFF — measured at the 8M-row
-    rehearsal (BENCH/BASELINE.md round 5): for a LOCAL columnar source
-    the staging materialization (raw-token shuffle + parquet write,
-    109.8 s) costs ~6x the encode itself (18.8 s), so G column-pruned
-    re-scans (2.35x plain) beat it; at sf0.1 the ordering flips
-    (staging 1.07x vs re-scan 3.6x) because the staged frame is
-    page-cache-sized. Turn staging ON when the source is expensive to
-    re-derive (JSON/CSV decode, remote object store, upstream
-    transforms). When the resume unit can be the input FILE GROUP,
-    prefer `run_encode_job_files` below — it needs neither staging nor
-    re-scans and meets the <=1.3x commit-overhead bar.
-
-    `cache_input` persists the bucketed work frame (DISK_ONLY) so the
-    G commit groups read the cache instead of re-scanning the source —
-    the in-session alternative to `stage_input` (which it overrides when
-    explicitly enabled): the persist dies with the session, so a killed
-    run resumes onto G re-scans, while staged files survive the restart.
-    Returns summary stats for the run.
-    """
-    done = completed_buckets(spark, out)
-    pending = [b for b in range(n_buckets) if b not in done]
-    summary = {"resumed_buckets": len(done), "processed_buckets": 0,
-               "n_rows": 0, "input_bytes": 0, "output_bytes": 0}
-    if not pending:
-        return summary
-
-    work = source_df.select("doc_id", "source", "tokens") \
-        .withColumn("bucket", bucket_col(n_buckets))
-    # one pass per commit-group of buckets: each group is an independent,
-    # idempotent write whose manifest rows land only after success
-    group = buckets_per_commit or len(pending)
-    persisted_input = None
-    staged = False
-    if cache_input and group < len(pending):
-        from pyspark import StorageLevel
-
-        persisted_input = work.persist(StorageLevel.DISK_ONLY)
-        work = persisted_input
-    elif bool(stage_input) and group < len(pending):
-        # files per bucket dir sized so ONE commit group's read still
-        # fans out over every core: group buckets x files >= parallelism
-        fpb = max(1, -(-spark.sparkContext.defaultParallelism // group))
-        work = _ensure_staged(spark, work, out, n_buckets,
-                              chunk_size, files_per_bucket=fpb)
-        staged = True
-    groups = [pending[gi: gi + group] for gi in range(0, len(pending), group)]
-    try:
-        if concurrent_commits > 1 and len(groups) > 1:
-            if fail_after_buckets is not None:
-                raise ValueError(
-                    "fail_after_buckets needs deterministic group order; "
-                    "use concurrent_commits=1")
-            import threading
-            from concurrent.futures import ThreadPoolExecutor
-
-            lock = threading.Lock()
-            with ThreadPoolExecutor(max_workers=concurrent_commits) as ex:
-                futs = [ex.submit(_process_commit_group, spark, work,
-                                  batch, out, chunk_size, statistics,
-                                  summary, lock)
-                        for batch in groups]
-                for f in futs:
-                    f.result()  # propagate the first failure
-        else:
-            for batch in groups:
-                if fail_after_buckets is not None and \
-                        summary["processed_buckets"] >= fail_after_buckets:
-                    raise RuntimeError("injected failure for resume test")
-                _process_commit_group(spark, work, batch, out, chunk_size,
-                                      statistics, summary, None)
-    finally:
-        if persisted_input is not None:
-            persisted_input.unpersist()
-    if staged:
-        # every bucket is now committed: the staged work list has served
-        # its purpose (a crash before this point leaves it for the resume)
-        drop_staging(spark, out)
-    return summary
-
-
-def _process_commit_group(spark, work, batch_buckets, out, chunk_size,
-                          statistics, summary, lock) -> None:
-    t0 = time.time()
-    part = work.filter(F.col("bucket").isin(batch_buckets))
-    # rebalance on the partition columns BEFORE the partitioned write:
-    # without it every write task opens a file in every (source,
-    # bucket) dir it touches — tasks x dirs small files (measured
-    # 1274/group at bench scale, ~30 ms commit cost each). Hashing
-    # each combo to one task yields one file per dir per group; the
-    # price is one shuffle of the group's COMPRESSED blocks (~0.5x
-    # input bytes), the standard trade for dynamic-partitioned sinks.
-    encoded = (
-        _encode_with_bucket(part, chunk_size)
-        .repartition(F.col("source"), F.col("bucket"))
-        .persist()
-    )
-    try:
-        # ONE aggregation job for the whole manifest payload: the codec
-        # histogram rides as conditional sums over the (static, small)
-        # codec vocabulary instead of a second groupBy job per commit
-        from ..functions.kernels import CODEC_IDS
-
-        codec_names = sorted(CODEC_IDS)
-        stats = encoded.groupBy("bucket").agg(
-            F.count("*").alias("n_rows"),
-            F.count("*").alias("n_docs"),
-            F.sum("meta.input_bytes").alias("input_bytes"),
-            F.sum("meta.output_bytes").alias("output_bytes"),
-            block_crc().alias("block_crc"),
-            *[F.sum(F.when(F.col("codec") == c, 1).otherwise(0))
-              .alias(f"_codec_{c}") for c in codec_names],
-        )
-        # Iceberg-style two-level layout source=<v>/bucket=<k> (SURVEY §7
-        # stage 4): source gives partition pruning for consumers, bucket
-        # stays the idempotent resume/commit unit
-        enc.write_encoded(
-            encoded, os.path.join(out, "data"),
-            partition_by=["source", "bucket"],
-            statistics=statistics,
-            partitionOverwriteMode="dynamic",
-        )
-        wall = time.time() - t0
-        stat_rows = {r["bucket"]: r for r in stats.collect()}
-        hist_rows = {
-            b: {c: int(r[f"_codec_{c}"]) for c in codec_names
-                if int(r[f"_codec_{c}"])}
-            for b, r in stat_rows.items()
-        }
-    finally:
-        # released even when the write or collect fails: a failed commit
-        # group must not pin its cached blocks for the session lifetime
-        # (up to concurrent_commits leaked caches otherwise)
-        encoded.unpersist()
-    for b in batch_buckets:
-        r = stat_rows.get(b)
-        row = {
-            "bucket": b,
-            "status": "done",
-            "n_rows": int(r["n_rows"]) if r else 0,
-            "n_docs": int(r["n_docs"]) if r else 0,
-            "input_bytes": int(r["input_bytes"] or 0) if r else 0,
-            "output_bytes": int(r["output_bytes"] or 0) if r else 0,
-            "codec_hist": json.dumps(hist_rows.get(b, {})),
-            "block_crc": int(r["block_crc"] or 0) if r else 0,
-            "wall_sec": wall / len(batch_buckets),
-            "ts": time.time(),
-        }
-        _write_manifest_row(spark, out, row)
-        if lock is not None:
-            with lock:
-                _tally(summary, row)
-        else:
-            _tally(summary, row)
-
-
 def _tally(summary: dict, row: dict) -> None:
     summary["processed_buckets"] += 1
     summary["n_rows"] += row["n_rows"]
@@ -707,18 +420,13 @@ def _encode_with_bucket(docs_with_bucket: DataFrame,
 # File-scope commits: the resume unit is a group of INPUT FILES
 # ---------------------------------------------------------------------------
 #
-# Round-5 finding (BENCH/BASELINE.md): with data-hash buckets, commit
-# granularity must either re-scan the source per group (2.35x plain at 8M
-# rows) or materialize the raw tokens once (staging — measured
-# 8.2x: the encode runs at 165M tok/s, so ONE extra materialization of
-# its 12.4 GB input costs ~6x the encode itself). The design that meets
-# the <=1.3x bar keys the resume unit by INPUT FILE GROUP instead: each
-# commit group reads ONLY its own files (file-list pruning — no second
-# scan of anything), encodes them, and commits. This is also the
-# Iceberg-native shape — the table's file manifest IS the work catalog,
-# and it is how incremental encode jobs actually checkpoint at 100 TB.
-# The hash-bucket mode above remains for when data-defined buckets
-# matter (e.g. downstream bucket joins); its costs are documented.
+# Each commit group reads ONLY its own files (file-list pruning — no
+# second scan of anything), encodes them, and commits. The round-5
+# rehearsal (BENCH/BASELINE.md) measured the alternative, data-hash
+# buckets, at 2.35x plain (a source re-scan per group) to 8.2x (a one-off
+# materialization of the raw tokens); keying by file group meets the
+# <=1.3x bar. The table's file catalog IS the work catalog — the
+# Iceberg-native shape of incremental checkpointing.
 
 def plan_file_buckets(spark: SparkSession, input_path: str,
                       n_buckets: int) -> dict[int, list[str]]:
@@ -770,18 +478,7 @@ def plan_file_catalog(spark: SparkSession, input_path: str,
     return {b: files[b::n_buckets] for b in range(n_buckets)}, sizes
 
 
-# Rebalance each commit group's ENCODED blocks on source before the
-# partitioned write: one file per source dir per commit instead of one
-# per (task, source) pair. Default OFF — measured at the 8M rehearsal
-# (BENCH/BASELINE.md round 5): the shuffle+20-reducer write costs ~60 s
-# against a 21 s encode (3.9x the no-shuffle write), i.e. the file-count
-# control is NOT worth a shuffle of the encoded blocks at this scale.
-# Turn on when downstream consumers need few-files-per-source more than
-# the writer needs wall-clock (e.g. object-store listing pressure).
-FILE_COMMIT_REPARTITION = False
-
-# Target bytes per scan task inside a file-scope commit group; None
-# leaves Spark's bytes-per-core split (fine-grained). Swept at the
+# Target bytes per scan task inside a file-scope commit group. Swept at the
 # 8M-row rehearsal — see BENCH/BASELINE.md round 5. Round 9: this is
 # the CAP; the effective per-run target is derived from the pending
 # bytes so the concurrently-committing groups still produce at least
@@ -789,7 +486,7 @@ FILE_COMMIT_REPARTITION = False
 # 8 groups x 3 fat tasks = 24 tasks on 32 cores at bench scale
 # (measured 9.2 -> 7.7 s), while at rehearsal scale the derived value
 # hits the cap and the swept behavior is unchanged.
-FILE_COMMIT_TARGET_PARTITION_BYTES: int | None = 32 << 20
+FILE_COMMIT_TARGET_PARTITION_BYTES = 32 << 20
 
 # Floor for the derived scan-task target: below this, python-worker
 # round-trip overhead dominates (the round-5 "213 tiny mapInArrow
@@ -797,14 +494,12 @@ FILE_COMMIT_TARGET_PARTITION_BYTES: int | None = 32 << 20
 FILE_COMMIT_MIN_PARTITION_BYTES = 4 << 20
 
 
-def _effective_scan_target(spark, total_pending_bytes: int) -> int | None:
+def _effective_scan_target(spark, total_pending_bytes: int) -> int:
     """Scan-task byte target for this run's commit groups: enough tasks
     that the groups IN FLIGHT saturate the executor about twice over
     (tail-filling), floored against sliver tasks and capped at the
     rehearsal-swept constant. Pure arithmetic over the catalog's file
     sizes — no extra driver RPCs."""
-    if not FILE_COMMIT_TARGET_PARTITION_BYTES:
-        return None
     cores = max(1, spark.sparkContext.defaultParallelism)
     derived = -(-total_pending_bytes // (2 * cores))
     return max(FILE_COMMIT_MIN_PARTITION_BYTES,
@@ -850,7 +545,7 @@ def _catalog_dir(out: str) -> str:
 def _version_buckets(ver: dict) -> dict[int, list[str]]:
     """Re-derive one catalog version's file->bucket plan from its stored
     (sorted) file list: name-ordered round-robin over the version's own
-    bucket-id range — a pure function of the version record."""
+    range of bucket ids — a pure function of the version record."""
     files = [f for f, _ in ver["files"]]
     nb = min(int(ver["n_buckets"]), max(1, len(files)))
     base = int(ver["bucket_base"])
@@ -983,13 +678,10 @@ def _write_manifest_group(spark: SparkSession, out: str,
     manifest row left a half-manifested commit dir that a regrouped
     resume would never clean, double-counting its buckets).
 
-    Round 7 (round-6 ADVICE low): every row carries
-    ``group_size = len(rows)``, making the file SELF-VALIDATING — on a
-    store whose rename is copy+delete (S3A) a crash mid-rename can
-    leave a partial file, and a partial that still parses would
-    otherwise read as a committed group missing some buckets. Readers
-    (`read_manifest`, `_clean_stale_commit_dirs`) count the rows
-    against group_size and treat any shortfall as UNCOMMITTED.
+    Every row carries ``group_size = len(rows)``, making the file
+    SELF-VALIDATING: on a store whose rename is copy+delete (S3A) a
+    crash mid-rename can leave a partial file, which
+    `_parse_group_manifest` reads as UNCOMMITTED.
 
     `supersedes` (compaction) stamps every row with the JSON list of
     group ids this group REPLACES: the single rename that publishes
@@ -998,49 +690,12 @@ def _write_manifest_group(spark: SparkSession, out: str,
     the old (manifest, dir) pairs garbage to be collected later — the
     multi-file swap needs no journal because the supersedes list IS
     the roll-forward record."""
-    mdir = _manifest_dir(out)
-    fs, mpath, jvm = _hadoop_fs(spark, mdir)
-    try:
-        fs.setWriteChecksum(False)
-    except Exception:
-        pass
-    fs.mkdirs(mpath)
-    Path = jvm.org.apache.hadoop.fs.Path
-    name = _manifest_group_name(group_id)
-    final = Path(mdir, name)
-    tmp = Path(mdir, name + ".tmp")
     extra = {"group_size": len(rows)}
     if supersedes:
         extra["supersedes"] = json.dumps(sorted(int(g) for g in supersedes))
-    payload = "".join(
-        json.dumps({**r, **extra}) + "\n" for r in rows)
-    stream = fs.create(tmp, True)
-    try:
-        stream.write(bytearray(payload.encode("utf-8")))
-    finally:
-        stream.close()
-    if fs.exists(final):
-        fs.delete(final, False)
-    if not fs.rename(tmp, final):
-        raise IOError(f"manifest rename failed for commit group {group_id}")
-
-
-def _valid_group_manifests(spark: SparkSession,
-                           out: str) -> dict[int, list[dict]]:
-    """{group_id: manifest rows} for every VALID ``group-<g>.json``
-    (validity per `_read_manifest_flagged`'s group_size rule; legacy
-    per-bucket ``bucket-*.json`` rows are not commit groups and are
-    excluded)."""
-    flagged = _read_manifest_flagged(spark, out)
-    if flagged is None:
-        return {}
-    groups: dict[int, list[dict]] = {}
-    for r in (flagged.filter(F.col("_file_valid"))
-              .select(*_MANIFEST_COLS, "_mf").collect()):
-        name = r["_mf"].rsplit("/", 1)[-1]
-        if name.startswith("group-") and name.endswith(".json"):
-            groups.setdefault(int(name[6:-5]), []).append(r.asDict())
-    return groups
+    path = os.path.join(_manifest_dir(out), _manifest_group_name(group_id))
+    _write_small_file(spark, path, "".join(
+        json.dumps({**r, **extra}) + "\n" for r in rows))
 
 
 def _live_group_ids(groups: dict[int, list[dict]]) -> set[int]:
@@ -1057,6 +712,15 @@ def _live_group_ids(groups: dict[int, list[dict]]) -> set[int]:
     return set(groups) - superseded
 
 
+def _published_ts(groups: dict[int, list[dict]], gid: int) -> float:
+    """When group `gid` was superseded: the newest ``ts`` among the rows
+    whose ``supersedes`` lists it (stamped at publish)."""
+    return max((float(r.get("ts") or 0.0)
+                for rows in groups.values() for r in rows
+                if gid in json.loads(r.get("supersedes") or "[]")),
+               default=0.0)
+
+
 def _max_allocated_id(spark: SparkSession, out: str,
                       versions: list[dict]) -> int:
     """Highest id ever allocated in `out`'s shared bucket/group id
@@ -1066,37 +730,28 @@ def _max_allocated_id(spark: SparkSession, out: str,
     ``1 + this`` — necessary because a commit group is NAMED by its
     first bucket, so a compacted group's id must never be re-issued to
     a future append bucket (the manifest/dir names would collide)."""
-    hi = max((max(_version_buckets(v)) for v in versions), default=-1)
-    mdir = _manifest_dir(out)
-    fs, jp, _ = _hadoop_fs(spark, mdir)
-    if fs.exists(jp):
-        for st in fs.listStatus(jp):
-            name = st.getPath().getName()
-            if name.startswith("group-") and name.endswith(".json"):
-                try:
-                    hi = max(hi, int(name[6:-5]))
-                except ValueError:
-                    pass
-    return hi
+    valid, invalid = _read_group_manifests(spark, out)
+    return max([*(max(_version_buckets(v)) for v in versions),
+                *valid, *invalid], default=-1)
 
 
 def _clean_stale_commit_dirs(spark: SparkSession, out: str,
-                             min_age_sec: float = 0.0) -> tuple[int, int]:
+                             min_age_sec: float = 0.0
+                             ) -> tuple[int, int, dict[int, list[dict]]]:
     """Delete any ``out/data/commit=<g>/`` dir whose group manifest file
-    is absent OR INVALID (partial/torn — see `_read_manifest_flagged`'s
-    group_size rule): its data write started (possibly finished) but the
-    group never fully committed, so every one of its buckets is still
-    pending and will be re-encoded — under a possibly DIFFERENT grouping
-    — into a fresh commit dir. An invalid manifest file is deleted along
-    with its dir (both halves of the failed commit go). Leaving the
-    orphan would double-count those buckets in read_encoded/verify. Runs
-    before any group processing on every (re)start; returns the number
-    of dirs removed.
+    is absent OR INVALID (partial/torn — see `_parse_group_manifest`):
+    its data write started (possibly finished) but the group never fully
+    committed, so every one of its buckets is still pending and will be
+    re-encoded — under a possibly DIFFERENT grouping — into a fresh
+    commit dir. An invalid manifest file is deleted along with its dir
+    (both halves of the failed commit go). Leaving the orphan would
+    double-count those buckets in read_encoded/verify. Runs before any
+    group processing on every (re)start.
 
     A ``commit=`` entry whose suffix is not an integer was not written
     by this pipeline — that's a foreign layout sharing the output dir,
     and silently deleting it would destroy someone else's data: fail
-    loudly instead (round-6 ADVICE low).
+    loudly instead.
 
     Second pass (compaction GC roll-forward): any valid group that is
     SUPERSEDED by another valid group's manifest had its data replaced
@@ -1106,52 +761,31 @@ def _clean_stale_commit_dirs(spark: SparkSession, out: str,
     Delete manifest first (the dir then reads as stale on any re-run),
     then the dir.
 
-    ``min_age_sec`` (round-8 judge task 3, the Iceberg
-    ``expire_snapshots(older_than)`` contract): a superseded group is
-    only collected once its replacement's publish is at least this old
-    — the publish timestamp is the superseding group's manifest ``ts``
-    (stamped at publish by `_write_manifest_group`). With the default 0
-    every writer job still reclaims superseded pairs on entry (the
-    round-7 behavior); a positive retention makes
-    ``compact_encoded_job(gc=False)``'s grace window survive intervening
-    writer jobs, so in-flight readers of the pre-compaction snapshot can
-    drain on their own clock no matter who writes meanwhile. Stale
-    (never-committed) dirs are NOT retention-gated: no reader can hold
-    a plan over data that was never manifested. Returns
-    ``(stale_dirs_removed, superseded_groups_collected, live_groups)``
-    where live_groups is
-    the {group_id: manifest rows} of the valid, non-superseded groups
-    that survive the cleanup — computed from the SAME single manifest
-    read the cleanup itself uses, so callers holding the job lock
-    (encode resume, compaction) don't re-read the manifest dir."""
+    ``min_age_sec`` (the Iceberg ``expire_snapshots(older_than)``
+    contract): a superseded group is only collected once its
+    replacement's publish (`_published_ts`) is at least this old. With
+    the default 0 every writer job reclaims superseded pairs on entry;
+    a positive retention makes ``compact_encoded_job(gc=False)``'s grace
+    window survive intervening writer jobs, so in-flight readers of the
+    pre-compaction snapshot can drain on their own clock. Stale
+    (never-committed) dirs are NOT retention-gated: no reader can hold a
+    plan over data that was never manifested.
+
+    Returns ``(stale_dirs_removed, superseded_groups_collected,
+    live_groups)``, live_groups being the {group_id: manifest rows} of
+    the valid, non-superseded groups — from the SAME manifest read the
+    cleanup uses, so callers holding the job lock (encode resume,
+    compaction) don't re-read the manifest dir."""
     data_dir = os.path.join(out, "data")
     fs, jp, jvm = _hadoop_fs(spark, data_dir)
     if not fs.exists(jp):
         return 0, 0, {}
+    valid, invalid = _read_group_manifests(spark, out)
+    live = _live_group_ids(valid)
     mdir = _manifest_dir(out)
-    mfs, mjp, _ = _hadoop_fs(spark, mdir)
-    present = set()
-    if mfs.exists(mjp):
-        present = {st.getPath().getName() for st in mfs.listStatus(mjp)}
-    valid: set[str] = set()
-    superseded: set[int] = set()
-    pub_ts: dict[int, float] = {}  # superseded gid -> replacement's ts
-    groups: dict[int, list[dict]] = {}
-    flagged = _read_manifest_flagged(spark, out)
-    if flagged is not None:
-        for r in (flagged.filter(F.col("_file_valid"))
-                  .select(*_MANIFEST_COLS, "_mf").collect()):
-            name = r["_mf"].rsplit("/", 1)[-1]
-            valid.add(name)
-            if r["supersedes"]:
-                for g in json.loads(r["supersedes"]):
-                    superseded.add(int(g))
-                    pub_ts[int(g)] = max(pub_ts.get(int(g), 0.0),
-                                         float(r["ts"] or 0.0))
-            if name.startswith("group-") and name.endswith(".json"):
-                groups.setdefault(int(name[6:-5]), []).append(r.asDict())
-    removed = 0
+    mfs, _, _ = _hadoop_fs(spark, mdir)
     Path = jvm.org.apache.hadoop.fs.Path
+    removed = 0
     for st in fs.listStatus(jp):
         name = st.getPath().getName()
         if not name.startswith("commit="):
@@ -1164,36 +798,27 @@ def _clean_stale_commit_dirs(spark: SparkSession, out: str,
                 "commit=<int> dir this pipeline wrote. The output dir "
                 "is single-writer, single-layout — remove the foreign "
                 "entry or point the job at a fresh output dir") from None
-        gname = _manifest_group_name(gid)
-        if gname in valid:
+        if gid in valid:
             continue
-        if gname in present:
+        if gid in invalid:
             # partial/invalid manifest: drop BOTH halves of the commit
-            mfs.delete(Path(mdir, gname), False)
+            mfs.delete(Path(mdir, _manifest_group_name(gid)), False)
         fs.delete(st.getPath(), True)
         removed += 1
     collected = 0
     now = time.time()
-    for gid in sorted(superseded):
-        if min_age_sec > 0 and now - pub_ts.get(gid, 0.0) < min_age_sec:
+    for gid in sorted(set(valid) - live):
+        if min_age_sec > 0 and \
+                now - _published_ts(valid, gid) < min_age_sec:
             # retention: the replacement published too recently — leave
             # the superseded pair for a later pass (readers may still
             # hold plans over the old snapshot). It stays invisible to
             # manifest-driven reads meanwhile.
-            groups.pop(gid, None)
             continue
-        gname = _manifest_group_name(gid)
-        had_manifest = gname in valid and mfs.exists(Path(mdir, gname))
-        if had_manifest:
-            mfs.delete(Path(mdir, gname), False)
-        dpath = Path(data_dir, f"commit={gid:05d}")
-        had_dir = fs.exists(dpath)
-        if had_dir:
-            fs.delete(dpath, True)
-        if had_manifest or had_dir:
-            collected += 1
-        groups.pop(gid, None)
-    return removed, collected, groups
+        mfs.delete(Path(mdir, _manifest_group_name(gid)), False)
+        fs.delete(Path(data_dir, f"commit={gid:05d}"), True)
+        collected += 1
+    return removed, collected, {g: valid[g] for g in live}
 
 
 def run_encode_job_files(
@@ -1271,20 +896,6 @@ def _run_encode_job_files_locked(
     if not versions:
         files = sorted(live)
         ver = _new_catalog_version(0, 0, n_buckets, files, live)
-        legacy = _read_small_file(
-            spark, os.path.join(out, "catalog_fingerprint.json"))
-        if legacy is not None:
-            # pre-round-7 output dir: same refusal contract as the old
-            # single-fingerprint check, then migrate to version 0
-            stored = json.loads(legacy)
-            if stored.get("fingerprint") != ver["fingerprint"]:
-                raise RuntimeError(
-                    "input catalog changed since this job started: "
-                    "refusing to resume onto a different file->bucket "
-                    f"assignment (was "
-                    f"{stored.get('fingerprint', '?')[:12]}, now "
-                    f"{ver['fingerprint'][:12]}); start a fresh output "
-                    "dir")
         _write_catalog_version(spark, out, ver)
         versions = [ver]
     else:
@@ -1345,23 +956,20 @@ def _run_encode_job_files_locked(
     groups = [pending[gi: gi + group] for gi in range(0, len(pending), group)]
     scan_target = _effective_scan_target(
         spark, sum(sizes.get(f, 0) for b in pending for f in buckets[b]))
+    lock = threading.Lock()
     if concurrent_commits > 1 and len(groups) > 1:
         if fail_after_buckets is not None or \
                 fail_before_manifest_group is not None:
             raise ValueError(
                 "failure injection needs deterministic group order; "
                 "use concurrent_commits=1")
-        import threading
-        from concurrent.futures import ThreadPoolExecutor
-
-        lock = threading.Lock()
 
         def _run_group(batch):
             if job_lock is not None:
                 job_lock.check()  # abort if the lease protection died
             _process_file_commit_group(spark, buckets, sizes, batch, out,
                                        chunk_size, statistics, summary,
-                                       lock, scan_target=scan_target)
+                                       lock, scan_target)
 
         with ThreadPoolExecutor(max_workers=concurrent_commits) as ex:
             futs = [ex.submit(_run_group, batch) for batch in groups]
@@ -1376,21 +984,20 @@ def _run_encode_job_files_locked(
                 raise RuntimeError("injected failure for resume test")
             _process_file_commit_group(
                 spark, buckets, sizes, batch, out, chunk_size, statistics,
-                summary, None,
-                fail_before_manifest=(gi == fail_before_manifest_group),
-                scan_target=scan_target)
+                summary, lock, scan_target,
+                fail_before_manifest=(gi == fail_before_manifest_group))
     return summary
 
 
 def _process_file_commit_group(spark, buckets, sizes, batch_buckets, out,
-                               chunk_size, statistics, summary,
-                               lock, fail_before_manifest=False,
-                               scan_target: int | None = None) -> None:
+                               chunk_size, statistics, summary, lock,
+                               scan_target: int,
+                               fail_before_manifest=False) -> None:
     """One commit group of file-scope buckets: scan ONLY the group's
     files, encode, write, manifest.
 
-    Cost discipline (what makes file mode meet the commit-overhead bar
-    where the hash-bucket machinery measured 2x+ at 8M rows):
+    Cost discipline (what keeps a commit group near the cost of a plain
+    encode of the same files):
     - manifest stats come from a read-back of the group's committed
       output (compressed, ~0.25x its input) — no persist of the
       encoded frame, and the read-back doubles as a commit-readability
@@ -1402,9 +1009,7 @@ def _process_file_commit_group(spark, buckets, sizes, batch_buckets, out,
       partition overwrite, no other group's data at risk), and the dir
       count per group is n_sources, not n_sources x n_buckets — the
       (source,bucket) dynamic-overwrite layout measured 1280 dirs /
-      +70% wall at the 8M-row rehearsal purely in sink overhead. A
-      cheap repartition of the ENCODED blocks (compressed, ~0.25x
-      input) bounds files to one per source dir per commit."""
+      +70% wall at the 8M-row rehearsal purely in sink overhead."""
     from ..functions.kernels import CODEC_IDS
 
     t0 = time.time()
@@ -1419,8 +1024,8 @@ def _process_file_commit_group(spark, buckets, sizes, batch_buckets, out,
         # branch (213 tiny mapInArrow tasks/group, ~2x wall in python
         # worker roundtrips) or, branch-coalesced, collapsed to single
         # tasks (BENCH/BASELINE.md round-5 decomposition). The row's
-        # bucket comes from a basename->bucket literal map over
-        # input_file_name(): parquet part basenames are uuid-unique
+        # bucket comes from its file's basename (input_file_name()):
+        # parquet part basenames are uuid-unique
         # (asserted), basename matching is immune to the file:/ vs
         # file:/// URI-form differences of full-path matching, and an
         # unmapped file RAISES rather than silently mis-bucketing.
@@ -1441,16 +1046,11 @@ def _process_file_commit_group(spark, buckets, sizes, batch_buckets, out,
             sorted(basemap.items()), "_base string, _fbucket int")
         # task sizing: Spark's bytes-per-core split heuristic is per
         # scan, so a group-sized scan shatters into cores-many slivers;
-        # coalesce back up to FILE_COMMIT_TARGET_PARTITION_BYTES-sized
-        # tasks (None = leave Spark's natural split)
-        scan = spark.read.parquet(*files)
-        if scan_target is None:
-            scan_target = FILE_COMMIT_TARGET_PARTITION_BYTES
-        if scan_target:
-            # sizes come from plan_file_catalog's single listing — no
-            # per-file driver RPC here (round-6 judge task 5)
-            total_bytes = sum(sizes[f] for f in files)
-            scan = scan.coalesce(max(1, -(-total_bytes // scan_target)))
+        # coalesce back up to scan_target-sized tasks. Sizes come from
+        # the catalog's single listing — no per-file driver RPC here
+        total_bytes = sum(sizes[f] for f in files)
+        scan = spark.read.parquet(*files).coalesce(
+            max(1, -(-total_bytes // scan_target)))
         tagged = (
             scan.withColumn(
                 "_base",
@@ -1468,8 +1068,6 @@ def _process_file_commit_group(spark, buckets, sizes, batch_buckets, out,
             chunk_size)
         commit_dir = os.path.join(out, "data",
                                   f"commit={batch_buckets[0]:05d}")
-        if FILE_COMMIT_REPARTITION:
-            encoded = encoded.repartition(F.col("source"))
         enc.write_encoded(
             encoded,
             commit_dir,
@@ -1533,19 +1131,15 @@ def _process_file_commit_group(spark, buckets, sizes, batch_buckets, out,
     # named by the group id = first bucket, which also names the commit
     # data dir — the pairing _clean_stale_commit_dirs checks
     _write_manifest_group(spark, out, batch_buckets[0], rows)
-    for row in rows:
-        if lock is not None:
-            with lock:
-                _tally(summary, row)
-        else:
+    with lock:
+        for row in rows:
             _tally(summary, row)
 
 
 def read_encoded(spark: SparkSession, out: str) -> DataFrame:
-    """The committed encoded table.
+    """The committed encoded table of a `run_encode_job_files` output.
 
-    When `out` carries group manifests (file-scope commit mode), the
-    read is MANIFEST-DRIVEN: only the commit dirs of valid,
+    The read is MANIFEST-DRIVEN: only the commit dirs of valid,
     non-superseded groups are scanned — an Iceberg/Delta-shaped
     snapshot read. That makes `compact_encoded_job`'s publish atomic
     for reads that RESOLVE here after the publish (one manifest rename
@@ -1554,14 +1148,16 @@ def read_encoded(spark: SparkSession, out: str) -> DataFrame:
     plan built BEFORE a publish still points at the old dirs — safe
     while they exist, i.e. always under `compact_encoded_job(gc=False)`
     + deferred `vacuum_encoded`, but not across an immediate-GC compact
-    (see the reader-race note there). Outputs without group manifests
-    (hash-bucket mode, plain `write_encoded` dirs) keep the whole-dir
-    read."""
+    (see the reader-race note there). An output with no committed group
+    raises."""
+    valid, _ = _read_group_manifests(spark, out)
+    live = sorted(_live_group_ids(valid))
+    if not live:
+        raise FileNotFoundError(
+            f"no committed commit group under {out}: read_encoded reads "
+            "run_encode_job_files outputs (a valid "
+            "manifest/group-<g>.json per commit dir)")
     data_dir = os.path.join(out, "data")
-    groups = _valid_group_manifests(spark, out)
-    if not groups:
-        return spark.read.parquet(data_dir)
-    live = sorted(_live_group_ids(groups))
     return (spark.read.option("basePath", data_dir)
             .parquet(*[os.path.join(data_dir, f"commit={g:05d}")
                        for g in live]))

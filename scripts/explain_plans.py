@@ -161,23 +161,6 @@ def main() -> None:
          % ("PASS" if "HashAggregate" in p else "CHECK")],
     ))
 
-    # 4f. bucket layout: partition pruning on the resume unit
-    from parquet_playground_rs_spark.plans import pipeline as pl
-    docs_b = seq.select("doc_id", "source", "tokens") \
-        .withColumn("bucket", pl.bucket_col(8))
-    enc.write_encoded(pl._encode_with_bucket(docs_b, enc.DEFAULT_CHUNK),
-                      "/tmp/plans_buckets", partition_by="bucket")
-    p = plan_of(spark.read.parquet("/tmp/plans_buckets")
-                .filter(F.col("bucket") == 3))
-    sections.append((
-        "Bucketed layout: partition pruning on the resume unit",
-        p,
-        ["PartitionFilters prune to bucket=3 (scan reads ONE directory, "
-         "not the table) -> %s"
-         % ("PASS" if re.search(r"PartitionFilters: \[[^\]]*bucket", p)
-            else "FAIL")],
-    ))
-
     # 4g. exact dedup: exchanges carry (md5, id) metadata only; the
     # documents themselves are filtered by an anti-join AQE broadcasts
     d_out = dedup.exact_dedup(docs)

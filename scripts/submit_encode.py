@@ -11,9 +11,11 @@ The north rule's launch shape: package the engine and submit —
         --output s3a://bucket/encoded/ \\
         --buckets 256 --chunk-size 16384 [--verify checksum] [--resume]
 
-Re-running the same command after a failure resumes past completed
-buckets (plans/pipeline.py manifests; --resume is implied, the flag just
-documents intent). Works identically on local paths.
+Each bucket is a fixed group of input files; buckets commit in groups,
+one commit dir and one manifest file per group. Re-running the same
+command after a failure resumes past completed buckets (plans/pipeline.py
+manifests; --resume is implied, the flag just documents intent). Works
+identically on local paths.
 
 A growing corpus appends with `--append` (only new files are planned);
 the same entrypoint runs the maintenance jobs against the output dir:
@@ -41,34 +43,18 @@ def main() -> None:
                          "required for --job encode, unused by the "
                          "maintenance jobs")
     ap.add_argument("--output", required=True, help="encoded table root")
-    ap.add_argument("--buckets", type=int, default=64)
+    ap.add_argument("--buckets", type=int, default=64,
+                    help="resume units: the input files are dealt "
+                         "round-robin (by name) into this many buckets")
     ap.add_argument("--chunk-size", type=int, default=16384)
-    ap.add_argument("--buckets-per-commit", type=int, default=None)
+    ap.add_argument("--buckets-per-commit", type=int, default=None,
+                    help="buckets per commit group (one commit dir and "
+                         "one manifest file each); default: all pending "
+                         "buckets in one group")
     ap.add_argument("--concurrent-commits", type=int, default=1,
                     help="overlap N commit groups from driver threads "
-                         "(disjoint-partition writes; hides fixed "
+                         "(each writes its own commit dir; hides fixed "
                          "per-commit costs)")
-    ap.add_argument("--scope", choices=["files", "hash"], default="files",
-                    help="resume-unit keying. 'files' (default): commit "
-                         "groups of input files — each group reads only "
-                         "its own files, measured 1.14x plain encode at "
-                         "the 8M-row rehearsal. 'hash': data-derived "
-                         "buckets pmod(xxhash64(source,doc_id,chunk), n) "
-                         "— needed only when downstream layout must key "
-                         "on content; costs per-group re-scans (2.35x) "
-                         "or staging (see --stage-input)")
-    ap.add_argument("--cache-input", action="store_true",
-                    help="[hash scope] persist the chunked work list "
-                         "(DISK_ONLY) instead of re-scanning the source "
-                         "per commit group; pays off for expensive "
-                         "sources (JSON/object stores), measured 2x "
-                         "SLOWER for local columnar inputs")
-    ap.add_argument("--stage-input", action="store_true",
-                    help="[hash scope] materialize the bucketed work "
-                         "list once under output/staging (resumable); "
-                         "wins only for expensive-to-rederive sources — "
-                         "the materialization alone costs ~6x the "
-                         "encode at the 8M rehearsal")
     ap.add_argument("--verify",
                     choices=["none", "chunks", "checksum", "hash", "exact"],
                     default="checksum",
@@ -81,7 +67,7 @@ def main() -> None:
     ap.add_argument("--resume", action="store_true",
                     help="documentational; resume is always on")
     ap.add_argument("--append", action="store_true",
-                    help="[files scope] extend the catalog with newly-"
+                    help="extend the catalog with newly-"
                          "arrived input files only (committed files "
                          "keep their buckets); without it, new files "
                          "refuse loudly")
@@ -144,31 +130,21 @@ def main() -> None:
                 spark, args.output, lock_lease_sec=args.lock_lease_sec)
         print(json.dumps(summary))
         return
-    src = spark.read.parquet(args.input)
-    if args.scope == "files":
-        summary = pl.run_encode_job_files(
-            spark, args.input, args.output, n_buckets=args.buckets,
-            chunk_size=args.chunk_size,
-            buckets_per_commit=args.buckets_per_commit,
-            statistics=args.statistics,
-            concurrent_commits=args.concurrent_commits,
-            append=args.append,
-            gc_min_age_sec=args.gc_min_age_sec,
-            catalog_checkpoint_after=args.catalog_checkpoint_after,
-            lock_lease_sec=args.lock_lease_sec)
-    else:
-        summary = pl.run_encode_job(
-            spark, src, args.output, n_buckets=args.buckets,
-            chunk_size=args.chunk_size,
-            buckets_per_commit=args.buckets_per_commit,
-            statistics=args.statistics,
-            concurrent_commits=args.concurrent_commits,
-            cache_input=args.cache_input,
-            stage_input=args.stage_input)
+    summary = pl.run_encode_job_files(
+        spark, args.input, args.output, n_buckets=args.buckets,
+        chunk_size=args.chunk_size,
+        buckets_per_commit=args.buckets_per_commit,
+        statistics=args.statistics,
+        concurrent_commits=args.concurrent_commits,
+        append=args.append,
+        gc_min_age_sec=args.gc_min_age_sec,
+        catalog_checkpoint_after=args.catalog_checkpoint_after,
+        lock_lease_sec=args.lock_lease_sec)
     if args.verify != "none":
         method = "checksum" if args.verify == "chunks" else args.verify
         decoded = dec.decode_tokens(pl.read_encoded(spark, args.output))
-        row = dec.verify_roundtrip(src, decoded, method=method).first()
+        row = dec.verify_roundtrip(spark.read.parquet(args.input), decoded,
+                                   method=method).first()
         summary["verify"] = {k: int(row[k]) for k in
                              ("n_source", "n_decoded", "n_joined", "n_mismatch")}
         if row["n_mismatch"] != 0:

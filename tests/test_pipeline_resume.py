@@ -1,4 +1,4 @@
-"""Resumable pipeline: kill-and-resume against per-bucket lineage manifests."""
+"""Resumable pipeline: file-scope commits, group manifests, kill-and-resume."""
 
 import json
 import os
@@ -18,136 +18,6 @@ def seq(spark):
     df = sequences_df(spark, N_ROWS, seed=7, partitions=4).cache()
     df.count()
     return df
-
-
-def test_full_run_and_verify(spark, seq, tmp_path):
-    out = str(tmp_path / "run1")
-    summary = pl.run_encode_job(spark, seq, out, n_buckets=4, chunk_size=512)
-    assert summary["processed_buckets"] == 4
-    assert summary["output_bytes"] < summary["input_bytes"]
-    res = pl.verify_job(spark, seq, out)
-    assert res["n_mismatch"] == 0 and res["n_joined"] == N_ROWS
-
-
-def test_kill_and_resume(spark, seq, tmp_path):
-    out = str(tmp_path / "run2")
-    # crash after 2 of 6 buckets
-    with pytest.raises(RuntimeError, match="injected failure"):
-        pl.run_encode_job(spark, seq, out, n_buckets=6, chunk_size=512,
-                          buckets_per_commit=2, fail_after_buckets=2)
-    assert len(pl.completed_buckets(spark, out)) == 2
-    # resume: must process only the remaining 4
-    summary = pl.run_encode_job(spark, seq, out, n_buckets=6, chunk_size=512,
-                                buckets_per_commit=2)
-    assert summary["resumed_buckets"] == 2
-    assert summary["processed_buckets"] == 4
-    res = pl.verify_job(spark, seq, out)
-    assert res["n_mismatch"] == 0 and res["n_joined"] == N_ROWS
-    # idempotent: a third run does nothing
-    summary = pl.run_encode_job(spark, seq, out, n_buckets=6, chunk_size=512)
-    assert summary["processed_buckets"] == 0
-
-
-def test_manifest_lineage_content(spark, seq, tmp_path):
-    out = str(tmp_path / "run3")
-    pl.run_encode_job(spark, seq, out, n_buckets=3, chunk_size=512)
-    mrows = [json.loads(open(os.path.join(out, "manifest", f)).read())
-             for f in sorted(os.listdir(os.path.join(out, "manifest")))
-             if f.endswith(".json")]
-    assert [r["bucket"] for r in mrows] == [0, 1, 2]
-    assert all(r["status"] == "done" for r in mrows)
-    total_rows = sum(r["n_rows"] for r in mrows)
-    enc_df = pl.read_encoded(spark, out)
-    assert total_rows == enc_df.count()
-    # codec histogram in the manifest matches the data
-    hist = {}
-    for r in mrows:
-        for k, v in json.loads(r["codec_hist"]).items():
-            hist[k] = hist.get(k, 0) + v
-    data_hist = {r["codec"]: r["count"]
-                 for r in enc_df.groupBy("codec").count().collect()}
-    assert hist == data_hist
-    # manifest doc counts: chunked docs may appear in >1 bucket, so the sum
-    # is >= distinct docs
-    assert sum(r["n_docs"] for r in mrows) >= seq.select("doc_id").distinct().count()
-
-
-def test_staging_lifecycle(spark, seq, tmp_path):
-    """Commit granularity stages the work list once; the staging survives a
-    kill (so the resume re-reads it instead of re-scanning the source) and
-    is deleted after the final bucket commits."""
-    out = str(tmp_path / "run_staged")
-    sdir, data_dir, marker = pl._staging_dirs(out)
-    with pytest.raises(RuntimeError, match="injected failure"):
-        pl.run_encode_job(spark, seq, out, n_buckets=6, chunk_size=512,
-                          buckets_per_commit=2, fail_after_buckets=2,
-                          stage_input=True)
-    # killed mid-commit: staging is on disk with its marker, partitioned
-    # by bucket so group reads prune
-    assert os.path.exists(marker)
-    params = json.loads(open(marker).read())
-    assert params["n_buckets"] == 6 and params["chunk_size"] == 512
-    assert sorted(d for d in os.listdir(data_dir) if d.startswith("bucket=")) \
-        == [f"bucket={b}" for b in range(6)]
-    marker_mtime = os.path.getmtime(marker)
-    summary = pl.run_encode_job(spark, seq, out, n_buckets=6, chunk_size=512,
-                                buckets_per_commit=2, stage_input=True)
-    assert summary["processed_buckets"] == 4
-    # resume REUSED the staging (marker untouched) and then removed it
-    assert not os.path.exists(sdir)
-    res = pl.verify_job(spark, seq, out)
-    assert res["n_mismatch"] == 0 and res["n_joined"] == N_ROWS
-    del marker_mtime  # staging is gone; reuse was proven by completion time
-
-
-def test_staging_pruned_read(spark, seq, tmp_path):
-    """A commit group's plan over the staged files must contain a
-    PartitionFilters entry on bucket — the scan reads only the group's
-    directories, not the whole staged work list."""
-    out = str(tmp_path / "run_prune")
-    from pyspark.sql import functions as F
-    chunked = seq.select("doc_id", "source", "tokens") \
-        .withColumn("bucket", pl.bucket_col(4))
-    staged = pl._ensure_staged(spark, chunked, out, 4, 512, files_per_bucket=2)
-    plan = staged.filter(F.col("bucket").isin([1, 3])) \
-        ._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "bucket" in plan
-    # and the marker round-trips: a second call must not rewrite
-    _, _, marker = pl._staging_dirs(out)
-    m0 = os.path.getmtime(marker)
-    pl._ensure_staged(spark, chunked, out, 4, 512, files_per_bucket=2)
-    assert os.path.getmtime(marker) == m0
-    # changed params invalidate: restaged under the new chunk grid
-    pl._ensure_staged(spark, chunked, out, 4, 256, files_per_bucket=2)
-    assert json.loads(open(marker).read())["chunk_size"] == 256
-    pl.drop_staging(spark, out)
-    assert not os.path.exists(os.path.join(out, "staging"))
-
-
-def test_staged_matches_unstaged(spark, seq, tmp_path):
-    """The staged plan and the legacy re-scan plan commit identical data
-    and manifests (modulo wall/ts)."""
-    a, b = str(tmp_path / "staged"), str(tmp_path / "rescan")
-    pl.run_encode_job(spark, seq, a, n_buckets=6, chunk_size=512,
-                      buckets_per_commit=2, stage_input=True)
-    pl.run_encode_job(spark, seq, b, n_buckets=6, chunk_size=512,
-                      buckets_per_commit=2)            # default re-scan
-    keys = ("bucket", "n_rows", "n_docs", "input_bytes", "output_bytes",
-            "codec_hist", "block_crc")
-    ma = sorted([tuple(r[k] for k in keys)
-                 for r in pl.read_manifest(spark, a).collect()])
-    mb = sorted([tuple(r[k] for k in keys)
-                 for r in pl.read_manifest(spark, b).collect()])
-    assert ma == mb
-    assert pl.verify_job(spark, seq, a)["n_mismatch"] == 0
-
-
-def test_bucket_assignment_deterministic(spark, seq):
-    a = seq.withColumn("b", pl.bucket_col(16))
-    b = seq.repartition(11).withColumn("b", pl.bucket_col(16))
-    am = {r["doc_id"]: r["b"] for r in a.collect()}
-    bm = {r["doc_id"]: r["b"] for r in b.collect()}
-    assert am == bm
 
 
 # ---------------------------------------------------------------------------
@@ -202,6 +72,18 @@ def test_files_manifest_records_file_lineage(spark, seq_path, tmp_path):
     allf = [f for fs in buckets.values() for f in fs]
     assert len(allf) == len(set(allf)) == \
         len(spark.read.parquet(seq_path).inputFiles())
+    # the manifest's row/doc counts and codec histogram match the data
+    assert all(r["status"] == "done" for r in mrows.values())
+    enc_df = pl.read_encoded(spark, out)
+    assert sum(r["n_rows"] for r in mrows.values()) == enc_df.count()
+    assert sum(r["n_docs"] for r in mrows.values()) == enc_df.count()
+    hist = {}
+    for r in mrows.values():
+        for k, v in json.loads(r["codec_hist"]).items():
+            hist[k] = hist.get(k, 0) + v
+    data_hist = {r["codec"]: r["count"]
+                 for r in enc_df.groupBy("codec").count().collect()}
+    assert hist == data_hist
 
 
 def test_files_catalog_change_guard(spark, seq, tmp_path):
@@ -296,8 +178,9 @@ def test_files_size_drift_refused(spark, seq, seq_path, tmp_path):
 
 
 def test_files_matches_hash_bucket_data(spark, seq, seq_path, tmp_path):
-    """File-scope and hash-bucket modes commit the same DATA (decoded
-    equality via verify), just under different resume keys."""
+    """Commit groups of two buckets decode back to exactly the input
+    files' data (verified against a fresh read of the input dir, not the
+    cached source frame)."""
     out = str(tmp_path / "frun5")
     pl.run_encode_job_files(spark, seq_path, out, n_buckets=4,
                             chunk_size=512, buckets_per_commit=2)
@@ -460,6 +343,120 @@ def test_partial_group_manifest_is_uncommitted(spark, seq, seq_path,
     assert s["stale_commit_dirs_cleaned"] == 1
     assert s["processed_buckets"] == 2
     assert pl.verify_job(spark, seq, out)["n_decoded"] == N_ROWS
+
+
+@pytest.fixture(scope="module")
+def two_groups(spark, seq_path, tmp_path_factory):
+    """A committed output of two commit groups: group 0 owns buckets
+    0-1, group 2 owns buckets 2-3."""
+    out = str(tmp_path_factory.mktemp("two_groups") / "out")
+    pl.run_encode_job_files(spark, seq_path, out, n_buckets=4,
+                            chunk_size=512, buckets_per_commit=2)
+    assert sorted(os.listdir(os.path.join(out, "manifest"))) == \
+        ["group-00000.json", "group-00002.json"]
+    return out
+
+
+def _corrupt_prefix(lines):
+    return lines[:1]
+
+
+def _corrupt_torn(lines):
+    body = "".join(lines)
+    return [body[:-10]]
+
+
+def _corrupt_empty(lines):
+    return []
+
+
+def _corrupt_extra_line(lines):
+    return lines + lines[:1]
+
+
+def _corrupt_group_size_disagrees(lines):
+    row = json.loads(lines[1])
+    row["group_size"] += 1
+    return [lines[0], json.dumps(row) + "\n"]
+
+
+def _corrupt_no_bucket(lines):
+    row = json.loads(lines[1])
+    del row["bucket"]
+    return [lines[0], json.dumps(row) + "\n"]
+
+
+@pytest.mark.parametrize("corrupt", [
+    _corrupt_prefix, _corrupt_torn, _corrupt_empty, _corrupt_extra_line,
+    _corrupt_group_size_disagrees, _corrupt_no_bucket,
+], ids=lambda f: f.__name__[len("_corrupt_"):])
+def test_invalid_group_manifest_reads_uncommitted(spark, seq, seq_path,
+                                                  two_groups, tmp_path,
+                                                  corrupt):
+    """The driver-side manifest reader: a group file that breaks the
+    group_size rule in any way drops exactly that group's buckets; the
+    next run deletes both the file and its commit dir and re-encodes
+    them. A leftover ``.json.tmp`` is never read as a manifest."""
+    out = str(tmp_path / "out")
+    shutil.copytree(two_groups, out)
+    mdir = os.path.join(out, "manifest")
+    gfile = os.path.join(mdir, "group-00002.json")
+    lines = open(gfile).read().splitlines(True)
+    assert len(lines) == 2
+    with open(gfile, "w") as fh:
+        fh.write("".join(corrupt(lines)))
+    with open(os.path.join(mdir, "group-00004.json.tmp"), "w") as fh:
+        fh.write('{"bucket": 9, "status": "done", "group_size": 1}\n')
+    assert pl.completed_buckets(spark, out) == {0, 1}
+    assert sorted(r["bucket"] for r in
+                  pl.read_manifest(spark, out).collect()) == [0, 1]
+
+    # crash right after the re-encoded group's data write: the cleanup
+    # has already removed the invalid manifest, the new dir is unmanifested
+    with pytest.raises(RuntimeError, match="between data write"):
+        pl.run_encode_job_files(spark, seq_path, out, n_buckets=4,
+                                chunk_size=512, buckets_per_commit=2,
+                                fail_before_manifest_group=0)
+    assert not os.path.exists(gfile)
+    assert pl.completed_buckets(spark, out) == {0, 1}
+
+    s = pl.run_encode_job_files(spark, seq_path, out, n_buckets=4,
+                                chunk_size=512, buckets_per_commit=2)
+    assert s["stale_commit_dirs_cleaned"] == 1
+    assert s["resumed_buckets"] == 2 and s["processed_buckets"] == 2
+    assert pl.completed_buckets(spark, out) == {0, 1, 2, 3}
+    res = pl.verify_job(spark, seq, out)
+    assert res["n_mismatch"] == 0 and res["n_decoded"] == N_ROWS
+
+
+def test_control_plane_runs_no_spark_jobs(spark, two_groups, tmp_path):
+    """Manifests are read in driver code: resume bookkeeping and the
+    stale-dir cleanup launch no Spark job, and building the manifest-
+    driven read launches at most one (parquet footer/listing)."""
+    out = str(tmp_path / "out")
+    shutil.copytree(two_groups, out)
+    os.makedirs(os.path.join(out, "data", "commit=00009"))  # orphan dir
+    sc = spark.sparkContext
+
+    def jobs(tag, fn):
+        sc.setJobGroup(tag, tag)
+        try:
+            fn()
+        finally:
+            sc.setJobGroup(None, None)
+        return len(sc.statusTracker().getJobIdsForGroup(tag))
+
+    assert jobs("ctl-done", lambda: pl.completed_buckets(spark, out)) == 0
+    assert jobs("ctl-manifest", lambda: pl.read_manifest(spark, out)) == 0
+    assert jobs("ctl-clean",
+                lambda: pl._clean_stale_commit_dirs(spark, out)) == 0
+    assert not os.path.exists(os.path.join(out, "data", "commit=00009"))
+    assert jobs("ctl-read", lambda: pl.read_encoded(spark, out)) <= 1
+
+
+def test_read_encoded_without_group_raises(spark, tmp_path):
+    with pytest.raises(FileNotFoundError, match="no committed commit group"):
+        pl.read_encoded(spark, str(tmp_path / "empty"))
 
 
 def test_foreign_commit_dir_fails_loudly(spark, seq, seq_path, tmp_path):
@@ -732,7 +729,7 @@ def test_compact_respects_target_and_singles(spark, seq, seq_path,
     # partial merge: a target one byte short of everything merges the
     # first two groups and leaves the third alone
     total = sum(sum(int(r["output_bytes"]) for r in rows)
-                for rows in pl._valid_group_manifests(spark, out)
+                for rows in pl._read_group_manifests(spark, out)[0]
                 .values())
     s2 = pl.compact_encoded_job(
         spark, out, target_group_output_bytes=total - 1)

@@ -258,8 +258,11 @@ def test_verify_job_releases_decode_cache(spark, tmp_path):
     from parquet_playground_rs_spark.sources.generator import sequences_df
 
     seq = sequences_df(spark, 200, seed=42, partitions=2)
+    src = str(tmp_path / "src")
+    seq.write.parquet(src)
     out = str(tmp_path / "pipe")
-    pipeline.run_encode_job(spark, seq, out, n_buckets=4, chunk_size=1024)
+    pipeline.run_encode_job_files(spark, src, out, n_buckets=4,
+                                  chunk_size=1024)
     jsc = spark.sparkContext._jsc.sc()
     before = jsc.getPersistentRDDs().size()
     verdict = pipeline.verify_job(spark, seq, out)
@@ -268,19 +271,24 @@ def test_verify_job_releases_decode_cache(spark, tmp_path):
 
 
 def test_pipeline_concurrent_commits_match_sequential(spark, tmp_path):
-    """concurrent_commits overlaps disjoint-partition commit groups; the
-    result (data + manifests) must equal the sequential run's."""
+    """concurrent_commits overlaps commit groups that write disjoint
+    commit dirs; the result (data + manifests) must equal the
+    sequential run's."""
     from parquet_playground_rs_spark.plans import pipeline
     from parquet_playground_rs_spark.sources.generator import sequences_df
 
     seq = sequences_df(spark, 400, seed=5, partitions=4)
+    src = str(tmp_path / "src")
+    seq.repartition(12).write.parquet(src)
     seq_out = str(tmp_path / "seq")
     con_out = str(tmp_path / "con")
-    s1 = pipeline.run_encode_job(spark, seq, seq_out, n_buckets=12,
-                                 chunk_size=1024, buckets_per_commit=3)
-    s2 = pipeline.run_encode_job(spark, seq, con_out, n_buckets=12,
-                                 chunk_size=1024, buckets_per_commit=3,
-                                 concurrent_commits=4)
+    s1 = pipeline.run_encode_job_files(spark, src, seq_out, n_buckets=12,
+                                       chunk_size=1024,
+                                       buckets_per_commit=3)
+    s2 = pipeline.run_encode_job_files(spark, src, con_out, n_buckets=12,
+                                       chunk_size=1024,
+                                       buckets_per_commit=3,
+                                       concurrent_commits=4)
     assert s1["processed_buckets"] == s2["processed_buckets"] == 12
     assert s1["n_rows"] == s2["n_rows"]
     assert s1["output_bytes"] == s2["output_bytes"]
@@ -291,9 +299,10 @@ def test_pipeline_concurrent_commits_match_sequential(spark, tmp_path):
     assert m1 == m2
     assert pipeline.verify_job(spark, seq, con_out)["n_mismatch"] == 0
     with pytest.raises(ValueError):
-        pipeline.run_encode_job(spark, seq, str(tmp_path / "x"),
-                                n_buckets=4, buckets_per_commit=1,
-                                fail_after_buckets=1, concurrent_commits=2)
+        pipeline.run_encode_job_files(spark, src, str(tmp_path / "x"),
+                                      n_buckets=4, buckets_per_commit=1,
+                                      fail_after_buckets=1,
+                                      concurrent_commits=2)
 
 
 def test_ivf_index_query_matches_one_pass(spark, tmp_path):

@@ -58,15 +58,3 @@ def test_submit_entry_encode_verify_and_resume(spark, seq_input, tmp_path,
     assert again["processed_buckets"] == 0
     assert again["verify"]["n_mismatch"] == 0
 
-
-def test_submit_entry_hash_scope(spark, seq_input, tmp_path, capsys,
-                                 monkeypatch):
-    out = str(tmp_path / "out_hash")
-    summary = _run_entry(capsys, monkeypatch, [
-        "--input", seq_input, "--output", out,
-        "--scope", "hash", "--buckets", "4", "--chunk-size", "128",
-        "--verify", "chunks",
-    ])
-    assert summary["verify"]["n_mismatch"] == 0
-    # one encoded row per document
-    assert summary["verify"]["n_source"] == summary["n_rows"]
