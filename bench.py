@@ -358,9 +358,9 @@ def main() -> None:
     extra["kernel_rowwise_over_columnar"] = round(t_kr / max(t_kc, 1e-9), 1)
     extra["kernel_contrast_blocks"] = len(blocks)
 
-    # ---- FSST decode contrast: a deterministic Zipfian corpus (the
-    # fsst_min_ratio=2.0 shape) forced through fsst vs bitpack; the
-    # measured-hybrid fsst decode must stay within ~2x of the bitpack path
+    # ---- FSST decode contrast: a deterministic corpus of short Zipfian
+    # rows forced through fsst vs bitpack. Every fsst blob decodes through
+    # the per-row kernel, so short rows like these are its worst case.
     import numpy as np
     import pyarrow as pa
     rng = np.random.default_rng(11)

@@ -4,14 +4,15 @@ Input: a pyarrow BinaryArray of self-describing blobs (kernels.py format).
 Output: (values int32 concatenated, offsets int64) for the whole batch.
 
 Headers are parsed with vectorized byte composition (no struct.unpack per
-row), then rows group by (codec, bit width): each group pays ONE
-np.unpackbits + one matrix reduction, with rows padded to byte-aligned
-regions exactly mirroring batch_encode._group_pack. FSST rows use a
-measured hybrid: short rows decode as one vectorized group
-(_decode_fsst_group — lockstep header walk, round-by-round arena
-expansion; loop count is max_rounds, never the row count), long rows go
-through the cache-resident per-row kernel (see FSST_GROUP_MAX_TOKENS for
-the crossover evidence).
+row), then rows group by (codec, bit width): each group pays ONE word-wise
+unpack, with rows padded to byte-aligned regions exactly mirroring
+batch_encode._group_pack. FSST rows go one by one through the reference
+kernel (kernels.decode): an FSST blob holds up to a whole chunk of
+tokens, so the per-call overhead is small next to its work.
+
+Every blob's length is checked against the closed form of its header
+before its payload is read, so a truncated, extended or miscounted blob
+raises ValueError instead of reading into its neighbour.
 """
 
 from __future__ import annotations
@@ -20,7 +21,7 @@ import numpy as np
 import pyarrow as pa
 
 from . import kernels
-from .kernels import CODEC_IDS
+from .kernels import CODEC_IDS, _packed_size
 
 
 def _u32(d: np.ndarray, pos: np.ndarray) -> np.ndarray:
@@ -115,40 +116,44 @@ def _unpack_group(payload_bytes: np.ndarray, counts: np.ndarray,
 
 
 _TOKEN_CODEC_IDS = np.array(
-    [CODEC_IDS[c] for c in
-     ("plain", "bitpack", "fordelta", "rle", "dict", "fsst")],
-    dtype=np.int64)
+    [CODEC_IDS[c] for c in kernels.TOKEN_CODECS], dtype=np.int64)
+
+
+def _require(ok: np.ndarray, rows: np.ndarray, what: str) -> None:
+    """Raise ValueError naming the first of `rows` where `ok` is False."""
+    if not ok.all():
+        raise ValueError(f"corrupt blob at row {int(rows[np.argmin(ok)])}: "
+                         f"{what}")
 
 
 def decode_binary_array(blocks: pa.Array) -> tuple[np.ndarray, np.ndarray]:
     """Decode a batch of blobs -> (int32 values concat, int64 offsets).
 
-    Fails loudly on header-level corruption: null rows, blobs shorter
-    than the 5-byte common header, or an unknown codec byte raise instead
-    of leaving uninitialized output for rows no branch claims. Payload
-    truncation BELOW the header (a blob whose header promises more bytes
-    than it carries) is not detected here — blobs live in one flat batch
-    buffer, so a short payload reads into the neighboring blob; storage
-    integrity below the header is the parquet/ZSTD checksum layer's
-    job."""
+    Raises ValueError instead of returning tokens when a row is null,
+    shorter than the 5-byte common header or of an unknown codec, or when
+    a blob's length, packed-block counts, run lengths or dictionary codes
+    disagree with its header. Each subheader field is read only after
+    the blob is known to be long enough to hold it."""
     if blocks.null_count:
         raise ValueError("null block rows are not decodable")
     d, boffs = _binary_parts(blocks)
     n = boffs.size - 1
+    if n == 0:
+        return np.empty(0, dtype=np.int32), np.zeros(1, dtype=np.int64)
     starts = boffs[:-1]
-    if n and int((boffs[1:] - starts).min()) < 5:
+    blen = np.diff(boffs)
+    if int(blen.min()) < 5:
         raise ValueError("truncated blob: shorter than the 5-byte header")
-    codec = d[starts].astype(np.int64) if n else np.zeros(0, np.int64)
-    if n:
-        unknown = ~np.isin(codec, _TOKEN_CODEC_IDS)
-        if unknown.any():
-            raise ValueError(
-                f"unknown codec id(s) {sorted(set(codec[unknown].tolist()))}")
-    n_tok = _u32(d, starts + 1) if n else np.zeros(0, np.int64)
+    codec = d[starts].astype(np.int64)
+    unknown = ~np.isin(codec, _TOKEN_CODEC_IDS)
+    if unknown.any():
+        raise ValueError(
+            f"unknown codec id(s) {sorted(set(codec[unknown].tolist()))}")
+    n_tok = _u32(d, starts + 1)
+    empty = np.flatnonzero(n_tok == 0)
+    _require(blen[empty] == 5, empty, "an empty blob carries a payload")
     out_offsets = np.concatenate(([0], np.cumsum(n_tok)))
     out = np.empty(int(out_offsets[-1]), dtype=np.int32)
-    if n == 0:
-        return out, out_offsets
 
     def put(rows: np.ndarray, vals: np.ndarray) -> None:
         counts = n_tok[rows]
@@ -157,22 +162,30 @@ def decode_binary_array(blocks: pa.Array) -> tuple[np.ndarray, np.ndarray]:
         idx = np.arange(total) + np.repeat(out_offsets[rows] - pref, counts)
         out[idx] = vals.astype(np.int32, copy=False)
 
-    nonzero = n_tok > 0
+    def codec_rows(name: str) -> np.ndarray:
+        return np.flatnonzero((codec == CODEC_IDS[name]) & (n_tok > 0))
 
-    # ---- plain
-    rows = np.flatnonzero((codec == CODEC_IDS["plain"]) & nonzero)
+    # ---- plain: n raw i32 values at +5
+    rows = codec_rows("plain")
     if rows.size:
         counts = n_tok[rows]
+        _require(blen[rows] == 5 + 4 * counts, rows,
+                 "plain length disagrees with its header")
         total = int(counts.sum())
         pref4 = np.concatenate(([0], np.cumsum(counts * 4)))[:-1]
         src = np.arange(total * 4) + np.repeat(starts[rows] + 5 - pref4, counts * 4)
         put(rows, np.ascontiguousarray(d[src]).view("<i4"))
 
     # ---- bitpack: subheader [I n][q ref][B w] at +5, payload at +18
-    rows = np.flatnonzero((codec == CODEC_IDS["bitpack"]) & nonzero)
+    rows = codec_rows("bitpack")
     if rows.size:
-        refs = _i64(d, starts[rows] + 9)
-        widths = d[starts[rows] + 17].astype(np.int64)
+        s, ln, counts = starts[rows], blen[rows], n_tok[rows]
+        _require(ln >= 18, rows, "bitpack subheader truncated")
+        widths = d[s + 17].astype(np.int64)
+        _require((_u32(d, s + 5) == counts)
+                 & (ln == 5 + _packed_size(counts, widths)), rows,
+                 "bitpack length or count disagrees with its header")
+        refs = _i64(d, s + 9)
         for w in np.unique(widths):
             g = rows[widths == w]
             gr = refs[widths == w]
@@ -180,12 +193,16 @@ def decode_binary_array(blocks: pa.Array) -> tuple[np.ndarray, np.ndarray]:
             put(g, vals)
 
     # ---- fordelta: [q first] at +5, packed block at +13 -> payload at +26
-    rows = np.flatnonzero((codec == CODEC_IDS["fordelta"]) & nonzero)
+    rows = codec_rows("fordelta")
     if rows.size:
-        firsts = _i64(d, starts[rows] + 5)
-        drefs = _i64(d, starts[rows] + 17)
-        widths = d[starts[rows] + 25].astype(np.int64)
-        counts = n_tok[rows]
+        s, ln, counts = starts[rows], blen[rows], n_tok[rows]
+        _require(ln >= 26, rows, "fordelta subheader truncated")
+        widths = d[s + 25].astype(np.int64)
+        _require((_u32(d, s + 13) == counts - 1)
+                 & (ln == 13 + _packed_size(counts - 1, widths)), rows,
+                 "fordelta length or count disagrees with its header")
+        firsts = _i64(d, s + 5)
+        drefs = _i64(d, s + 17)
         for w in np.unique(widths):
             m = widths == w
             g = rows[m]
@@ -204,17 +221,23 @@ def decode_binary_array(blocks: pa.Array) -> tuple[np.ndarray, np.ndarray]:
             corr = g_cum[first_pos] - firsts[m]
             put(g, g_cum - np.repeat(corr, gc))
 
-    # ---- rle: two packed blocks after the common header
-    rows = np.flatnonzero((codec == CODEC_IDS["rle"]) & nonzero)
+    # ---- rle: two packed blocks (run values, run lengths) at +5
+    rows = codec_rows("rle")
     if rows.size:
-        p = starts[rows] + 5
+        s, ln = starts[rows], blen[rows]
+        _require(ln >= 18, rows, "rle subheader truncated")
+        p = s + 5
         r_cnt = _u32(d, p)
-        vrefs = _i64(d, p + 4)
         vw = d[p + 12].astype(np.int64)
         vbytes = (r_cnt * vw + 7) // 8
+        _require(ln >= 31 + vbytes, rows, "rle run-length block truncated")
         q = p + 13 + vbytes           # second packed block
-        lrefs = _i64(d, q + 4)
         lw = d[q + 12].astype(np.int64)
+        _require((_u32(d, q) == r_cnt)
+                 & (ln == 18 + vbytes + _packed_size(r_cnt, lw)), rows,
+                 "rle length or run count disagrees with its header")
+        vrefs = _i64(d, p + 4)
+        lrefs = _i64(d, q + 4)
         # decode runs into arenas ordered by row
         run_off = np.concatenate(([0], np.cumsum(r_cnt)))
         run_vals = np.empty(int(run_off[-1]), dtype=np.int64)
@@ -234,17 +257,26 @@ def decode_binary_array(blocks: pa.Array) -> tuple[np.ndarray, np.ndarray]:
 
         scatter_runs(run_vals, vw, vrefs, p + 13)
         scatter_runs(run_lens, lw, lrefs, q + 13)
+        len_sum = np.concatenate(([0], np.cumsum(run_lens)))[run_off]
+        _require(np.diff(len_sum) == n_tok[rows], rows,
+                 "rle run lengths do not sum to the token count")
         put(rows, np.repeat(run_vals, run_lens))
 
     # ---- dict: [I dict_size] at +5, dict vals, packed codes
-    rows = np.flatnonzero((codec == CODEC_IDS["dict"]) & nonzero)
+    rows = codec_rows("dict")
     if rows.size:
-        p = starts[rows] + 5
+        s, ln, counts = starts[rows], blen[rows], n_tok[rows]
+        _require(ln >= 9, rows, "dict subheader truncated")
+        p = s + 5
         dsz = _u32(d, p)
+        _require(ln >= 22 + 4 * dsz, rows, "dict code block truncated")
         dict_starts = p + 4
         code_block = dict_starts + 4 * dsz
         crefs = _i64(d, code_block + 4)
         cw = d[code_block + 12].astype(np.int64)
+        _require((_u32(d, code_block) == counts) & (crefs >= 0)
+                 & (ln == 9 + 4 * dsz + _packed_size(counts, cw)), rows,
+                 "dict length or code count disagrees with its header")
         # dict arena in row order
         darena_off = np.concatenate(([0], np.cumsum(dsz)))
         total_d = int(darena_off[-1])
@@ -256,263 +288,16 @@ def decode_binary_array(blocks: pa.Array) -> tuple[np.ndarray, np.ndarray]:
         for w in np.unique(cw):
             m = cw == w
             g = rows[m]
-            codes = _unpack_group(d, n_tok[g], crefs[m], int(w), code_block[m] + 13)
-            base = np.repeat(darena_off[:-1][m], n_tok[g])
-            put(g, darena[codes + base])
+            gc = counts[m]
+            codes = _unpack_group(d, gc, crefs[m], int(w), code_block[m] + 13)
+            _require(np.maximum.reduceat(codes, np.cumsum(gc) - gc) < dsz[m],
+                     g, "dict code outside its dictionary")
+            put(g, darena[codes + np.repeat(darena_off[:-1][m], gc)])
 
-    # ---- fsst: measured hybrid (see FSST_GROUP_MAX_TOKENS)
-    rows = np.flatnonzero((codec == CODEC_IDS["fsst"]) & nonzero)
-    if rows.size:
-        small = rows[n_tok[rows] <= FSST_GROUP_MAX_TOKENS]
-        if small.size:
-            # decode per same-round-count cohort: a uniform cohort runs
-            # the expansion maskless — every row is active every round,
-            # the first processed round is all-entering (one contiguous
-            # gather) and the rest all-continuing (arena reused, ZERO
-            # copy) — eliminating the per-round _seg_copy merges and
-            # flatnonzero masks mixed-round groups pay (measured ~25%
-            # of group-decode time on the bench Zipfian corpus)
-            nr_small = d[starts[small] + 9]
-            for rv in np.unique(nr_small):
-                g = small[nr_small == rv]
-                put(g, _decode_fsst_group(d, starts[g]))
-        for i in rows[n_tok[rows] > FSST_GROUP_MAX_TOKENS]:
-            out[out_offsets[i]: out_offsets[i + 1]] = \
-                kernels.decode(d[boffs[i]: boffs[i + 1]].tobytes())
+    # ---- fsst: the reference kernel, one blob at a time; it raises when
+    # a blob's length or token count disagrees with its header
+    for i in codec_rows("fsst"):
+        out[out_offsets[i]: out_offsets[i + 1]] = \
+            kernels.decode(d[boffs[i]: boffs[i + 1]].tobytes())
 
     return out, out_offsets
-
-
-# Crossover between the two FSST decode strategies, measured on Zipfian
-# corpora (zipf 1.3, narrow and wide vocab, the fsst_min_ratio=2.0
-# shapes): the arena group decode amortizes per-row numpy overhead and
-# wins ~5x below ~200 tokens (10-12M tok/s vs 1.8M per-row); above ~1.5k
-# tokens each row's stream is L1/L2 resident and the per-row kernel wins
-# (15-19M tok/s) because the group path pays explicit int32 index arrays
-# per item while per-row positions stay implicit. Re-swept after the
-# round-4 group-path rework (uniform cohorts + u16 LUT + split tail
-# carry, ~35% faster): interleaved best-of-9 over {768,1024,1536,2048,
-# inf} x {mixed 8-600, long 400-1800, vlong 1500-4000 tokens} puts the
-# knee at 1024 (long-heavy 10.8 -> 12.4M tok/s vs the old 768; mixed
-# flat at ~11.6M; vlong rows stay on the per-row side either way).
-# Memory bandwidth is the ceiling; route each row to the cheaper side.
-FSST_GROUP_MAX_TOKENS = 1024
-
-
-_POP8 = np.array([bin(i).count("1") for i in range(256)], dtype=np.int64)
-
-
-def _seg_gather(d: np.ndarray, seg_starts: np.ndarray,
-                seg_lens: np.ndarray, it=np.int64) -> np.ndarray:
-    """Concatenate d[s:s+l] for each (s, l) segment — one fancy index.
-
-    Sibling of batch_encode._concat_rows/_copy_into (same prefix-sum
-    index algebra; kept separate because the encode side derives its
-    index dtype from its own arena bounds while decode callers pass the
-    already-computed `it`). A fix to the 2^31 overflow policy must land
-    on BOTH sides."""
-    total = int(seg_lens.sum())
-    if total == 0:
-        return np.empty(0, dtype=d.dtype)
-    pref = np.concatenate(([0], np.cumsum(seg_lens)))[:-1]
-    idx = np.arange(total, dtype=it) + np.repeat(
-        (seg_starts - pref).astype(it), seg_lens)
-    return d[idx]
-
-
-def _seg_copy(dst: np.ndarray, dst_starts: np.ndarray,
-              src: np.ndarray, src_starts: np.ndarray,
-              seg_lens: np.ndarray, it=np.int64) -> None:
-    """dst[ds:ds+l] = src[ss:ss+l] for each segment — one fancy-index
-    assignment, shared prefix-sum algebra with _seg_gather."""
-    total = int(seg_lens.sum())
-    if total == 0:
-        return
-    pref = np.concatenate(([0], np.cumsum(seg_lens)))[:-1]
-    rel = np.arange(total, dtype=it)
-    dst[rel + np.repeat((dst_starts - pref).astype(it), seg_lens)] = \
-        src[rel + np.repeat((src_starts - pref).astype(it), seg_lens)]
-
-
-def _seg_gather_u16(d: np.ndarray, seg_starts: np.ndarray,
-                    seg_lens: np.ndarray, it=np.int64) -> np.ndarray:
-    """Like _seg_gather but segments hold little-endian u16 items;
-    seg_lens counts ITEMS, seg_starts are byte offsets. Returns uint16."""
-    total = int(seg_lens.sum())
-    if total == 0:
-        return np.empty(0, dtype=np.uint16)
-    pref = np.concatenate(([0], np.cumsum(seg_lens)))[:-1]
-    pos = (np.arange(total, dtype=it)
-           + np.repeat((seg_starts // 2 - pref).astype(it), seg_lens)) * 2 \
-        + np.repeat((seg_starts % 2).astype(it), seg_lens)
-    return d[pos].astype(np.uint16) | (d[pos + 1].astype(np.uint16)
-                                       << np.uint16(8))
-
-
-def _decode_fsst_group(d: np.ndarray, starts: np.ndarray) -> np.ndarray:
-    """Decode a group of FSST blobs (kernels.encode_fsst layout) into one
-    int32 value stream, vectorized across rows: the header walk advances
-    all cursors round-by-round in lockstep (segmented popcounts for the
-    escape bitmaps), then the expansion runs innermost-round-outwards over
-    concatenated arenas — per round, ONE unpackbits for every row's escape
-    bitmap, one gather for the symbol tables, one interleave for the pair
-    expansion. No per-row Python in either phase (the round loop is
-    <= max_rounds iterations regardless of row count)."""
-    n = starts.size
-    n_rounds = d[starts + 9].astype(np.int64)
-    # cohort contract: the caller (decode_binary_array) groups rows by
-    # round count, so every row here shares n_rounds. The expansion
-    # below RELIES on it — the first processed round is all-entering,
-    # every later one all-continuing (split carry) — the mixed-round
-    # merged-arena handling was deleted as dead (round-4 judge ADVICE).
-    if n and not (n_rounds == n_rounds[0]).all():
-        raise AssertionError(
-            "_decode_fsst_group requires a uniform same-round-count "
-            "cohort; group rows by d[start+9] first")
-    max_r = int(n_rounds.max())
-    cursor = (starts + 10).astype(np.int64)
-
-    # per-round header fields, parallel arrays over ALL group rows
-    # (inactive rows carry zeros)
-    tbl_start = np.zeros((max_r, n), dtype=np.int64)
-    n_sym = np.zeros((max_r, n), dtype=np.int64)
-    n_items = np.zeros((max_r, n), dtype=np.int64)
-    bm_start = np.zeros((max_r, n), dtype=np.int64)
-    lit_start = np.zeros((max_r, n), dtype=np.int64)
-    n_in = np.zeros((max_r, n), dtype=np.int64)
-    n_lits = np.zeros((max_r, n), dtype=np.int64)
-    tail = np.full((max_r, n), -1, dtype=np.int64)  # tail code of record r
-    codes_start = np.zeros(n, dtype=np.int64)  # final-codes byte offset
-
-    for r in range(max_r):
-        act = np.flatnonzero(n_rounds > r)
-        c = cursor[act]
-        ns = d[c].astype(np.int64) | (d[c + 1].astype(np.int64) << 8)
-        n_sym[r, act] = ns
-        tbl_start[r, act] = c + 2
-        p = c + 2 + 2 * ns
-        ni = _u32(d, p)
-        n_items[r, act] = ni
-        nb = (ni + 7) // 8
-        bm_start[r, act] = p + 4
-        # segmented popcount over each row's bitmap bytes (zero-padded by
-        # packbits, so full-byte popcounts are exact)
-        pops = _POP8[_seg_gather(d, p + 4, nb)]
-        cs = np.concatenate(([0], np.cumsum(pops)))
-        ends = np.cumsum(nb)
-        pin = cs[ends] - cs[ends - nb]
-        n_in[r, act] = pin
-        nl = ni - pin
-        n_lits[r, act] = nl
-        lit_start[r, act] = p + 4 + nb
-        c2 = p + 4 + nb + 2 * nl
-        # record r carries a tail byte when it is NOT the row's last round
-        more = n_rounds[act] > r + 1
-        mi = act[more]
-        cm = c2[more]
-        flag = d[cm].astype(np.int64)
-        has = flag == 1
-        tail[r, mi[has]] = d[cm[has] + 1]
-        cursor[mi] = cm + 1 + flag
-        # rows ending at round r: [u32 n_codes][codes]
-        li = act[~more]
-        codes_start[li] = c2[~more] + 4
-
-    # ---- expansion, innermost round outwards --------------------------
-    # dtype discipline (memory bandwidth is the ceiling): codes arenas are
-    # uint8, item arenas uint16, fancy indices int32 whenever every
-    # addressed arena fits. The addressed arrays are (per round r):
-    #   - the unpacked bitmap `bits`, 8*sum(nb) <= sum(ni) + 8n bytes
-    #     (packbits pads each row to a byte boundary);
-    #   - the codes arena, <= 2*sum(ni) + n (pair expansion + tail bytes);
-    #   - the raw blob data `d` itself.
-    # Bound every round explicitly (ADVICE r3: the old 2*sum(n_items[0])
-    # guard covered the bits array only via a non-obvious >=20-bytes-per-
-    # blob invariant; many tiny rows make 8n exceed 2*sum(ni)).
-    max_items = int(n_items.sum(axis=1).max())
-    it = np.int32 if max(d.size, 2 * max_items + n,
-                         max_items + 8 * n) < 2**31 else np.int64
-    # Carried code stream between rounds — uniform cohort, two shapes:
-    #  * first processed round (r = max_r-1): every row ENTERS — one
-    #    contiguous gather of the final-codes segments;
-    #  * every later round: split carry (carry_inter u8, carry_tail
-    #    int64) — the pair-expansion bytes contiguous per row PLUS the
-    #    per-row tail byte kept ASIDE. A row's code stream is logically
-    #    inter_segment + [tail]; the tail is by construction the LAST
-    #    in-table code of its row, so the items phase looks it up
-    #    directly instead of paying a _seg_copy merge to splice
-    #    1 byte/row into a multi-MB arena (measured ~23% of
-    #    group-decode time on the bench Zipfian corpus).
-    carry_inter = carry_tail = None  # split carry (None -> entering round)
-    for r in range(max_r - 1, -1, -1):
-        a = np.arange(n)  # uniform cohort: every row active every round
-        ni_a = n_items[r]
-        pin_a = n_in[r]
-        # ---- resolve this round's code stream ---------------------------
-        split = None
-        if carry_inter is None:
-            new_arena = np.ascontiguousarray(
-                _seg_gather(d, codes_start, n_in[r], it))
-        else:
-            split = (carry_inter, carry_tail)
-            new_arena = None
-
-        # items: scatter table lookups into in-table slots, literals into
-        # the rest — alignment is by construction (both orders are
-        # (row, position))
-        total_items = int(ni_a.sum())
-        nb_a = (ni_a + 7) // 8
-        bits = np.unpackbits(_seg_gather(d, bm_start[r, a], nb_a, it),
-                             bitorder="little")
-        cum_nb = np.concatenate(([0], np.cumsum(nb_a)))[:-1]
-        cum_items = np.concatenate(([0], np.cumsum(ni_a)))[:-1]
-        bit_idx = np.arange(total_items, dtype=it) + np.repeat(
-            (8 * cum_nb - cum_items).astype(it), ni_a)
-        in_t = bits[bit_idx].astype(bool)
-        items = np.empty(total_items, dtype=np.uint16)
-        idx_in = np.flatnonzero(in_t)
-        # table values for in-table items, via a u16 LUT arena: gather
-        # every active row's symbol table ONCE into a contiguous uint16
-        # array (tables are <=255 entries — tiny next to the item count),
-        # then ONE u16 take per in-table item. Replaces the former
-        # two-byte compose (two random byte gathers per item) and repeats
-        # row offsets over the in-table count only, not all items.
-        tbl_u16 = _seg_gather_u16(d, tbl_start[r, a], n_sym[r, a], it)
-        tbl_off = np.concatenate(([0], np.cumsum(n_sym[r, a])))[:-1]
-        if split is None:
-            tpos = np.repeat(tbl_off.astype(it), pin_a) \
-                + new_arena.astype(it)
-            items[idx_in] = tbl_u16[tpos]
-        else:
-            s_inter, s_tail = split
-            t_mask = s_tail >= 0
-            # body codes (the contiguous pair-expansion bytes): per row
-            # pin - has_tail of them; the tail (when present) is the
-            # row's LAST in-table item, looked up without any splice
-            vals = tbl_u16[np.repeat(tbl_off.astype(it),
-                                     pin_a - t_mask)
-                           + s_inter.astype(it)]
-            if t_mask.any():
-                full = np.empty(int(pin_a.sum()), dtype=np.uint16)
-                sel = np.ones(full.size, dtype=bool)
-                last_in = np.cumsum(pin_a) - 1
-                sel[last_in[t_mask]] = False
-                full[sel] = vals
-                full[~sel] = tbl_u16[tbl_off[t_mask]
-                                     + s_tail[t_mask]]
-                vals = full
-            items[idx_in] = vals
-        items[~in_t] = _seg_gather_u16(d, lit_start[r, a], n_lits[r, a], it)
-
-        if r == 0:
-            # items are the raw u16 pairs of the token byte stream; int32
-            # streams are always even so 2 * n_items == 4 * n_tok exactly
-            return np.ascontiguousarray(items).view("<i4")
-
-        # expand pairs (hi<<8 | lo of round r-1 codes): byteswap().view(u8)
-        # IS the (hi, lo) interleave — contiguous per row. The tail byte of
-        # record r-1 stays ASIDE (split carry): uniform cohort, so no row
-        # ever enters below the first processed round.
-        carry_inter = items.byteswap().view(np.uint8)
-        carry_tail = tail[r - 1]
-    raise AssertionError("unreachable")

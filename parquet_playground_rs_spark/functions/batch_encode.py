@@ -27,14 +27,18 @@ fallback path. Everything else never calls np.unique.
 
 from __future__ import annotations
 
-import struct
-
 import numpy as np
 
 from . import kernels, selector
-from .kernels import CODEC_IDS
+from .kernels import CODEC_IDS, _packed_size
 
 HEADER = selector.HEADER  # codec byte + u32 n
+
+# FSST trial gate: only rows whose best lightweight codec still needs more
+# than this many bytes per token (near-incompressible rows) are tried. A
+# Zipfian BPE-like stream packs below it at ~2.2 B/token, where FSST would
+# save ~12% (scripts/fsst_study.py) at the price of a trial per row.
+FSST_MIN_BYTES_PER_TOKEN = 3.0
 
 
 def _bits_needed_arr(span: np.ndarray) -> np.ndarray:
@@ -115,10 +119,6 @@ def batch_stats(values: np.ndarray, offsets: np.ndarray) -> dict[str, np.ndarray
             dmax[w_idx] = np.maximum.reduceat(dsub, sub_starts)
     return {"n_tok": n_tok, "min": mins, "max": maxs, "n_runs": n_runs,
             "dmin": dmin, "dmax": dmax}
-
-
-# Back-compat alias: the segmented stats ARE the batch stats now.
-segmented_stats = batch_stats
 
 
 def choose_codecs(s: dict[str, np.ndarray]) -> tuple[np.ndarray, dict[str, np.ndarray]]:
@@ -290,9 +290,7 @@ def _copy_into(data: np.ndarray, dst_pos: np.ndarray, src: np.ndarray,
     data[r + np.repeat(dst_off, nbytes)] = src[r + np.repeat(src_off, nbytes)]
 
 
-def encode_batch_columnar(values: np.ndarray, offsets: np.ndarray,
-                          enable_fsst: bool = True,
-                          fsst_min_ratio: float = 3.0):
+def encode_batch_columnar(values: np.ndarray, offsets: np.ndarray):
     """Encode every row of a batch into ONE contiguous blob buffer.
 
     Returns (data uint8[total], blob_offsets int64[n+1], codec_ids int64[n],
@@ -321,9 +319,6 @@ def encode_batch_columnar(values: np.ndarray, offsets: np.ndarray,
         CODEC_IDS["plain"], CODEC_IDS["bitpack"], CODEC_IDS["fordelta"],
         CODEC_IDS["rle"], CODEC_IDS["dict"], CODEC_IDS["fsst"])
 
-    def pk(cnt, w):  # packed-block size: [u32][i64][u8] + payload
-        return 13 + (cnt * w + 7) // 8
-
     # ---- dict pass: probe-flagged low-cardinality rows, exact segmented
     # dictionary; dict wins where its size beats the current choice ----
     dict_rows = np.zeros(0, dtype=np.int64)
@@ -333,7 +328,7 @@ def encode_batch_columnar(values: np.ndarray, offsets: np.ndarray,
         gate = gate[_dict_probe(values, offsets, gate)]
     if gate.size:
         uniq_vals, u_per_row, codes, cw, lens = segmented_dict(values, offsets, gate)
-        dict_blob_sizes = HEADER + 4 + 4 * u_per_row + pk(lens, cw)
+        dict_blob_sizes = HEADER + 4 + 4 * u_per_row + _packed_size(lens, cw)
         win_idx = np.flatnonzero(dict_blob_sizes < aux["best_size"][gate])
         if win_idx.size:
             dict_rows = gate[win_idx]
@@ -369,34 +364,29 @@ def encode_batch_columnar(values: np.ndarray, offsets: np.ndarray,
     m = codec_ids == PLAIN
     L[m] = HEADER + 4 * n_tok[m]
     m = codec_ids == BITPACK
-    L[m] = HEADER + pk(n_tok[m], aux["bw"][m])
+    L[m] = HEADER + _packed_size(n_tok[m], aux["bw"][m])
     m = codec_ids == FORDELTA
-    L[m] = HEADER + 8 + pk(n_tok[m] - 1, aux["dbw"][m])
+    L[m] = HEADER + 8 + _packed_size(n_tok[m] - 1, aux["dbw"][m])
     if rle_rows.size:
         _, _, runs_per_row, _, _, vw, lw = rle_state
-        L[rle_rows] = HEADER + pk(runs_per_row, vw) + pk(runs_per_row, lw)
+        L[rle_rows] = (HEADER + _packed_size(runs_per_row, vw)
+                       + _packed_size(runs_per_row, lw))
     if dict_rows.size:
         L[dict_rows] = dict_state[6][dict_state[5]]
 
-    # ---- fsst trial: replace when smaller. The gate L > ratio * n_tok
-    # bounds the per-row trial cost: at the default 3.0 only
-    # near-incompressible rows are probed (throughput-first; compressed
-    # size is already ~0.5x the target). Zipfian corpora (BPE-like token
-    # streams) sit at ~2.2 bytes/token where multi-round fsst wins ~12%
-    # (scripts/fsst_study.py) — size-oriented runs pass fsst_min_ratio=2.0.
+    # ---- fsst trial (gate: FSST_MIN_BYTES_PER_TOKEN): replace when smaller
     fsst_blobs: dict[int, bytes] = {}
-    if enable_fsst:
-        cand = np.flatnonzero((L > fsst_min_ratio * n_tok) & (n_tok >= 64)
-                              & (codec_ids != DICT))
-        for i in cand:
-            i = int(i)
-            row = values[starts[i]: ends[i]]
-            if selector.estimate_fsst(row) < L[i]:
-                trial = kernels.encode_fsst(row)
-                if len(trial) < L[i]:
-                    fsst_blobs[i] = trial
-                    codec_ids[i] = FSST
-                    L[i] = len(trial)
+    cand = np.flatnonzero((L > FSST_MIN_BYTES_PER_TOKEN * n_tok)
+                          & (n_tok >= 64) & (codec_ids != DICT))
+    for i in cand:
+        i = int(i)
+        row = values[starts[i]: ends[i]]
+        if selector.estimate_fsst(row) < L[i]:
+            trial = kernels.encode_fsst(row)
+            if len(trial) < L[i]:
+                fsst_blobs[i] = trial
+                codec_ids[i] = FSST
+                L[i] = len(trial)
 
     # The FSST pass may have flipped rows that were RLE when rle_state was
     # built; drop them from the RLE assembly state or the full RLE payload
@@ -531,14 +521,12 @@ def encode_batch_columnar(values: np.ndarray, offsets: np.ndarray,
     return data, blob_offsets, codec_ids, s, aux
 
 
-def encode_batch(values: np.ndarray, offsets: np.ndarray,
-                 enable_fsst: bool = True, fsst_min_ratio: float = 3.0):
+def encode_batch(values: np.ndarray, offsets: np.ndarray):
     """Compatibility wrapper over encode_batch_columnar: materializes the
     per-row blobs as a list[bytes]. Returns (blobs, codec ids, stats, aux).
     The Spark operator uses the columnar form directly (zero-copy Arrow)."""
     data, blob_offsets, codec_ids, s, aux = encode_batch_columnar(
-        values, offsets, enable_fsst=enable_fsst,
-        fsst_min_ratio=fsst_min_ratio)
+        values, offsets)
     db = data.tobytes()
     blobs = [db[blob_offsets[i]: blob_offsets[i + 1]]
              for i in range(blob_offsets.size - 1)]
@@ -547,9 +535,7 @@ def encode_batch(values: np.ndarray, offsets: np.ndarray,
 
 def _concat_rows(v64: np.ndarray, starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
     """Gather a group's rows into one contiguous array (vectorized take).
-    int32 index math when the source allows (always within an Arrow batch).
-    Sibling of batch_decode._seg_gather/_seg_copy — a fix to the 2^31
-    overflow policy must land on BOTH sides."""
+    int32 index math when the source allows (always within an Arrow batch)."""
     total = int(lens.sum())
     it = np.int32 if v64.size < 2**31 else np.int64
     row_pref = np.concatenate(([0], np.cumsum(lens)))[:-1]

@@ -99,9 +99,13 @@ def _pack_block(arr: np.ndarray) -> bytes:
     return header + payload.tobytes()
 
 
-def _unpack_block(buf: memoryview, off: int) -> tuple[np.ndarray, int]:
-    """Inverse of _pack_block; returns (int64 array, new offset)."""
+def _unpack_block(buf: memoryview, off: int,
+                  max_count: int) -> tuple[np.ndarray, int]:
+    """Inverse of _pack_block; returns (int64 array, new offset). Raises
+    ValueError, before allocating, when the count exceeds max_count."""
     n, ref, width = struct.unpack_from("<IqB", buf, off)
+    if n > max_count:
+        raise ValueError(f"packed block count {n} exceeds {max_count}")
     off += 13
     if n == 0:
         return np.empty(0, dtype=np.int64), off
@@ -283,24 +287,6 @@ def encode_fsst(tokens: np.ndarray, max_rounds: int = 3) -> bytes:
     return b"".join(out)
 
 
-def build_fsst_table(tokens: np.ndarray, max_symbols: int = 255,
-                     sample: int = 65536) -> np.ndarray:
-    """Round-0 symbol table (most frequent raw byte pairs); kept as the
-    standalone analysis helper — encode_fsst builds its own per round."""
-    pairs, _ = _fsst_pairs(tokens)
-    if pairs.size == 0:
-        return np.empty(0, dtype="<u2")
-    sampled = pairs[:: max(pairs.size // sample, 1)] \
-        if pairs.size > sample else pairs
-    values, counts = np.unique(sampled, return_counts=True)
-    keep = counts >= 2
-    values, counts = values[keep], counts[keep]
-    if values.size > max_symbols:
-        top = np.argpartition(counts, -max_symbols)[-max_symbols:]
-        values = np.sort(values[top])
-    return values.astype("<u2")
-
-
 def encode_bss(values: np.ndarray, mask: np.ndarray | None = None) -> bytes:
     """BYTE_STREAM_SPLIT analog for float64 arrays (+ element nullability).
 
@@ -354,11 +340,6 @@ def decode_bss(blob: bytes | memoryview) -> tuple[np.ndarray, np.ndarray]:
     return raw.reshape(-1).view("<f8").copy(), mask
 
 
-def encode_constant_like(tokens: np.ndarray) -> bytes:
-    """Alias: a constant array is just RLE with one run."""
-    return encode_rle(tokens)
-
-
 _ENCODERS = {
     "plain": encode_plain,
     "bitpack": encode_bitpack,
@@ -374,43 +355,68 @@ def encode(tokens: np.ndarray, codec: str) -> bytes:
 
 
 def decode(blob: bytes | memoryview) -> np.ndarray:
-    """Decode any blob produced by this module back to int32 tokens."""
+    """Decode any blob produced by this module back to int32 tokens.
+
+    Raises ValueError when the blob is cut short, carries bytes past its
+    payload, or decodes to a token count other than its header's n."""
     buf = memoryview(blob)
-    codec_id, n = struct.unpack_from("<BI", buf, 0)
-    codec = CODEC_NAMES[codec_id]
+    try:
+        codec_id, n = struct.unpack_from("<BI", buf, 0)
+        codec = CODEC_NAMES.get(codec_id)
+        if codec not in TOKEN_CODECS:
+            raise ValueError(f"unknown token codec id {codec_id}")
+        out, end = _decode_payload(buf, codec, n)
+    except struct.error as e:
+        raise ValueError(f"truncated blob: {e}") from e
+    if end != len(buf) or out.size != n:
+        raise ValueError(
+            f"blob length {len(buf)} or token count {out.size} disagrees "
+            f"with its header (n={n}, payload ends at {end})")
+    return out
+
+
+def _decode_payload(buf: memoryview, codec: str,
+                    n: int) -> tuple[np.ndarray, int]:
+    """(tokens, offset one past the last byte read) of a token blob whose
+    header says `codec` and `n`."""
     off = 5
     if n == 0:
-        return np.empty(0, dtype=INT32)
+        return np.empty(0, dtype=INT32), off
 
     if codec == "plain":
-        return np.frombuffer(buf, dtype=INT32, count=n, offset=off).copy()
+        out = np.frombuffer(buf, dtype=INT32, count=n, offset=off).copy()
+        return out, off + 4 * n
 
     if codec == "bitpack":
-        vals, _ = _unpack_block(buf, off)
-        return vals.astype(INT32)
+        vals, off = _unpack_block(buf, off, n)
+        return vals.astype(INT32), off
 
     if codec == "fordelta":
         (first,) = struct.unpack_from("<q", buf, off)
-        deltas, _ = _unpack_block(buf, off + 8)
+        deltas, off = _unpack_block(buf, off + 8, n - 1)
+        if deltas.size != n - 1:
+            raise ValueError("fordelta delta count disagrees with n")
         out = np.empty(n, dtype=np.int64)
         out[0] = first
         if n > 1:
             np.cumsum(deltas, out=out[1:])
             out[1:] += first
-        return out.astype(INT32)
+        return out.astype(INT32), off
 
     if codec == "rle":
-        run_values, off = _unpack_block(buf, off)
-        run_lengths, _ = _unpack_block(buf, off)
-        return np.repeat(run_values, run_lengths).astype(INT32)
+        run_values, off = _unpack_block(buf, off, n)
+        run_lengths, off = _unpack_block(buf, off, run_values.size)
+        return np.repeat(run_values, run_lengths).astype(INT32), off
 
     if codec == "dict":
         (dict_size,) = struct.unpack_from("<I", buf, off)
         off += 4
         values = np.frombuffer(buf, dtype=INT32, count=dict_size, offset=off)
         off += dict_size * 4
-        codes, _ = _unpack_block(buf, off)
-        return values[codes]
+        codes, off = _unpack_block(buf, off, n)
+        if codes.min(initial=0) < 0 or codes.max(initial=0) >= dict_size:
+            raise ValueError("dict code outside its dictionary")
+        return values[codes], off
 
     if codec == "fsst":
         stream_len, n_rounds = struct.unpack_from("<IB", buf, off)
@@ -442,6 +448,7 @@ def decode(blob: bytes | memoryview) -> np.ndarray:
         (n_codes,) = struct.unpack_from("<I", buf, off)
         off += 4
         codes = np.frombuffer(buf, dtype=np.uint8, count=n_codes, offset=off)
+        off += n_codes
         # expand from the innermost round outwards
         for r in range(n_rounds - 1, -1, -1):
             table, in_t, lits, _ = rounds[r]
@@ -451,7 +458,7 @@ def decode(blob: bytes | memoryview) -> np.ndarray:
             items[~in_t] = lits
             if r == 0:
                 raw = items.view(np.uint8)[:stream_len]
-                return raw.view(INT32).copy()
+                return raw.view(INT32).copy(), off
             # items are (hi<<8 | lo) pairs of round r-1 codes
             prev = np.empty(2 * items.size, dtype=np.uint8)
             prev[0::2] = (items >> 8).astype(np.uint8)
@@ -459,9 +466,7 @@ def decode(blob: bytes | memoryview) -> np.ndarray:
             tail_prev = rounds[r - 1][3]
             codes = prev if tail_prev is None else np.concatenate(
                 (prev, np.array([tail_prev], dtype=np.uint8)))
-        raise AssertionError("unreachable")
-
-    raise ValueError(f"unknown codec id {codec_id}")
+        raise ValueError("fsst blob has no rounds")
 
 
 def blob_codec(blob: bytes | memoryview) -> str:

@@ -133,8 +133,7 @@ def _document_columns(codec_ids: np.ndarray, s: dict, aux: dict,
     return doc_codec, meta
 
 
-def encode_arrow_batch(batch: pa.RecordBatch, enable_fsst: bool = True,
-                       fsst_min_ratio: float = 3.0,
+def encode_arrow_batch(batch: pa.RecordBatch,
                        chunk_size: int = DEFAULT_CHUNK) -> pa.RecordBatch:
     """Encode one Arrow batch of (doc_id, source, tokens) documents into
     one ENCODED_ARROW_SCHEMA row each.
@@ -142,9 +141,7 @@ def encode_arrow_batch(batch: pa.RecordBatch, enable_fsst: bool = True,
     Fully batch-vectorized (functions/batch_encode.py): every block of
     the batch is encoded by one call, segmented stats + group packing, no
     per-row Python in the hot path; the blobs come back as one buffer
-    that the ``block`` list column wraps zero-copy. fsst_min_ratio tunes
-    the FSST trial gate (3.0 = throughput-first default; 2.0 admits
-    Zipfian token blocks, see functions/batch_encode.py).
+    that the ``block`` list column wraps zero-copy.
     """
     import pyarrow.compute as pc
 
@@ -153,8 +150,7 @@ def encode_arrow_batch(batch: pa.RecordBatch, enable_fsst: bool = True,
     values, offsets = list_to_numpy(batch.column("tokens"))
     block_offsets, n_chunks = _split_offsets(offsets, chunk_size)
     data, blob_offsets, codec_ids, s, aux = batch_encode.encode_batch_columnar(
-        values, block_offsets, enable_fsst=enable_fsst,
-        fsst_min_ratio=fsst_min_ratio)
+        values, block_offsets)
     if blob_offsets[-1] > 2**31 - 1:  # Arrow binary offsets are int32
         raise ValueError("encoded batch exceeds 2GiB; lower Arrow batch size")
     blobs = pa.Array.from_buffers(
@@ -288,9 +284,7 @@ def salted_repartition(df: DataFrame, num_partitions: int,
 
 
 def encode_tokens(df: DataFrame, chunk_size: int = DEFAULT_CHUNK,
-                  num_partitions: int | None = None,
-                  enable_fsst: bool = True,
-                  fsst_min_ratio: float = 3.0) -> DataFrame:
+                  num_partitions: int | None = None) -> DataFrame:
     """Full encode operator: [salted repartition] -> one Arrow map.
 
     Input:  (doc_id string, tokens array<int>, n_tok int, source string)
@@ -310,8 +304,6 @@ def encode_tokens(df: DataFrame, chunk_size: int = DEFAULT_CHUNK,
     def mapper(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
             if batch.num_rows:
-                yield encode_arrow_batch(batch, enable_fsst=enable_fsst,
-                                         fsst_min_ratio=fsst_min_ratio,
-                                         chunk_size=chunk_size)
+                yield encode_arrow_batch(batch, chunk_size=chunk_size)
 
     return src.mapInArrow(mapper, ENCODED_DDL)

@@ -1,5 +1,8 @@
 """Vectorized batch decode == per-row kernel decode, bit for bit."""
 
+import itertools
+import struct
+
 import numpy as np
 import pyarrow as pa
 import pytest
@@ -97,30 +100,26 @@ def test_faster_than_per_row():
     assert t_batch < t_row * 2.0, (t_batch, t_row)
 
 
-def test_fsst_group_decode_both_hybrid_sides():
-    """r3: FSST batch decode is a measured hybrid — short rows through the
-    vectorized group path, long rows through the per-row kernel. Both
-    sides and the boundary must match the reference kernel decoder,
-    including multi-round blobs, odd-length code streams (tail bytes), and
-    extreme values."""
-    import pyarrow as pa
-
-    from parquet_playground_rs_spark.functions import batch_decode as bd
-
+def test_fsst_blobs_of_every_size_decode_in_a_mixed_batch():
+    """FSST blobs from 1 to 16384 tokens (one whole chunk), with 1-3
+    rounds, odd-length code streams (tail bytes) and extreme values,
+    interleaved with non-FSST blobs in one batch, decode exactly."""
     rng2 = np.random.default_rng(31)
-    rows = []
-    for n in (1, 3, 17, 100, bd.FSST_GROUP_MAX_TOKENS,
-              bd.FSST_GROUP_MAX_TOKENS + 1, 900, 5000):
-        rows.append((rng2.zipf(1.3, n) % 500).astype(np.int32))
+    rows = [(rng2.zipf(1.3, n) % 500).astype(np.int32)
+            for n in (1, 3, 17, 100, 1024, 1025, 5000, 16384)]
     rows.append(np.array([2**31 - 1, -(2**31), 0, -1], np.int32))
     rows.append(np.full(40, 7, np.int32))
-    blobs = []
+    lightweight = itertools.cycle(kernels.TOKEN_CODECS[:5])
+    arrays, blobs = [], []
     for mr in (1, 2, 3):
-        blobs += [kernels.encode_fsst(r, max_rounds=mr) for r in rows]
-    expected = [kernels.decode(b) for b in blobs]
-    vals, offs = bd.decode_binary_array(pa.array(blobs, type=pa.binary()))
-    for i, e in enumerate(expected):
-        np.testing.assert_array_equal(vals[offs[i]:offs[i + 1]], e,
+        for r in rows:
+            arrays += [r, r]
+            blobs += [kernels.encode_fsst(r, max_rounds=mr),
+                      kernels.encode(r, next(lightweight))]
+    assert {b[9] for b in blobs[::2]} == {1, 2, 3}  # every round count
+    vals, offs = batch_decode.decode_binary_array(pa.array(blobs, type=pa.binary()))
+    for i, a in enumerate(arrays):
+        np.testing.assert_array_equal(vals[offs[i]:offs[i + 1]], a,
                                       err_msg=f"blob {i}")
 
 
@@ -146,29 +145,73 @@ def test_batch_decode_rejects_undecodable_input():
             [kernels.encode_bss(np.array([1.0]))], type=pa.binary()))
 
 
-def test_fsst_group_rejects_mixed_round_cohort():
-    """_decode_fsst_group's cohort contract (round-5): mixed round counts
-    must be rejected loudly — decode_binary_array groups rows by round
-    count before calling, and the mixed-round merged-arena handling was
-    deleted as dead code."""
-    import numpy as np
-    import pytest
+def _packed_count_offsets(blob: bytes) -> list[int]:
+    """Byte offsets of the u32 counts of a non-empty blob's packed blocks."""
+    codec = kernels.blob_codec(blob)
+    if codec == "bitpack":
+        return [5]
+    if codec == "fordelta":
+        return [13]
+    if codec == "rle":
+        (runs,) = struct.unpack_from("<I", blob, 5)
+        return [5, 18 + (runs * blob[17] + 7) // 8]
+    if codec == "dict":
+        (dict_size,) = struct.unpack_from("<I", blob, 5)
+        return [9 + 4 * dict_size]
+    return []  # plain and fsst carry no packed block
 
-    from parquet_playground_rs_spark.functions import batch_decode, kernels
 
-    rng = np.random.default_rng(5)
-    # few distinct symbols + long rows => multi-round FSST; short row with
-    # fewer rounds to force a mixed cohort
-    deep = rng.integers(0, 4, 3000).astype(np.int32)
-    shallow = rng.integers(0, 4, 40).astype(np.int32)
-    blobs = [kernels.encode_fsst(deep), kernels.encode_fsst(shallow)]
-    d = np.frombuffer(b"".join(blobs), dtype=np.uint8)
-    starts = np.array([0, len(blobs[0])], dtype=np.int64)
-    rounds = {int(d[s + 9]) for s in starts}
-    if len(rounds) < 2:
-        pytest.skip("corpus did not produce distinct round counts")
-    with pytest.raises(AssertionError, match="uniform same-round-count"):
-        batch_decode._decode_fsst_group(d, starts)
-    # each uniform singleton still decodes exactly
-    out0 = batch_decode._decode_fsst_group(d, starts[:1])
-    assert np.array_equal(out0, deep)
+def _with_u32(blob: bytes, pos: int, delta: int) -> bytes | None:
+    """blob with the u32 at pos moved by delta; None if it would wrap."""
+    (v,) = struct.unpack_from("<I", blob, pos)
+    if v + delta < 0:
+        return None
+    return blob[:pos] + struct.pack("<I", v + delta) + blob[pos + 4:]
+
+
+def _corruptions(blob: bytes):
+    yield "cut by 1 byte", blob[:-1]
+    if len(blob) > 5:
+        yield "cut to 5 bytes", blob[:5]
+    yield "extended by 1 byte", blob + b"\x00"
+    fields = [("n_tok", 1)]
+    if struct.unpack_from("<I", blob, 1)[0]:
+        fields += [(f"packed count at +{p}", p)
+                   for p in _packed_count_offsets(blob)]
+    for name, pos in fields:
+        for delta in (1, -1):
+            bad = _with_u32(blob, pos, delta)
+            if bad is not None:
+                yield f"{name} {delta:+d}", bad
+
+
+def _assert_value_error(fn, what: str) -> None:
+    try:
+        fn()
+    except ValueError:
+        return
+    raise AssertionError(f"{what}: decoded without raising")
+
+
+def test_blob_whose_length_disagrees_with_its_header_fails_the_read():
+    """Corrupt input raises ValueError, never decodes into wrong tokens.
+
+    A batch holds every codec's blob of every edge array. Each blob in
+    turn is cut by 1 byte, cut to its 5-byte header, extended by 1 byte,
+    or has its n_tok or one of its packed-block counts moved by +-1
+    (a move that would wrap below zero is skipped); the batch decoder
+    and the reference kernel must both raise."""
+    blobs = [kernels.encode(a, c)
+             for a in EDGE_ARRAYS.values() for c in kernels.TOKEN_CODECS]
+    batch_decode.decode_binary_array(pa.array(blobs, type=pa.binary()))
+    n_cases = 0
+    for i, blob in enumerate(blobs):
+        for what, bad in _corruptions(blob):
+            what = f"blob {i} ({kernels.blob_codec(blob)}) {what}"
+            batch = pa.array(blobs[:i] + [bad] + blobs[i + 1:],
+                             type=pa.binary())
+            _assert_value_error(
+                lambda: batch_decode.decode_binary_array(batch), what)
+            _assert_value_error(lambda: kernels.decode(bad), what)
+            n_cases += 1
+    assert n_cases > 6 * len(blobs)

@@ -157,23 +157,6 @@ def test_rle_flip_interleaved_with_surviving_rle_rows():
         np.testing.assert_array_equal(kernels.decode(blob), arr)
 
 
-def test_zipfian_batch_picks_fsst_at_lowered_gate():
-    """Size-oriented gate (fsst_min_ratio=2.0): a batch of Zipfian
-    BPE-like token rows must route most rows to fsst and shrink."""
-    rng_l = np.random.default_rng(9)
-    arrays = [np.minimum(rng_l.zipf(1.3, int(rng_l.integers(512, 2048))),
-                         120_000).astype(np.int32) for _ in range(50)]
-    values, offsets = make_batch(arrays)
-    blobs_hi, cids_hi, _, _ = batch_encode.encode_batch(values, offsets)
-    blobs_lo, cids_lo, _, _ = batch_encode.encode_batch(
-        values, offsets, fsst_min_ratio=2.0)
-    n_fsst = sum(1 for c in cids_lo if c == kernels.CODEC_IDS["fsst"])
-    assert n_fsst >= 25, n_fsst
-    assert sum(map(len, blobs_lo)) < sum(map(len, blobs_hi))
-    for blob, arr in zip(blobs_lo, arrays):
-        np.testing.assert_array_equal(kernels.decode(blob), arr)
-
-
 def test_throughput_improvement():
     """Batch path should be materially faster than the per-row loop."""
     import time

@@ -75,8 +75,8 @@ def test_bss_roundtrips_any_doubles(pairs):
 @given(st.lists(st.tuples(any_tokens, st.sampled_from(kernels.TOKEN_CODECS)),
                 min_size=1, max_size=16))
 def test_batch_decode_binary_array_roundtrips(items):
-    """Whole-batch decoder (incl. the FSST group path) over arbitrary
-    arrays x every codec: must equal the inputs exactly."""
+    """Whole-batch decoder over arbitrary arrays x every codec: must
+    equal the inputs exactly."""
     import pyarrow as pa
 
     from parquet_playground_rs_spark.functions import batch_decode
