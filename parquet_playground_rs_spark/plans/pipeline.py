@@ -9,9 +9,12 @@ lineage. Design:
   parallelism reproduces the same buckets. The catalog is versioned
   (``out/catalog/``): an append adds only new files, in fresh buckets.
 - Pending buckets are processed in **commit groups**. A group scans ONLY
-  its own files, encodes them and writes ``out/data/commit=<g>/`` — total
-  I/O equals a plain encode's plus a fixed per-group cost (job scheduling
-  and a read-back of the committed dir for the manifest stats).
+  its own files, encodes them (each row's bucket is looked up from its
+  file name inside the encode map) and writes ``out/data/commit=<g>/``
+  — total I/O equals a plain encode's plus a read-back of the committed
+  dir for the manifest stats. A group runs three Spark jobs: the write,
+  then the read-back's map and result jobs. The input schema is read
+  once per run; the encoded schema is known, so no job infers it.
 - Each group commits ONE manifest file ``out/manifest/group-<g>.json``
   (tmp-write + rename) holding a row per bucket: row count, input/output
   bytes, per-codec histogram, block checksum and the input file list.
@@ -39,7 +42,9 @@ from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
+from ..functions.kernels import CODEC_IDS
 from ..operators import decode as dec
 from ..operators import encode as enc
 
@@ -51,12 +56,48 @@ MANIFEST_SCHEMA = (
 )
 _MANIFEST_COLS = [p.split(" ")[0] for p in MANIFEST_SCHEMA.split(", ")]
 
+# the schema of a commit dir: the encoded table plus each row's bucket
+_COMMIT_DDL = enc.ENCODED_DDL + ", bucket int"
+
 
 def block_crc():
     """Aggregate: the sum of the CRC32 of every blob in the group — the
     manifest's content checksum, recomputed by compaction's read-back."""
     return F.sum(F.aggregate("block", F.lit(0).cast("long"),
                              lambda acc, b: acc + F.crc32(b)))
+
+
+def _read_commits(spark: SparkSession, dirs: list[str],
+                  base_path: str | None = None) -> DataFrame:
+    """Commit dirs read with the schema the engine wrote them with
+    (``source`` comes from the partition path), so no job infers it.
+    With `base_path` (the data dir) the ``commit`` column comes too."""
+    ddl, reader = _COMMIT_DDL, spark.read
+    if base_path is not None:
+        ddl += ", commit int"
+        reader = reader.option("basePath", base_path)
+    return reader.schema(ddl).parquet(*dirs)
+
+
+def _bucket_stats(spark: SparkSession, commit_dir: str) -> dict[int, dict]:
+    """{bucket: its manifest fields, n_rows through block_crc} from one
+    aggregate over a commit dir. The aggregate reads every blob (for
+    block_crc), so it also proves the commit readable."""
+    codecs = sorted(CODEC_IDS)
+    agg = _read_commits(spark, [commit_dir]).groupBy("bucket").agg(
+        F.count("*").alias("n_rows"),
+        F.sum("meta.input_bytes").alias("input_bytes"),
+        F.sum("meta.output_bytes").alias("output_bytes"),
+        block_crc().alias("block_crc"),
+        *[F.count_if(F.col("codec") == c).alias(f"_codec_{c}")
+          for c in codecs])
+    return {r["bucket"]: {
+        "n_rows": r["n_rows"], "n_docs": r["n_rows"],  # one row per doc
+        "input_bytes": r["input_bytes"], "output_bytes": r["output_bytes"],
+        "codec_hist": json.dumps({c: r[f"_codec_{c}"] for c in codecs
+                                  if r[f"_codec_{c}"]}),
+        "block_crc": r["block_crc"],
+    } for r in agg.collect()}
 
 
 def _manifest_dir(out: str) -> str:
@@ -390,30 +431,32 @@ class _JobLock:
                 "interleaved commits into this output dir")
 
 
-def _tally(summary: dict, row: dict) -> None:
-    summary["processed_buckets"] += 1
-    summary["n_rows"] += row["n_rows"]
-    summary["input_bytes"] += row["input_bytes"]
-    summary["output_bytes"] += row["output_bytes"]
-
-
-def _encode_with_bucket(docs_with_bucket: DataFrame,
+def _encode_with_bucket(docs: DataFrame, basemap: dict[str, int],
                         chunk_size: int) -> DataFrame:
-    """Encode (doc_id, source, tokens, bucket) documents, carrying the
-    bucket column through the Arrow map."""
+    """Encode (doc_id, source, tokens, _file) documents and append each
+    row's bucket: ``basemap[_file]``, `_file` being the basename of the
+    row's input file. The lookup runs inside the Arrow map, once per
+    distinct name per batch (a batch spans a few files), so no join
+    brings the bucket in; a name missing from `basemap` raises instead
+    of mis-bucketing the row."""
     import pyarrow as pa
+    import pyarrow.compute as pc
 
     def mapper(batches):
         for batch in batches:
             if not batch.num_rows:
                 continue
+            files = pc.dictionary_encode(batch.column("_file"))
+            try:
+                ids = [basemap[f] for f in files.dictionary.to_pylist()]
+            except KeyError as e:
+                raise ValueError("file outside this commit group's plan: "
+                                 f"{e.args[0]}") from None
             out = enc.encode_arrow_batch(batch, chunk_size=chunk_size)
             yield out.append_column(
-                "bucket", batch.column("bucket").cast(pa.int32())
-            )
+                "bucket", pc.take(pa.array(ids, pa.int32()), files.indices))
 
-    return docs_with_bucket.mapInArrow(mapper,
-                                       enc.ENCODED_DDL + ", bucket int")
+    return docs.mapInArrow(mapper, _COMMIT_DDL)
 
 
 # ---------------------------------------------------------------------------
@@ -437,19 +480,23 @@ def plan_file_buckets(spark: SparkSession, input_path: str,
     size, so round-robin balances groups; a pathological catalog (one
     giant file) is bounded by Spark's own split-by-maxPartitionBytes
     WITHIN the group, not across groups."""
-    buckets, _ = plan_file_catalog(spark, input_path, n_buckets)
-    return buckets
+    files = sorted(_list_input_files(spark, input_path)[0])
+    n_buckets = min(n_buckets, max(1, len(files)))
+    return {b: files[b::n_buckets] for b in range(n_buckets)}
 
 
-def _list_input_files(spark: SparkSession, input_path: str) -> dict[str, int]:
-    """{file: size_bytes} for the input's parquet files, from ONE
-    listing per parent directory (round-6 judge task 5: the commit
-    groups used to getFileStatus each file serially on the driver —
-    fine on local FS, serial RPC latency on an object store with ~10^6
-    inputs). Sizes are matched by basename within each parent's
-    listing, immune to the file:/ vs file:/// URI-form differences of
-    full-path comparison."""
-    files = sorted(spark.read.parquet(input_path).inputFiles())
+def _list_input_files(spark: SparkSession, input_path: str
+                      ) -> tuple[dict[str, int], StructType]:
+    """``({file: size_bytes}, schema)`` for the input's parquet files.
+    The schema is inferred here, once per run, and every commit group
+    reads its files with it. Sizes come from ONE listing per parent
+    directory (round-6 judge task 5: the commit groups used to
+    getFileStatus each file serially on the driver — fine on local FS,
+    serial RPC latency on an object store with ~10^6 inputs), matched
+    by basename within each parent's listing, immune to the file:/ vs
+    file:/// URI-form differences of full-path comparison."""
+    df = spark.read.parquet(input_path)
+    files = sorted(df.inputFiles())
     by_parent: dict[str, list[str]] = {}
     for f in files:
         by_parent.setdefault(f.rsplit("/", 1)[0], []).append(f)
@@ -464,18 +511,7 @@ def _list_input_files(spark: SparkSession, input_path: str) -> dict[str, int]:
                 raise IOError(
                     f"input file vanished between catalog listings: {f}")
             sizes[f] = listing[name]
-    return sizes
-
-
-def plan_file_catalog(spark: SparkSession, input_path: str,
-                      n_buckets: int
-                      ) -> tuple[dict[int, list[str]], dict[str, int]]:
-    """plan_file_buckets plus the {file: size_bytes} catalog (see
-    `_list_input_files`)."""
-    sizes = _list_input_files(spark, input_path)
-    files = sorted(sizes)
-    n_buckets = min(n_buckets, max(1, len(files)))
-    return {b: files[b::n_buckets] for b in range(n_buckets)}, sizes
+    return sizes, df.schema
 
 
 # Target bytes per scan task inside a file-scope commit group. Swept at the
@@ -871,14 +907,14 @@ def run_encode_job_files(
     `fail_before_manifest_group` (tests only) crashes the run AFTER the
     g-th group's data write but BEFORE its manifest commit — the exact
     window the cleanup protocol exists for."""
-    live = _list_input_files(spark, input_path)
+    live, schema = _list_input_files(spark, input_path)
     job_lock = _JobLock(spark, out, lock_lease_sec).acquire()
     ok = False
     try:
         summary = _run_encode_job_files_locked(
-            spark, out, live, n_buckets, chunk_size, buckets_per_commit,
-            fail_after_buckets, statistics, concurrent_commits,
-            fail_before_manifest_group, append, job_lock,
+            spark, out, live, schema, n_buckets, chunk_size,
+            buckets_per_commit, fail_after_buckets, statistics,
+            concurrent_commits, fail_before_manifest_group, append, job_lock,
             gc_min_age_sec, catalog_checkpoint_after)
         ok = True
         return summary
@@ -887,7 +923,7 @@ def run_encode_job_files(
 
 
 def _run_encode_job_files_locked(
-        spark, out, live, n_buckets, chunk_size, buckets_per_commit,
+        spark, out, live, schema, n_buckets, chunk_size, buckets_per_commit,
         fail_after_buckets, statistics, concurrent_commits,
         fail_before_manifest_group, append, job_lock=None,
         gc_min_age_sec=0.0, catalog_checkpoint_after=32) -> dict:
@@ -967,8 +1003,8 @@ def _run_encode_job_files_locked(
         def _run_group(batch):
             if job_lock is not None:
                 job_lock.check()  # abort if the lease protection died
-            _process_file_commit_group(spark, buckets, sizes, batch, out,
-                                       chunk_size, statistics, summary,
+            _process_file_commit_group(spark, schema, buckets, sizes, batch,
+                                       out, chunk_size, statistics, summary,
                                        lock, scan_target)
 
         with ThreadPoolExecutor(max_workers=concurrent_commits) as ex:
@@ -983,26 +1019,32 @@ def _run_encode_job_files_locked(
                     summary["processed_buckets"] >= fail_after_buckets:
                 raise RuntimeError("injected failure for resume test")
             _process_file_commit_group(
-                spark, buckets, sizes, batch, out, chunk_size, statistics,
-                summary, lock, scan_target,
+                spark, schema, buckets, sizes, batch, out, chunk_size,
+                statistics, summary, lock, scan_target,
                 fail_before_manifest=(gi == fail_before_manifest_group))
     return summary
 
 
-def _process_file_commit_group(spark, buckets, sizes, batch_buckets, out,
-                               chunk_size, statistics, summary, lock,
+def _process_file_commit_group(spark, schema, buckets, sizes, batch_buckets,
+                               out, chunk_size, statistics, summary, lock,
                                scan_target: int,
                                fail_before_manifest=False) -> None:
     """One commit group of file-scope buckets: scan ONLY the group's
     files, encode, write, manifest.
 
     Cost discipline (what keeps a commit group near the cost of a plain
-    encode of the same files):
+    encode of the same files): the group runs three Spark jobs — the
+    write, then the stats read-back's map and result jobs (AQE splits
+    the aggregate in two) — and no other:
+    - the scan reads the group's files with the run's input `schema`
+      (no per-group inference job), and each row's bucket is looked up
+      from its file name inside the encode map (`_encode_with_bucket`,
+      no join);
     - manifest stats come from a read-back of the group's committed
-      output (compressed, ~0.25x its input) — no persist of the
-      encoded frame, and the read-back doubles as a commit-readability
-      check before the manifest rows land;
-    - n_docs is the row count: one row per document;
+      output (compressed, ~0.25x its input) with the known encoded
+      schema — no persist of the encoded frame, and the read-back
+      doubles as a commit-readability check before the manifest rows
+      land;
     - output lands in an Iceberg-snapshot-shaped layout
       ``out/data/commit=<group>/source=<s>/``: a STATIC overwrite of
       the group's own commit dir is idempotent on retry (no dynamic
@@ -1010,12 +1052,9 @@ def _process_file_commit_group(spark, buckets, sizes, batch_buckets, out,
       count per group is n_sources, not n_sources x n_buckets — the
       (source,bucket) dynamic-overwrite layout measured 1280 dirs /
       +70% wall at the 8M-row rehearsal purely in sink overhead."""
-    from ..functions.kernels import CODEC_IDS
-
     t0 = time.time()
-    codec_names = sorted(CODEC_IDS)
     group_files = {b: buckets[b] for b in batch_buckets if buckets[b]}
-    metrics: dict = {}
+    stats: dict[int, dict] = {}
     wall = 0.0
     if group_files:
         # ONE scan of the whole group's files — measured equal to the
@@ -1024,11 +1063,9 @@ def _process_file_commit_group(spark, buckets, sizes, batch_buckets, out,
         # branch (213 tiny mapInArrow tasks/group, ~2x wall in python
         # worker roundtrips) or, branch-coalesced, collapsed to single
         # tasks (BENCH/BASELINE.md round-5 decomposition). The row's
-        # bucket comes from its file's basename (input_file_name()):
-        # parquet part basenames are uuid-unique
-        # (asserted), basename matching is immune to the file:/ vs
-        # file:/// URI-form differences of full-path matching, and an
-        # unmapped file RAISES rather than silently mis-bucketing.
+        # bucket comes from its file's basename: parquet part basenames
+        # are uuid-unique (asserted), and basename matching is immune to
+        # the file:/ vs file:/// URI-form differences of full paths.
         files = [f for fs in group_files.values() for f in fs]
         basemap = {f.rsplit("/", 1)[-1]: b
                    for b, fs in group_files.items() for f in fs}
@@ -1036,104 +1073,63 @@ def _process_file_commit_group(spark, buckets, sizes, batch_buckets, out,
             raise ValueError(
                 "duplicate parquet basenames across the commit group; "
                 "file-scope buckets need unique file names")
-        # basename -> bucket via a BROADCAST HASH join, not a literal
-        # map: GetMapValue over a literal map is a linear scan with
-        # string equality per probe — at 8M rows x 256 entries that is
-        # ~10^10 character comparisons riding the hot path (measured as
-        # the bulk of a 2.5x overhead before this change); the hash
-        # join probes once per row
-        fmap = spark.createDataFrame(
-            sorted(basemap.items()), "_base string, _fbucket int")
+        # a Hive partition value lives only in its directory name, which
+        # a read of the bare files cannot see: refuse, never read nulls
+        parted = {d.split("=")[0] for d in
+                  (f.rsplit("/", 2)[-2] for f in files) if "=" in d}
+        if parted & set(schema.names):
+            raise ValueError(
+                f"partitioned input (by {sorted(parted)}): file-scope "
+                "buckets need the input written without partitionBy")
         # task sizing: Spark's bytes-per-core split heuristic is per
         # scan, so a group-sized scan shatters into cores-many slivers;
         # coalesce back up to scan_target-sized tasks. Sizes come from
         # the catalog's single listing — no per-file driver RPC here
         total_bytes = sum(sizes[f] for f in files)
-        scan = spark.read.parquet(*files).coalesce(
-            max(1, -(-total_bytes // scan_target)))
-        tagged = (
-            scan.withColumn(
-                "_base",
-                F.element_at(F.split(F.input_file_name(), "/"), -1))
-            .join(F.broadcast(fmap), "_base", "left")
-            .withColumn(
-                "bucket",
-                F.when(F.col("_fbucket").isNotNull(), F.col("_fbucket"))
-                .otherwise(F.raise_error(F.concat(
-                    F.lit("file outside this commit group's plan: "),
-                    F.input_file_name()))).cast("int"))
-            .drop("_base", "_fbucket"))
-        encoded = _encode_with_bucket(
-            tagged.select("doc_id", "source", "tokens", "bucket"),
-            chunk_size)
+        scan = (spark.read.schema(schema).parquet(*files)
+                .select("doc_id", "source", "tokens",
+                        F.col("_metadata.file_name").alias("_file"))
+                .coalesce(max(1, -(-total_bytes // scan_target))))
         commit_dir = os.path.join(out, "data",
                                   f"commit={batch_buckets[0]:05d}")
         enc.write_encoded(
-            encoded,
+            _encode_with_bucket(scan, basemap, chunk_size),
             commit_dir,
             partition_by=["source"],
             statistics=statistics,
         )
         # manifest stats from a READ-BACK of the just-committed dir:
-        # one cheap job over the group's COMPRESSED output (~0.25x its
-        # input). The first formulation rode the stats on the write job
-        # via an Observation of n_buckets x 11 conditional aggregates —
-        # measured catastrophically non-scalable (the per-row expression
-        # count grows with bucket count: 704 exprs/row at 64 buckets =
-        # 4x the whole encode, BENCH/BASELINE.md round 5). The read-back
-        # also verifies the commit is READABLE before its manifest rows
-        # land — a stronger commit protocol, not just a cheaper one.
-        stats = spark.read.parquet(commit_dir).groupBy("bucket").agg(
-            F.count("*").alias("n_rows"),
-            F.count("*").alias("n_docs"),
-            F.sum("meta.input_bytes").alias("input_bytes"),
-            F.sum("meta.output_bytes").alias("output_bytes"),
-            block_crc().alias("block_crc"),
-            *[F.sum(F.when(F.col("codec") == c, 1).otherwise(0))
-              .alias(f"_codec_{c}") for c in codec_names],
-        )
-        stat_rows = {r["bucket"]: r for r in stats.collect()}
+        # one cheap aggregate over the group's COMPRESSED output (~0.25x
+        # its input). The first formulation rode the stats on the write
+        # job via an Observation of n_buckets x 11 conditional
+        # aggregates — measured catastrophically non-scalable (the
+        # per-row expression count grows with bucket count: 704
+        # exprs/row at 64 buckets = 4x the whole encode, BENCH/
+        # BASELINE.md round 5). The read-back also verifies the commit
+        # is READABLE before its manifest rows land — a stronger commit
+        # protocol, not just a cheaper one.
+        stats = _bucket_stats(spark, commit_dir)
         wall = time.time() - t0
-        metrics = {}
-        for b, r in stat_rows.items():
-            metrics[f"n_rows_{b}"] = r["n_rows"]
-            metrics[f"n_docs_{b}"] = r["n_docs"]
-            metrics[f"in_bytes_{b}"] = r["input_bytes"]
-            metrics[f"out_bytes_{b}"] = r["output_bytes"]
-            metrics[f"crc_{b}"] = r["block_crc"]
-            for c in codec_names:
-                metrics[f"codec_{b}_{c}"] = r[f"_codec_{c}"]
     if fail_before_manifest:
         # test hook: the crash window between a group's data write and
         # its manifest commit — the next run must clean this group's
         # commit dir and re-encode its buckets (possibly regrouped)
         raise RuntimeError(
             "injected failure between data write and manifest commit")
-    rows = []
-    for b in batch_buckets:
-        hist = {cn: int(metrics.get(f"codec_{b}_{cn}", 0))
-                for cn in codec_names
-                if int(metrics.get(f"codec_{b}_{cn}", 0))}
-        rows.append({
-            "bucket": b,
-            "status": "done",
-            "n_rows": int(metrics.get(f"n_rows_{b}", 0)),
-            "n_docs": int(metrics.get(f"n_docs_{b}", 0)),
-            "input_bytes": int(metrics.get(f"in_bytes_{b}", 0)),
-            "output_bytes": int(metrics.get(f"out_bytes_{b}", 0)),
-            "codec_hist": json.dumps(hist),
-            "block_crc": int(metrics.get(f"crc_{b}", 0)),
-            "wall_sec": wall / max(len(batch_buckets), 1),
-            "ts": time.time(),
-            "files": json.dumps(buckets.get(b, [])),
-        })
+    empty = {"n_rows": 0, "n_docs": 0, "input_bytes": 0, "output_bytes": 0,
+             "codec_hist": "{}", "block_crc": 0}
+    rows = [{"bucket": b, "status": "done", **stats.get(b, empty),
+             "wall_sec": wall / max(len(batch_buckets), 1),
+             "ts": time.time(), "files": json.dumps(buckets.get(b, []))}
+            for b in batch_buckets]
     # ONE atomic manifest file for the whole group (round-6 ADVICE high):
     # named by the group id = first bucket, which also names the commit
     # data dir — the pairing _clean_stale_commit_dirs checks
     _write_manifest_group(spark, out, batch_buckets[0], rows)
     with lock:
-        for row in rows:
-            _tally(summary, row)
+        summary["processed_buckets"] += len(rows)
+        for k in ("n_rows", "input_bytes", "output_bytes"):
+            summary[k] += sum(r[k] for r in rows)
 
 
 def read_encoded(spark: SparkSession, out: str) -> DataFrame:
@@ -1158,9 +1154,9 @@ def read_encoded(spark: SparkSession, out: str) -> DataFrame:
             "run_encode_job_files outputs (a valid "
             "manifest/group-<g>.json per commit dir)")
     data_dir = os.path.join(out, "data")
-    return (spark.read.option("basePath", data_dir)
-            .parquet(*[os.path.join(data_dir, f"commit={g:05d}")
-                       for g in live]))
+    return _read_commits(
+        spark, [os.path.join(data_dir, f"commit={g:05d}") for g in live],
+        data_dir)
 
 
 def _count_part_files(spark: SparkSession, dirs: list[str]) -> int:
@@ -1343,9 +1339,8 @@ def _compact_locked(spark, out, target_group_output_bytes,
         new_gid = next_gid
         next_gid += 1
         new_dir = os.path.join(data_dir, f"commit={new_gid:05d}")
-        df = (spark.read.option("basePath", data_dir).parquet(*old_dirs)
-              .drop("commit"))
         n_files = max(1, -(-bin_bytes // target_file_bytes))
+        df = _read_commits(spark, old_dirs, data_dir).drop("commit")
         enc.write_encoded(df.coalesce(n_files), new_dir,
                           partition_by=["source"], statistics=statistics)
         # the rewrite must reproduce every bucket EXACTLY before publish
@@ -1353,11 +1348,8 @@ def _compact_locked(spark, out, target_group_output_bytes,
         expect = {int(r["bucket"]): (int(r["n_rows"]),
                                      int(r["block_crc"] or 0))
                   for r in old_rows if int(r["n_rows"])}
-        got = {int(r["bucket"]): (int(r["n_rows"]), int(r["block_crc"]))
-               for r in spark.read.parquet(new_dir).groupBy("bucket").agg(
-                   F.count("*").alias("n_rows"),
-                   block_crc().alias("block_crc"))
-               .collect()}
+        got = {b: (st["n_rows"], st["block_crc"])
+               for b, st in _bucket_stats(spark, new_dir).items()}
         if got != expect:
             raise IOError(
                 f"compaction read-back mismatch for groups {bin_gids}: "

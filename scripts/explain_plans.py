@@ -381,8 +381,9 @@ def main() -> None:
     finally:
         _sh.rmtree(pq32_path, ignore_errors=True)
 
-    # 6. file-scope commit group (round 5): single scan, broadcast
-    # basename->bucket hash join, NO shuffle anywhere before the sink
+    # 6. file-scope commit group: single scan, each row's bucket looked
+    # up from its file name inside the encode map — no join, NO shuffle
+    # anywhere before the sink
     from parquet_playground_rs_spark.plans import pipeline as pl
 
     seq_dir = _tf.mkdtemp(prefix="plans_fm_")
@@ -394,28 +395,19 @@ def main() -> None:
         files = [f for fs in buckets.values() for f in fs]
         basemap = {f.rsplit("/", 1)[-1]: b
                    for b, fs in buckets.items() for f in fs}
-        fmap = spark.createDataFrame(sorted(basemap.items()),
-                                     "_base string, _fbucket int")
-        tagged = (spark.read.parquet(*files)
-                  .withColumn("_base", F.element_at(
-                      F.split(F.input_file_name(), "/"), -1))
-                  .join(F.broadcast(fmap), "_base", "left")
-                  .withColumn("bucket", F.col("_fbucket").cast("int"))
-                  .drop("_base", "_fbucket"))
-        p = plan_of(pl._encode_with_bucket(
-            tagged.select("doc_id", "source", "tokens", "bucket"), 4096))
+        scan = spark.read.parquet(*files).select(
+            "doc_id", "source", "tokens",
+            F.col("_metadata.file_name").alias("_file"))
+        p = plan_of(pl._encode_with_bucket(scan, basemap, 4096))
         sections.append((
-            "File-scope commit group: one scan, broadcast bucket join, "
-            "zero Exchange",
+            "File-scope commit group: one scan, bucket looked up in the "
+            "encode map, zero Exchange",
             p,
             ["no Exchange before the sink (group I/O == plain encode) "
-             "-> %s" % ("PASS" if "Exchange" not in p
-                        or "BroadcastExchange" in p and
-                        p.count("Exchange") == p.count("BroadcastExchange")
-                        else "FAIL"),
-             "bucket via BroadcastHashJoin (not a per-row literal-map "
-             "scan) -> %s"
-             % ("PASS" if "BroadcastHashJoin" in p else "FAIL")],
+             "-> %s" % ("PASS" if "Exchange" not in p else "FAIL"),
+             "no join: the bucket comes from the encode map -> %s"
+             % ("PASS" if "Join" not in p and "Cartesian" not in p
+                else "FAIL")],
         ))
     finally:
         _sh.rmtree(seq_dir, ignore_errors=True)

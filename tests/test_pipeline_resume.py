@@ -2,6 +2,7 @@
 
 import json
 import os
+import re
 import shutil
 
 import pytest
@@ -432,7 +433,8 @@ def test_invalid_group_manifest_reads_uncommitted(spark, seq, seq_path,
 def test_control_plane_runs_no_spark_jobs(spark, two_groups, tmp_path):
     """Manifests are read in driver code: resume bookkeeping and the
     stale-dir cleanup launch no Spark job, and building the manifest-
-    driven read launches at most one (parquet footer/listing)."""
+    driven read launches none either (the encoded schema is known, so no
+    footer is read to infer it)."""
     out = str(tmp_path / "out")
     shutil.copytree(two_groups, out)
     os.makedirs(os.path.join(out, "data", "commit=00009"))  # orphan dir
@@ -451,7 +453,69 @@ def test_control_plane_runs_no_spark_jobs(spark, two_groups, tmp_path):
     assert jobs("ctl-clean",
                 lambda: pl._clean_stale_commit_dirs(spark, out)) == 0
     assert not os.path.exists(os.path.join(out, "data", "commit=00009"))
-    assert jobs("ctl-read", lambda: pl.read_encoded(spark, out)) <= 1
+    assert jobs("ctl-read", lambda: pl.read_encoded(spark, out)) == 0
+
+
+def test_commit_group_runs_write_and_read_back_only(spark, seq_path,
+                                                    tmp_path):
+    """A commit group runs the write and the stats read-back (AQE splits
+    its aggregate into a map and a result job), nothing else: no
+    per-group schema inference, no bucket-table broadcast, no inference
+    of the schema the engine just wrote. The run adds one job, the
+    input listing that infers the input schema once."""
+    sc = spark.sparkContext
+    out = str(tmp_path / "jobs")
+    sc.setJobGroup("commit-jobs", "commit-jobs")
+    try:
+        s = pl.run_encode_job_files(spark, seq_path, out, n_buckets=4,
+                                    chunk_size=512, buckets_per_commit=2,
+                                    concurrent_commits=1)
+    finally:
+        sc.setJobGroup(None, None)
+    groups = len(os.listdir(os.path.join(out, "manifest")))
+    assert s["processed_buckets"] == 4 and groups == 2
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup("commit-jobs"))
+    assert n_jobs <= 1 + 3 * groups, n_jobs
+
+
+def test_encode_with_bucket_rejects_file_outside_plan(spark, seq_path):
+    """A row whose input file is missing from the group's basename->bucket
+    map fails the encode, naming the file, instead of taking a bucket."""
+    files = sorted(spark.read.parquet(seq_path).inputFiles())[:2]
+    names = [f.rsplit("/", 1)[-1] for f in files]
+    docs = spark.read.parquet(*files).select(
+        "doc_id", "source", "tokens",
+        F.col("_metadata.file_name").alias("_file"))
+    ok = pl._encode_with_bucket(docs, {names[0]: 0, names[1]: 1}, 512)
+    assert {r["bucket"] for r in ok.select("bucket").collect()} == {0, 1}
+    missing = pl._encode_with_bucket(docs, {names[0]: 0}, 512)
+    with pytest.raises(Exception, match=(
+            "ValueError: file outside this commit group's plan: "
+            + re.escape(names[1]))):
+        missing.collect()
+
+
+@pytest.mark.parametrize("buckets_per_commit,message", [
+    (None, "duplicate parquet basenames"),
+    (1, r"partitioned input \(by \['source'\]\)"),
+])
+def test_partitioned_input_refused_before_any_commit_dir(
+        spark, seq, tmp_path, buckets_per_commit, message):
+    """A source=-partitioned input keeps `source` only in its directory
+    names, which a commit group's read of the bare files cannot see. One
+    partitionBy write names its files alike in every partition, so the
+    whole-run group hits the duplicate-basename check; per-bucket groups
+    hold one file each and hit the partition check. Either way the run
+    refuses before any commit dir is written — never encoding a null
+    `source`."""
+    src = str(tmp_path / "src_partitioned")
+    seq.write.partitionBy("source").parquet(src)
+    out = str(tmp_path / "out")
+    with pytest.raises(ValueError, match=message):
+        pl.run_encode_job_files(spark, src, out, n_buckets=64,
+                                chunk_size=512,
+                                buckets_per_commit=buckets_per_commit)
+    assert not os.path.exists(os.path.join(out, "data"))
 
 
 def test_read_encoded_without_group_raises(spark, tmp_path):
