@@ -1460,6 +1460,23 @@ def ivf_pq_query(queries: DataFrame, dim: int,
     the query lineage. Duplicate query ids are rejected loudly (their
     top-k would be degenerate).
 
+    A query may WRITE to the index directory. When a cell compaction
+    died mid-swap (the ``_CELL_SWAP.json`` journal exists), the query
+    takes the single-writer lock and runs the journal roll-forward
+    before it reads: staged cell dirs are renamed into place and the
+    moved-aside copies deleted, the same recovery that append and
+    compact run on entry. So a client that only queries still needs
+    write access to the index directory to finish a crashed swap:
+    - a live writer holding the lock finishes the swap itself, and the
+      query reads the published cells as they are;
+    - a lock that cannot be taken for any other reason (FS error,
+      permissions) is logged as a warning, and the query reads the
+      published cells as they are;
+    - a rename that fails during the roll-forward raises.
+    A concurrent reader that listed ``cells/`` just before the
+    roll-forward can fail mid-scan on a moved cell dir. With no journal
+    (the common case) the query only probes for the file.
+
     Probed `cell=<j>/` partitions are
     read PRUNED and COLUMN-PRUNED to (id, pq_code) — m bytes/row, not
     8*dim — candidates are scored in the quantized domain with Jegou et

@@ -13,6 +13,8 @@ _DEFAULT_CHECKPOINT_MANAGER = (
     "org.apache.spark.sql.execution.streaming.checkpointing."
     "FileSystemBasedCheckpointFileManager")
 
+WORKER_MODULE = "pyspark_token_worker"
+
 
 def _jvm_has_class(spark: SparkSession, name: str) -> bool:
     """Whether the driver JVM's context classloader can load `name`."""
@@ -69,6 +71,16 @@ def get_spark(app: str = "parquet_playground_rs_spark", cores: int | None = None
         .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
         .config("spark.ui.enabled", str(ui).lower())
         .config("spark.driver.extraJavaOptions", "-Dio.netty.tryReflectionSetAccessible=true")
+        # Python workers keep their zip importers' directories across
+        # tasks (pyspark_token_worker.py, beside this package). A local
+        # master's workers share the driver's import path, so a worker
+        # that can import the engine can import the entry too.
+        .config("spark.python.worker.module", WORKER_MODULE)
+        # Every Parquet page carries a CRC32 and every read checks it, so
+        # flipped stored bytes fail the read instead of decoding to wrong
+        # tokens (Spark's reader skips the check by default).
+        .config("spark.hadoop.parquet.page.write-checksum.enabled", "true")
+        .config("spark.hadoop.parquet.page.verify-checksum.enabled", "true")
     )
     # Local-filesystem hardening (round 9, measured with driver thread
     # dumps): WITHOUT the native-hadoop library (absent in this sandbox,

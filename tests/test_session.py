@@ -25,3 +25,35 @@ def test_bogus_checkpoint_manager_falls_back(spark, tmp_path, monkeypatch):
     finally:
         q.stop()
     assert s.table("ckpt_fallback").count() == 5
+
+
+def test_python_workers_keep_zip_directories_across_tasks(spark):
+    """Every Python task runs through the engine's worker entry, and a
+    worker that serves several tasks keeps its pyspark.zip importer's
+    directory instead of re-reading it per task."""
+    from parquet_playground_rs_spark.session import WORKER_MODULE
+
+    def probe(batches):
+        import os
+        import sys
+
+        import pyarrow as pa
+
+        for _ in batches:
+            pass
+        (files_id,) = [id(finder._files) for path, finder
+                       in sys.path_importer_cache.items()
+                       if path.endswith("pyspark.zip")]
+        yield pa.RecordBatch.from_pydict({
+            "pid": [os.getpid()], "module": [sys.argv[1]],
+            "files_id": [files_id]})
+
+    rows = [spark.range(1, numPartitions=1)
+            .mapInArrow(probe, "pid long, module string, files_id long")
+            .collect()[0] for _ in range(10)]
+    assert {r["module"] for r in rows} == {WORKER_MODULE}
+    by_pid: dict[int, set[int]] = {}
+    for r in rows:
+        by_pid.setdefault(r["pid"], set()).add(r["files_id"])
+    assert len(by_pid) < len(rows)  # some worker served two tasks or more
+    assert all(len(ids) == 1 for ids in by_pid.values()), by_pid

@@ -191,6 +191,34 @@ def test_lost_block_fails_loudly(spark, seq, tmp_path):
         dec.decode_tokens(spark.read.parquet(str(bad_dir))).collect()
 
 
+def test_flipped_stored_bit_fails_the_read(spark, seq, tmp_path):
+    """One bit flipped inside the `block` column chunk of a file copied
+    without its `.crc` sidecar fails the read on the Parquet page CRC,
+    instead of decoding to wrong tokens."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    out_dir = str(tmp_path / "enc_flip")
+    enc.write_encoded(enc.encode_tokens(seq, chunk_size=256).coalesce(1),
+                      out_dir)
+    for sidecar in glob.glob(out_dir + "/.*.crc"):
+        os.remove(sidecar)
+    (path,) = glob.glob(out_dir + "/*.parquet")
+    rg = pq.ParquetFile(path).metadata.row_group(0)
+    (chunk,) = [rg.column(j) for j in range(rg.num_columns)
+                if rg.column(j).path_in_schema == "block.list.element"]
+    start = chunk.dictionary_page_offset or chunk.data_page_offset
+    with open(path, "r+b") as fh:
+        fh.seek(start + chunk.total_compressed_size // 2)
+        byte = fh.read(1)[0]
+        fh.seek(-1, os.SEEK_CUR)
+        fh.write(bytes([byte ^ 0x10]))
+    with pytest.raises(Exception, match="CRC checksum verification failed"):
+        dec.decode_tokens(spark.read.parquet(out_dir)).collect()
+
+
 def test_split_offsets_edges():
     """Mapper-side split: block offsets over an untouched values buffer
     (empty rows, exact multiples, 1-token rows, long tails)."""
