@@ -51,6 +51,18 @@ def _binary_parts(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
     return data, offs.astype(np.int64)
 
 
+def header_token_counts(blobs: pa.Array) -> np.ndarray:
+    """Each blob's token count as its header states it (u32 at byte 1),
+    read without decoding. A blob too short to hold the header counts 0
+    tokens: `decode_binary_array` rejects it."""
+    d, boffs = _binary_parts(blobs)
+    starts = boffs[:-1]
+    whole = np.diff(boffs) >= 5
+    counts = np.zeros(starts.size, dtype=np.int64)
+    counts[whole] = _u32(d, starts[whole] + 1)
+    return counts
+
+
 def _unpack_group(payload_bytes: np.ndarray, counts: np.ndarray,
                   refs: np.ndarray, width: int,
                   row_payload_starts: np.ndarray) -> np.ndarray:

@@ -194,14 +194,26 @@ def _fsst_pairs(tokens: np.ndarray) -> tuple[np.ndarray, int]:
     return raw.view("<u2"), stream_len
 
 
+def _u16_counts(stream: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(distinct values ascending, their counts) of a u16 stream: what
+    ``np.unique(stream, return_counts=True)`` returns, but counted from a
+    stable sort, which numpy runs as a radix sort on 16-bit keys."""
+    srt = np.sort(stream, kind="stable")
+    first = np.empty(srt.size, dtype=bool)
+    first[:1] = True
+    np.not_equal(srt[1:], srt[:-1], out=first[1:])
+    starts = np.flatnonzero(first)
+    return srt[starts], np.diff(np.append(starts, srt.size))
+
+
 def _fsst_round(stream: np.ndarray, max_symbols: int = 255):
-    """One re-pair round over a u16-valued item stream.
+    """One re-pair round over a ``<u2`` item stream.
 
     Returns (table u16 sorted, bitmap bytes, literals u16, codes u8,
     n_items). Codes index into the sorted table; out-of-band escape bitmap
     keeps decode branch-free and vectorized.
     """
-    values, counts = np.unique(stream, return_counts=True)
+    values, counts = _u16_counts(stream)
     keep = counts >= 2
     values, counts = values[keep], counts[keep]
     if values.size > max_symbols:
@@ -213,8 +225,8 @@ def _fsst_round(stream: np.ndarray, max_symbols: int = 255):
     in_table = mapped != _FSST_ESCAPE_NONE
     bitmap = np.packbits(in_table, bitorder="little")
     codes = mapped[in_table].astype(np.uint8)
-    lits = stream[~in_table].astype("<u2")
-    return values.astype("<u2"), bitmap, lits, codes, stream.size
+    lits = stream[~in_table]
+    return values, bitmap, lits, codes, stream.size
 
 
 def encode_fsst(tokens: np.ndarray, max_rounds: int = 3) -> bytes:
@@ -244,8 +256,7 @@ def encode_fsst(tokens: np.ndarray, max_rounds: int = 3) -> bytes:
     n = tokens.size
     if n == 0:
         return _header("fsst", 0)
-    pairs, stream_len = _fsst_pairs(tokens)
-    stream = pairs.astype(np.int64)
+    stream, stream_len = _fsst_pairs(tokens)
 
     artifacts = []  # per round: (table, bitmap, lits, codes_full, n_items)
     for _ in range(max(max_rounds, 1)):
@@ -254,7 +265,7 @@ def encode_fsst(tokens: np.ndarray, max_rounds: int = 3) -> bytes:
         if table.size == 0 or codes.size < 4:
             break
         nxt = codes[:-1] if codes.size % 2 else codes
-        stream = (nxt[0::2].astype(np.int64) << 8) | nxt[1::2]
+        stream = nxt.view(">u2").astype("<u2")  # hi_code << 8 | lo_code
 
     # choose the stopping round with the smallest assembled size
     def blob_size(R: int) -> int:

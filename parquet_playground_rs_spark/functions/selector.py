@@ -89,7 +89,7 @@ def estimate_fsst(tokens: np.ndarray, sample: int = 4096,
     pairs = t.view("<u2")
     if pairs.size > sample:
         pairs = pairs[:: pairs.size // sample]
-    values, counts = np.unique(pairs, return_counts=True)
+    _values, counts = kernels._u16_counts(pairs)
     counts = np.sort(counts)[::-1][:255]
     covered = counts[counts >= 2].sum() / pairs.size
     n_pairs = 2 * n

@@ -9,6 +9,14 @@ documents fall out of the list offsets (no reassembly shuffle, no second
 scan). `verify_roundtrip` asserts exact array<int32> equality against the
 source table (the reference's decode(encode(x))==x discipline,
 src/vec_pq_reader.rs:821-831, made distributed).
+
+Memory is bounded on both sides of the map. Input batches arrive capped
+at 1 MiB by ``session.ENGINE_CONFS``. A stored batch can decode to many
+times its size (a run-length blob of a constant document is a few
+bytes), so each input batch is then cut into runs of whole rows whose
+header token counts sum to at most ``DECODE_TOKEN_BUDGET``, and each run
+decodes into its own output batch. A single row above the budget is a
+run of its own.
 """
 
 from __future__ import annotations
@@ -20,7 +28,11 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions import kernels
+from ..functions import batch_decode, kernels
+
+# Most tokens one output batch of a decode map carries (4 MiB of int32),
+# unless one row alone holds more.
+DECODE_TOKEN_BUDGET = 1 << 20
 
 DECODED_DDL = "doc_id string, source string, tokens array<int>, n_tok int"
 
@@ -54,6 +66,25 @@ def _block_offsets(batch: pa.RecordBatch) -> tuple[pa.Array, np.ndarray]:
     return block.flatten(), offsets
 
 
+def _token_runs(batch: pa.RecordBatch) -> Iterator[pa.RecordBatch]:
+    """Cut `batch` into slices of whole rows that each decode to at most
+    DECODE_TOKEN_BUDGET tokens by their blob headers; a row over the
+    budget is a slice of its own. The decode of each slice still checks
+    every header against its blob."""
+    if not batch.num_rows:
+        return
+    blobs, list_offsets = _block_offsets(batch)
+    blob_tokens = batch_decode.header_token_counts(blobs)
+    row_ends = np.concatenate(([0], np.cumsum(blob_tokens)))[list_offsets]
+    start, n = 0, batch.num_rows
+    while start < n:
+        stop = int(np.searchsorted(
+            row_ends, row_ends[start] + DECODE_TOKEN_BUDGET, side="right")) - 1
+        stop = max(stop, start + 1)
+        yield batch.slice(start, stop - start)
+        start = stop
+
+
 def _decoded_batch(batch: pa.RecordBatch, values: np.ndarray,
                    offsets: np.ndarray) -> pa.RecordBatch:
     if offsets[-1] > 2**31 - 1:  # an Arrow batch never carries >2^31 values
@@ -74,8 +105,6 @@ def decode_arrow_batch(batch: pa.RecordBatch) -> pa.RecordBatch:
     one unpackbits per (codec, width) group), and each document's token
     offsets are the blob offsets taken at its list offsets.
     """
-    from ..functions import batch_decode
-
     blobs, list_offsets = _block_offsets(batch)
     values, offsets = batch_decode.decode_binary_array(blobs)
     return _decoded_batch(batch, values, offsets[list_offsets])
@@ -87,12 +116,14 @@ def decode_tokens(encoded: DataFrame) -> DataFrame:
     Output: (doc_id string, source string, tokens array<int>, n_tok int)
     """
 
-    def mapper(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            if batch.num_rows:
-                yield decode_arrow_batch(batch)
+    return encoded.select(*_ENCODED_COLS).mapInArrow(_decode_map, DECODED_DDL)
 
-    return encoded.select(*_ENCODED_COLS).mapInArrow(mapper, DECODED_DDL)
+
+def _decode_map(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    """decode_tokens' map: one output batch per token-budget run."""
+    for batch in batches:
+        for run in _token_runs(batch):
+            yield decode_arrow_batch(run)
 
 
 def decode_blocks_rowwise(encoded: DataFrame) -> DataFrame:
@@ -108,14 +139,13 @@ def decode_blocks_rowwise(encoded: DataFrame) -> DataFrame:
 
     def mapper(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            if not batch.num_rows:
-                continue
-            blobs, list_offsets = _block_offsets(batch)
-            parts = [kernels.decode(b.as_py()) for b in blobs]
-            lens = np.array([p.size for p in parts], dtype=np.int64)
-            flat = np.concatenate(parts) if parts else np.empty(0, np.int32)
-            offsets = np.concatenate(([0], np.cumsum(lens)))
-            yield _decoded_batch(batch, flat, offsets[list_offsets])
+            for run in _token_runs(batch):
+                blobs, list_offsets = _block_offsets(run)
+                parts = [kernels.decode(b.as_py()) for b in blobs]
+                lens = np.array([p.size for p in parts], dtype=np.int64)
+                flat = np.concatenate(parts) if parts else np.empty(0, np.int32)
+                offsets = np.concatenate(([0], np.cumsum(lens)))
+                yield _decoded_batch(run, flat, offsets[list_offsets])
 
     return encoded.select(*_ENCODED_COLS).mapInArrow(mapper, DECODED_DDL)
 

@@ -291,10 +291,13 @@ def encode_tokens(df: DataFrame, chunk_size: int = DEFAULT_CHUNK,
     Output: ENCODED_DDL rows, one per document.
 
     num_partitions, when set, balances whole documents across a salted
-    shuffle before the map. Arrow batches stay bounded via
-    spark.sql.execution.arrow.maxBytesPerBatch; a single document must
-    fit one Arrow row (< 2^31 tokens), true by construction for training
-    sequences.
+    shuffle before the map. Under the engine's confs
+    (session.ENGINE_CONFS) each Arrow batch into the map is capped at
+    8192 rows and 1 MiB, so a task's memory does not grow with its
+    partition. A batch can pass the byte cap by its last row, so the one
+    exception is a document larger than 1 MiB: it arrives whole. A
+    single document must fit one Arrow row (< 2^31 tokens), true by
+    construction for training sequences.
     """
     src = df.select(F.col("doc_id").cast("string").alias("doc_id"),
                     "source", "tokens")

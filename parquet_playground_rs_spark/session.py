@@ -15,6 +15,25 @@ _DEFAULT_CHECKPOINT_MANAGER = (
 
 WORKER_MODULE = "pyspark_token_worker"
 
+# The engine confs that hold on any master, so `get_spark` and the
+# cluster entry (scripts/submit_encode.py) share them:
+# - Arrow exchange on: the encode/decode operators are mapInArrow.
+# - Each Arrow batch into a Python map is capped at 8192 rows and 1 MiB,
+#   so a task's working memory does not grow with its partition size and
+#   the JVM scan, the kernels and the Parquet write overlap inside a task.
+#   A batch can pass the byte cap by its last row, so one document larger
+#   than 1 MiB still arrives whole.
+# - Every Parquet page carries a CRC32 and every read checks it, so
+#   flipped stored bytes fail the read instead of decoding to wrong
+#   tokens (Spark's reader skips the check by default).
+ENGINE_CONFS = {
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "8192",
+    "spark.sql.execution.arrow.maxBytesPerBatch": str(1 << 20),
+    "spark.hadoop.parquet.page.write-checksum.enabled": "true",
+    "spark.hadoop.parquet.page.verify-checksum.enabled": "true",
+}
+
 
 def _jvm_has_class(spark: SparkSession, name: str) -> bool:
     """Whether the driver JVM's context classloader can load `name`."""
@@ -34,9 +53,9 @@ def get_spark(app: str = "parquet_playground_rs_spark", cores: int | None = None
               ui: bool = False) -> SparkSession:
     """Local-mode session. `cores=None` -> local[*].
 
-    The confs mirror what a cluster submit would set: AQE on, Arrow
-    exchange on (the encode/decode operators are mapInArrow), shuffle
-    partitions sized to cores rather than the 200 default.
+    The confs mirror what a cluster submit would set: `ENGINE_CONFS`,
+    AQE on, shuffle partitions sized to cores rather than the 200
+    default.
     """
     cores_env = os.environ.get("SPARK_GRAFT_CPUS")
     if cores is None and cores_env:
@@ -63,8 +82,7 @@ def get_spark(app: str = "parquet_playground_rs_spark", cores: int | None = None
                 os.environ.get("SPARK_GRAFT_AQE_BHJ", "64m"))
         .config("spark.driver.memory", driver_mem)
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "8192")
+        .config(map=ENGINE_CONFS)
         .config("spark.sql.parquet.compression.codec", "zstd")
         # task-side file commit (v2): avoids the driver-serial rename tail,
         # which otherwise caps scaling as executor count grows
@@ -76,11 +94,6 @@ def get_spark(app: str = "parquet_playground_rs_spark", cores: int | None = None
         # master's workers share the driver's import path, so a worker
         # that can import the engine can import the entry too.
         .config("spark.python.worker.module", WORKER_MODULE)
-        # Every Parquet page carries a CRC32 and every read checks it, so
-        # flipped stored bytes fail the read instead of decoding to wrong
-        # tokens (Spark's reader skips the check by default).
-        .config("spark.hadoop.parquet.page.write-checksum.enabled", "true")
-        .config("spark.hadoop.parquet.page.verify-checksum.enabled", "true")
     )
     # Local-filesystem hardening (round 9, measured with driver thread
     # dumps): WITHOUT the native-hadoop library (absent in this sandbox,

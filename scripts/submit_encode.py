@@ -11,6 +11,10 @@ The north rule's launch shape: package the engine and submit —
         --output s3a://bucket/encoded/ \\
         --buckets 256 --chunk-size 16384 [--verify checksum] [--resume]
 
+The job applies the engine's cluster-safe confs (session.ENGINE_CONFS:
+Arrow on, 8192-row and 1 MiB Arrow batches, Parquet page CRCs written and
+checked) to every key the submit command leaves unset.
+
 Each bucket is a fixed group of input files; buckets commit in groups,
 one commit dir and one manifest file per group. Re-running the same
 command after a failure resumes past completed buckets (plans/pipeline.py
@@ -105,14 +109,21 @@ def main() -> None:
     if args.job == "encode" and args.input is None:
         ap.error("--input is required for --job encode")
 
+    from pyspark import SparkConf
     from pyspark.sql import SparkSession
 
     from parquet_playground_rs_spark.operators import decode as dec
     from parquet_playground_rs_spark.plans import pipeline as pl
+    from parquet_playground_rs_spark.session import ENGINE_CONFS
 
     # under spark-submit the session is configured by the submit command;
-    # getOrCreate attaches to it (local runs fall back to defaults)
-    spark = SparkSession.builder.appName("encode-job").getOrCreate()
+    # the engine's confs fill in only the keys it did not set
+    submitted = SparkConf()
+    builder = SparkSession.builder.appName("encode-job")
+    for key, value in ENGINE_CONFS.items():
+        if not submitted.contains(key):
+            builder = builder.config(key, value)
+    spark = builder.getOrCreate()
     if args.job != "encode":
         if args.job == "compact":
             summary = pl.compact_encoded_job(

@@ -154,3 +154,34 @@ def test_decode_rejects_unknown_codec():
     import struct
     with pytest.raises((ValueError, KeyError)):
         kernels.decode(struct.pack("<BI", 99, 4) + b"\x00" * 16)
+
+
+def _fsst_oracle_rows() -> dict[str, np.ndarray]:
+    """Zipfian rows over hashed ids (the shape that picks FSST), random
+    rows at lengths around the estimate's 4096-pair sample, and the edge
+    arrays."""
+    rng_l = np.random.default_rng(23)
+    vocab = (rng_l.choice(2**32, 50_000, replace=False) - 2**31).astype(np.int32)
+    rows = dict(EDGE_ARRAYS)
+    for n in (64, 2047, 2048, 2049, 5000, 16384):
+        ranks = np.minimum(rng_l.zipf(1.1, n), vocab.size) - 1
+        rows[f"zipf_{n}"] = vocab[ranks]
+        rows[f"random_{n}"] = rng_l.integers(
+            I32_MIN, I32_MAX, n, dtype=np.int64).astype(np.int32)
+    rows["small_ids"] = np.minimum(rng_l.zipf(1.3, 3000), 120_000).astype(np.int32)
+    return rows
+
+
+def test_fsst_radix_counts_match_np_unique(monkeypatch):
+    """Symbol counting by a u16 stable sort gives the np.unique
+    formulation's blobs and estimates byte for byte."""
+    rows = _fsst_oracle_rows()
+    new = {k: (kernels.encode_fsst(a), selector.estimate_fsst(a))
+           for k, a in rows.items()}
+    monkeypatch.setattr(kernels, "_u16_counts",
+                        lambda stream: np.unique(stream, return_counts=True))
+    for k, a in rows.items():
+        blob, estimate = new[k]
+        assert blob == kernels.encode_fsst(a), k
+        assert estimate == selector.estimate_fsst(a), k
+        np.testing.assert_array_equal(kernels.decode(blob), a)

@@ -57,3 +57,32 @@ def test_python_workers_keep_zip_directories_across_tasks(spark):
         by_pid.setdefault(r["pid"], set()).add(r["files_id"])
     assert len(by_pid) < len(rows)  # some worker served two tasks or more
     assert all(len(ids) == 1 for ids in by_pid.values()), by_pid
+
+
+def test_arrow_batches_into_a_map_are_byte_capped(spark):
+    """A mapInArrow over a few hundred long documents in one partition
+    gets several batches, none more than one row over the byte cap."""
+    from pyspark.sql import functions as F
+
+    from parquet_playground_rs_spark.session import ENGINE_CONFS
+
+    key = "spark.sql.execution.arrow.maxBytesPerBatch"
+    cap = int(ENGINE_CONFS[key])
+    assert int(spark.conf.get(key)) == cap
+    docs = spark.range(300, numPartitions=1).select(
+        F.col("id").cast("string").alias("doc_id"),
+        F.sequence(F.lit(0), F.lit(1999) + F.col("id") % 7).alias("tokens"))
+
+    def probe(batches):
+        import pyarrow as pa
+
+        for b in batches:
+            yield pa.RecordBatch.from_pydict({
+                "rows": [b.num_rows],
+                "bytes_before_last_row": [b.slice(0, b.num_rows - 1).nbytes]})
+
+    got = docs.mapInArrow(probe, "rows long, bytes_before_last_row long") \
+        .collect()
+    assert sum(r["rows"] for r in got) == 300
+    assert len(got) > 1
+    assert all(r["bytes_before_last_row"] <= cap for r in got), got

@@ -92,6 +92,62 @@ def test_roundtrip_with_small_byte_bounded_batches(spark, seq):
         spark.conf.set(key, old)
 
 
+def test_decode_output_batches_fit_the_token_budget(monkeypatch):
+    """decode_tokens' map cuts each input batch into output batches of
+    whole rows within DECODE_TOKEN_BUDGET tokens; a row over the budget
+    goes alone, and the rows come back exact and in order."""
+    import pyarrow as pa
+
+    budget = 3000
+    monkeypatch.setattr(dec, "DECODE_TOKEN_BUDGET", budget)
+    rng = np.random.default_rng(9)
+    docs = [np.full(10_000, 7, np.int32),            # one row over budget
+            np.zeros(0, np.int32)]
+    for i in range(40):
+        n = int(rng.integers(0, 1500))
+        docs.append(np.full(n, i, np.int32) if i % 3 == 0 else
+                    rng.integers(-2**31, 2**31 - 1, n, dtype=np.int64)
+                    .astype(np.int32))
+    docs.insert(20, np.arange(4000, dtype=np.int32))  # over budget, mid-batch
+    batch = pa.RecordBatch.from_pydict({
+        "doc_id": [f"d{i}" for i in range(len(docs))],
+        "source": ["web"] * len(docs),
+        "tokens": pa.array([d.tolist() for d in docs], pa.list_(pa.int32()))})
+    encoded = enc.encode_arrow_batch(batch, chunk_size=512)
+    inputs = [encoded.slice(0, 25), encoded.slice(25, 0), encoded.slice(25)]
+    out = list(dec._decode_map(iter(inputs)))
+    assert len(out) > len(inputs)
+    for b in out:
+        n_tok = b.column("n_tok").to_numpy()
+        assert b.num_rows == 1 or n_tok.sum() <= budget, n_tok
+    ids = [i for b in out for i in b.column("doc_id").to_pylist()]
+    assert ids == [f"d{i}" for i in range(len(docs))]
+    got = [t for b in out for t in b.column("tokens").to_pylist()]
+    assert all(g == d.tolist() for g, d in zip(got, docs))
+
+
+def test_documents_over_the_decode_budget_roundtrip(spark):
+    """Constant documents whose decoded size exceeds DECODE_TOKEN_BUDGET
+    (a few stored bytes each) sit in one stored batch with short
+    documents; both decode maps return every row exact."""
+    big = dec.DECODE_TOKEN_BUDGET * 3 // 4
+    src = spark.range(6, numPartitions=1).select(
+        F.concat(F.lit("b"), F.col("id").cast("string")).alias("doc_id"),
+        F.when(F.col("id") % 2 == 0,
+               F.array_repeat(F.col("id").cast("int"), big))
+        .otherwise(F.sequence(F.lit(0), F.col("id").cast("int") * 100))
+        .alias("tokens"),
+        F.lit("web").alias("source"))
+    src = src.withColumn("n_tok", F.size("tokens")).cache()
+    encoded = enc.encode_tokens(src).cache()
+    for decoded in (dec.decode_tokens(encoded),
+                    dec.decode_blocks_rowwise(encoded)):
+        res = dec.verify_roundtrip(src, decoded, method="hash").first()
+        assert res["n_mismatch"] == 0 and res["n_joined"] == 6
+    encoded.unpersist()
+    src.unpersist()
+
+
 @pytest.mark.parametrize("batch_size", [1, 7, 100, 8192, 10000])
 def test_roundtrip_across_arrow_batch_sizes(spark, seq, edge, batch_size):
     """Multi-block documents and block-boundary edge documents round-trip
