@@ -30,9 +30,11 @@ from pyspark.sql import functions as F
 
 from ..functions import batch_decode, kernels
 
-# Most tokens one output batch of a decode map carries (4 MiB of int32),
-# unless one row alone holds more.
-DECODE_TOKEN_BUDGET = 1 << 20
+# Most tokens one output batch of a decode map carries (2 MiB of int32,
+# twice the 1 MiB input cap), unless one row alone holds more. On
+# pipeline_mixed it gave lower worker RSS than 2^20 without the slower
+# decode of 2^18.
+DECODE_TOKEN_BUDGET = 1 << 19
 
 DECODED_DDL = "doc_id string, source string, tokens array<int>, n_tok int"
 

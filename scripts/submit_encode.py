@@ -109,7 +109,7 @@ def main() -> None:
     if args.job == "encode" and args.input is None:
         ap.error("--input is required for --job encode")
 
-    from pyspark import SparkConf
+    from pyspark import SparkConf, SparkContext
     from pyspark.sql import SparkSession
 
     from parquet_playground_rs_spark.operators import decode as dec
@@ -117,7 +117,10 @@ def main() -> None:
     from parquet_playground_rs_spark.session import ENGINE_CONFS
 
     # under spark-submit the session is configured by the submit command;
-    # the engine's confs fill in only the keys it did not set
+    # the engine's confs fill in only the keys it did not set. Before a
+    # JVM is attached, SparkConf() is an empty Python dict, so attach
+    # first: it then loads the submitted spark.* properties.
+    SparkContext._ensure_initialized()
     submitted = SparkConf()
     builder = SparkSession.builder.appName("encode-job")
     for key, value in ENGINE_CONFS.items():

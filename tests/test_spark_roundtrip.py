@@ -127,9 +127,9 @@ def test_decode_output_batches_fit_the_token_budget(monkeypatch):
 
 
 def test_documents_over_the_decode_budget_roundtrip(spark):
-    """Constant documents whose decoded size exceeds DECODE_TOKEN_BUDGET
-    (a few stored bytes each) sit in one stored batch with short
-    documents; both decode maps return every row exact."""
+    """Constant documents of 3/4 DECODE_TOKEN_BUDGET each (a few stored
+    bytes each) sit in one stored batch with short documents, so the
+    batch is cut into runs; both decode maps return every row exact."""
     big = dec.DECODE_TOKEN_BUDGET * 3 // 4
     src = spark.range(6, numPartitions=1).select(
         F.concat(F.lit("b"), F.col("id").cast("string")).alias("doc_id"),

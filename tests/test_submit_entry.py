@@ -8,7 +8,9 @@ job wiring, verify modes, and resume-rerun behavior from rotting.
 """
 
 import json
+import os
 import runpy
+import subprocess
 import sys
 from pathlib import Path
 
@@ -58,3 +60,28 @@ def test_submit_entry_encode_verify_and_resume(spark, seq_input, tmp_path,
     assert again["processed_buckets"] == 0
     assert again["verify"]["n_mismatch"] == 0
 
+
+def test_submitted_conf_survives_the_engine_confs(tmp_path):
+    """A fresh driver (no JVM yet, as under spark-submit) keeps the value
+    the submit command gave an ENGINE_CONFS key, and still gets the
+    engine's value for the keys the command left unset."""
+    key = "spark.sql.execution.arrow.maxBytesPerBatch"
+    probe = "\n".join([
+        "import runpy, sys",
+        f"sys.argv = ['submit_encode.py', '--output', "
+        f"{str(tmp_path / 'out')!r}, '--job', 'vacuum']",
+        f"runpy.run_path({str(SCRIPT)!r}, run_name='__main__')",
+        "from pyspark.sql import SparkSession",
+        "conf = SparkSession.getActiveSession().conf",
+        f"print(conf.get({key!r}), conf.get("
+        "'spark.hadoop.parquet.page.verify-checksum.enabled'))",
+    ])
+    # pyspark launches its JVM through spark-submit with these arguments,
+    # so the --conf below reaches the driver as a submitted property
+    env = dict(os.environ, PYSPARK_PYTHON=sys.executable,
+               PYSPARK_SUBMIT_ARGS=f"--master local[1] --driver-memory 512m "
+                                   f"--conf {key}=4096 pyspark-shell")
+    run = subprocess.run([sys.executable, "-c", probe], cwd=tmp_path, env=env,
+                         capture_output=True, text=True, timeout=600)
+    assert run.returncode == 0, run.stderr[-3000:]
+    assert run.stdout.split()[-2:] == ["4096", "true"], run.stdout
