@@ -21,6 +21,7 @@ import numpy as np
 import pyarrow as pa
 
 from . import kernels
+from .arrow_np import binary_parts
 from .kernels import CODEC_IDS, _packed_size
 
 
@@ -38,24 +39,11 @@ def _i64(d: np.ndarray, pos: np.ndarray) -> np.ndarray:
     return out.astype(np.int64)
 
 
-def _binary_parts(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
-    """(data bytes as uint8 np array, per-blob start offsets int64[n+1])."""
-    if isinstance(arr, pa.ChunkedArray):
-        arr = arr.combine_chunks()
-    if pa.types.is_large_binary(arr.type):
-        arr = arr.cast(pa.binary())
-    buffers = arr.buffers()
-    offs = np.frombuffer(buffers[1], dtype=np.int32,
-                         count=arr.offset + len(arr) + 1)[arr.offset:]
-    data = np.frombuffer(buffers[2], dtype=np.uint8)
-    return data, offs.astype(np.int64)
-
-
 def header_token_counts(blobs: pa.Array) -> np.ndarray:
     """Each blob's token count as its header states it (u32 at byte 1),
     read without decoding. A blob too short to hold the header counts 0
     tokens: `decode_binary_array` rejects it."""
-    d, boffs = _binary_parts(blobs)
+    d, boffs = binary_parts(blobs)
     starts = boffs[:-1]
     whole = np.diff(boffs) >= 5
     counts = np.zeros(starts.size, dtype=np.int64)
@@ -148,7 +136,7 @@ def decode_binary_array(blocks: pa.Array) -> tuple[np.ndarray, np.ndarray]:
     the blob is known to be long enough to hold it."""
     if blocks.null_count:
         raise ValueError("null block rows are not decodable")
-    d, boffs = _binary_parts(blocks)
+    d, boffs = binary_parts(blocks)
     n = boffs.size - 1
     if n == 0:
         return np.empty(0, dtype=np.int32), np.zeros(1, dtype=np.int64)

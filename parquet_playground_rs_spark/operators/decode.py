@@ -28,7 +28,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions import batch_decode, kernels
+from ..functions import arrow_np, batch_decode, kernels
 
 # Most tokens one output batch of a decode map carries (2 MiB of int32,
 # twice the 1 MiB input cap), unless one row alone holds more. On
@@ -58,10 +58,10 @@ def _block_offsets(batch: pa.RecordBatch) -> tuple[pa.Array, np.ndarray]:
     block = batch.column("block")
     if block.null_count:
         raise ValueError("null block rows are not decodable")
-    offsets = block.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-    offsets -= offsets[0]
-    n_chunks = batch.column("n_chunks").to_numpy(zero_copy_only=False)
-    if (np.diff(offsets) != n_chunks).any():
+    offsets = arrow_np.list_offsets(block)
+    n_chunks = batch.column("n_chunks")
+    if n_chunks.null_count or (
+            np.diff(offsets) != arrow_np.numeric_values(n_chunks)).any():
         raise ValueError(
             "block count does not match n_chunks: the encoded table lost "
             "or gained blobs")
@@ -92,10 +92,11 @@ def _decoded_batch(batch: pa.RecordBatch, values: np.ndarray,
     if offsets[-1] > 2**31 - 1:  # an Arrow batch never carries >2^31 values
         raise ValueError("batch too large for int32 list offsets")
     tokens = pa.ListArray.from_arrays(
-        pa.array(offsets, type=pa.int32()), pa.array(values, type=pa.int32()))
+        arrow_np.from_numpy(offsets, pa.int32()),
+        arrow_np.from_numpy(values, pa.int32()))
     return pa.RecordBatch.from_arrays(
         [batch.column("doc_id"), batch.column("source"), tokens,
-         pa.array(np.diff(offsets), type=pa.int32())],
+         arrow_np.from_numpy(np.diff(offsets), pa.int32())],
         schema=_DECODED_ARROW_SCHEMA)
 
 

@@ -31,7 +31,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions import kernels
+from ..functions import arrow_np, kernels
 
 DEFAULT_CHUNK = 16384          # max tokens per encoded block
 DEFAULT_SALT_BUCKETS = 1024    # salt space for the repartition key
@@ -66,18 +66,24 @@ ENCODED_DDL = (
     "dict_size:int, input_bytes:bigint, output_bytes:bigint>"
 )
 
+# the row-level codec column is this array taken at each row's codec id
+_CODEC_NAME_ARRAY = arrow_np.string_array(
+    [kernels.CODEC_NAMES[i] for i in range(len(kernels.CODEC_NAMES))])
+
 
 def list_to_numpy(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
-    """ListArray -> (int32 values, int64 row offsets), zero-copy where possible."""
+    """ListArray -> (int32 values, int64 row offsets from 0) of exactly
+    the rows of `arr`, zero-copy for int32 tokens; a slice reads only
+    its own tokens."""
     if arr.null_count:
         raise ValueError("tokens column must not contain null rows")
     if pa.types.is_large_list(arr.type):
         arr = arr.cast(pa.list_(pa.int32()))
-    offsets = arr.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-    values = arr.values.to_numpy(zero_copy_only=False)
-    if values.dtype != np.dtype("<i4"):
-        values = kernels.as_int32(values)
-    return values, offsets
+    offsets = arrow_np.list_offsets(arr)
+    flat = arr.flatten()
+    if flat.null_count:
+        raise TypeError("tokens must be integers, got a null token")
+    return kernels.as_int32(arrow_np.numeric_values(flat)), offsets
 
 
 def _split_offsets(offsets: np.ndarray, chunk_size: int):
@@ -110,22 +116,24 @@ def _document_columns(codec_ids: np.ndarray, s: dict, aux: dict,
     n_tok = np.add.reduceat(s["n_tok"], first)
     dict_size = aux["dict_size"][first]
     cols = {
-        "n_tok": pa.array(n_tok, type=pa.int32()),
-        "min_val": pa.array(np.minimum.reduceat(s["min"], first),
-                            type=pa.int64()),
-        "max_val": pa.array(np.maximum.reduceat(s["max"], first),
-                            type=pa.int64()),
+        "n_tok": arrow_np.from_numpy(n_tok, pa.int32()),
+        "min_val": arrow_np.from_numpy(np.minimum.reduceat(s["min"], first),
+                                       pa.int64()),
+        "max_val": arrow_np.from_numpy(np.maximum.reduceat(s["max"], first),
+                                       pa.int64()),
         # exact cardinality is only computed where the dict codec ran;
         # everywhere else it is honestly NULL (a 0 would be a lie the
         # lineage consumers can't distinguish from "empty")
-        "n_unique": pa.array(dict_size, type=pa.int32(),
-                             mask=multi | (dict_size == 0)),
-        "n_runs": pa.array(s["n_runs"][first], type=pa.int32(), mask=multi),
-        "bit_width": pa.array(aux["bw"][first], type=pa.int32(), mask=multi),
-        "dict_size": pa.array(dict_size, type=pa.int32(), mask=multi),
-        "input_bytes": pa.array(4 * n_tok, type=pa.int64()),
-        "output_bytes": pa.array(np.add.reduceat(aux["blob_bytes"], first),
-                                 type=pa.int64()),
+        "n_unique": arrow_np.from_numpy(dict_size, pa.int32(),
+                                        mask=multi | (dict_size == 0)),
+        "n_runs": arrow_np.from_numpy(s["n_runs"][first], pa.int32(),
+                                      mask=multi),
+        "bit_width": arrow_np.from_numpy(aux["bw"][first], pa.int32(),
+                                         mask=multi),
+        "dict_size": arrow_np.from_numpy(dict_size, pa.int32(), mask=multi),
+        "input_bytes": arrow_np.from_numpy(4 * n_tok, pa.int64()),
+        "output_bytes": arrow_np.from_numpy(
+            np.add.reduceat(aux["blob_bytes"], first), pa.int64()),
     }
     meta = pa.StructArray.from_arrays(
         [cols[name] for name, _ in META_FIELDS],
@@ -158,18 +166,17 @@ def encode_arrow_batch(batch: pa.RecordBatch,
         [None, pa.py_buffer(blob_offsets.astype(np.int32)),
          pa.py_buffer(data)])
     block = pa.ListArray.from_arrays(
-        pa.array(np.concatenate(([0], np.cumsum(n_chunks))), type=pa.int32()),
+        arrow_np.from_numpy(np.concatenate(([0], np.cumsum(n_chunks))),
+                            pa.int32()),
         blobs)
     doc_codec, meta = _document_columns(codec_ids, s, aux, n_chunks)
-    names = pa.array([kernels.CODEC_NAMES[i]
-                      for i in range(len(kernels.CODEC_NAMES))],
-                     type=pa.string())
-    codecs = pc.take(names, pa.array(doc_codec, type=pa.int32()))
+    codecs = pc.take(_CODEC_NAME_ARRAY,
+                     arrow_np.from_numpy(doc_codec, pa.int32()))
     return pa.RecordBatch.from_arrays(
         [
             batch.column("doc_id"),
             batch.column("source"),
-            pa.array(n_chunks, type=pa.int32()),
+            arrow_np.from_numpy(n_chunks, pa.int32()),
             codecs,
             block,
             meta,

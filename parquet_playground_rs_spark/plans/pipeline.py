@@ -435,28 +435,37 @@ def _encode_with_bucket(docs: DataFrame, basemap: dict[str, int],
                         chunk_size: int) -> DataFrame:
     """Encode (doc_id, source, tokens, _file) documents and append each
     row's bucket: ``basemap[_file]``, `_file` being the basename of the
-    row's input file. The lookup runs inside the Arrow map, once per
-    distinct name per batch (a batch spans a few files), so no join
+    row's input file (see `_bucket_map`)."""
+
+    def mapper(batches):
+        return _bucket_map(batches, basemap, chunk_size)
+
+    return docs.mapInArrow(mapper, _COMMIT_DDL)
+
+
+def _bucket_map(batches, basemap: dict[str, int], chunk_size: int):
+    """`_encode_with_bucket`'s Arrow map. The bucket lookup runs once per
+    distinct file name per batch (a batch spans a few files), so no join
     brings the bucket in; a name missing from `basemap` raises instead
     of mis-bucketing the row."""
+    import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    def mapper(batches):
-        for batch in batches:
-            if not batch.num_rows:
-                continue
-            files = pc.dictionary_encode(batch.column("_file"))
-            try:
-                ids = [basemap[f] for f in files.dictionary.to_pylist()]
-            except KeyError as e:
-                raise ValueError("file outside this commit group's plan: "
-                                 f"{e.args[0]}") from None
-            out = enc.encode_arrow_batch(batch, chunk_size=chunk_size)
-            yield out.append_column(
-                "bucket", pc.take(pa.array(ids, pa.int32()), files.indices))
+    from ..functions import arrow_np
 
-    return docs.mapInArrow(mapper, _COMMIT_DDL)
+    for batch in batches:
+        if not batch.num_rows:
+            continue
+        files = pc.dictionary_encode(batch.column("_file"))
+        try:
+            ids = [basemap[f] for f in files.dictionary.to_pylist()]
+        except KeyError as e:
+            raise ValueError("file outside this commit group's plan: "
+                             f"{e.args[0]}") from None
+        out = enc.encode_arrow_batch(batch, chunk_size=chunk_size)
+        buckets = arrow_np.from_numpy(np.array(ids, np.int32), pa.int32())
+        yield out.append_column("bucket", pc.take(buckets, files.indices))
 
 
 # ---------------------------------------------------------------------------

@@ -252,6 +252,13 @@ def test_connected_components_fewer_jobs_than_eager_loop(spark):
 
 # ------------------------------------------------- decode cache lifecycle
 
+def _persistent_rdd_ids(spark) -> set[int]:
+    """Ids of the RDDs the context holds persisted. The JVM keeps them in
+    a weak-valued map, so a GC can drop old ones: compare id sets, not
+    the map's size."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
 def test_verify_job_releases_decode_cache(spark, tmp_path):
     """verify_job leaves no cached blocks behind in the session."""
     from parquet_playground_rs_spark.plans import pipeline
@@ -263,11 +270,10 @@ def test_verify_job_releases_decode_cache(spark, tmp_path):
     out = str(tmp_path / "pipe")
     pipeline.run_encode_job_files(spark, src, out, n_buckets=4,
                                   chunk_size=1024)
-    jsc = spark.sparkContext._jsc.sc()
-    before = jsc.getPersistentRDDs().size()
+    before = _persistent_rdd_ids(spark)
     verdict = pipeline.verify_job(spark, seq, out)
     assert verdict["n_mismatch"] == 0
-    assert jsc.getPersistentRDDs().size() == before
+    assert _persistent_rdd_ids(spark) - before == set()
 
 
 def test_pipeline_concurrent_commits_match_sequential(spark, tmp_path):
