@@ -4,11 +4,12 @@ Input: a pyarrow BinaryArray of self-describing blobs (kernels.py format).
 Output: (values int32 concatenated, offsets int64) for the whole batch.
 
 Headers are parsed with vectorized byte composition (no struct.unpack per
-row), then rows group by (codec, bit width): each group pays ONE word-wise
-unpack, with rows padded to byte-aligned regions exactly mirroring
-batch_encode._group_pack. FSST rows go one by one through the reference
-kernel (kernels.decode): an FSST blob holds up to a whole chunk of
-tokens, so the per-call overhead is small next to its work.
+row). Each codec's packed blocks (two per RLE row) go through one reader,
+``_unpack_blocks``, which groups them by bit width: each width pays ONE
+word-wise unpack, with blocks padded to byte-aligned regions exactly
+mirroring batch_encode._group_pack. FSST rows go one by one through the
+reference kernel (kernels.decode): an FSST blob holds up to a whole chunk
+of tokens, so the per-call overhead is small next to its work.
 
 Every blob's length is checked against the closed form of its header
 before its payload is read, so a truncated, extended or miscounted blob
@@ -37,6 +38,21 @@ def _i64(d: np.ndarray, pos: np.ndarray) -> np.ndarray:
     for k in range(8):
         out |= d[pos + k].astype(np.uint64) << np.uint64(8 * k)
     return out.astype(np.int64)
+
+
+def _block_header(d: np.ndarray, pos: np.ndarray):
+    """(count, ref, width) of the packed blocks whose headers start at
+    d[pos] (the kernels._pack_block layout)."""
+    return _u32(d, pos), _i64(d, pos + 4), d[pos + 12].astype(np.int64)
+
+
+def _scatter(out: np.ndarray, firsts: np.ndarray, counts: np.ndarray,
+             vals: np.ndarray) -> None:
+    """Place the back-to-back segments of `vals` at out[firsts[i] :
+    firsts[i] + counts[i]]."""
+    pref = np.cumsum(counts) - counts
+    out[np.arange(int(counts.sum())) + np.repeat(firsts - pref, counts)] = \
+        vals.astype(out.dtype, copy=False)
 
 
 def header_token_counts(blobs: pa.Array) -> np.ndarray:
@@ -115,6 +131,25 @@ def _unpack_group(payload_bytes: np.ndarray, counts: np.ndarray,
     return vals.reshape(-1)[keep_idx].astype(np.int64) + np.repeat(refs, counts)
 
 
+def _unpack_blocks(d: np.ndarray, pos: np.ndarray, counts: np.ndarray,
+                   refs: np.ndarray, widths: np.ndarray,
+                   out: np.ndarray | None = None,
+                   out_first: np.ndarray | None = None) -> np.ndarray:
+    """Unpack the packed blocks whose headers start at d[pos] (payload at
+    +13), given their header fields: block i's values land at
+    out[out_first[i] : out_first[i] + counts[i]]. One _unpack_group per
+    width. Without `out`, returns the blocks' values back to back (int64).
+    """
+    if out is None:
+        out = np.empty(int(counts.sum()), dtype=np.int64)
+        out_first = np.cumsum(counts) - counts
+    for w in np.unique(widths):
+        m = widths == w
+        _scatter(out, out_first[m], counts[m],
+                 _unpack_group(d, counts[m], refs[m], int(w), pos[m] + 13))
+    return out
+
+
 _TOKEN_CODEC_IDS = np.array(
     [CODEC_IDS[c] for c in kernels.TOKEN_CODECS], dtype=np.int64)
 
@@ -155,13 +190,6 @@ def decode_binary_array(blocks: pa.Array) -> tuple[np.ndarray, np.ndarray]:
     out_offsets = np.concatenate(([0], np.cumsum(n_tok)))
     out = np.empty(int(out_offsets[-1]), dtype=np.int32)
 
-    def put(rows: np.ndarray, vals: np.ndarray) -> None:
-        counts = n_tok[rows]
-        total = int(counts.sum())
-        pref = np.concatenate(([0], np.cumsum(counts)))[:-1]
-        idx = np.arange(total) + np.repeat(out_offsets[rows] - pref, counts)
-        out[idx] = vals.astype(np.int32, copy=False)
-
     def codec_rows(name: str) -> np.ndarray:
         return np.flatnonzero((codec == CODEC_IDS[name]) & (n_tok > 0))
 
@@ -174,52 +202,36 @@ def decode_binary_array(blocks: pa.Array) -> tuple[np.ndarray, np.ndarray]:
         total = int(counts.sum())
         pref4 = np.concatenate(([0], np.cumsum(counts * 4)))[:-1]
         src = np.arange(total * 4) + np.repeat(starts[rows] + 5 - pref4, counts * 4)
-        put(rows, np.ascontiguousarray(d[src]).view("<i4"))
+        _scatter(out, out_offsets[rows], counts,
+                 np.ascontiguousarray(d[src]).view("<i4"))
 
-    # ---- bitpack: subheader [I n][q ref][B w] at +5, payload at +18
+    # ---- bitpack: one packed block at +5
     rows = codec_rows("bitpack")
     if rows.size:
         s, ln, counts = starts[rows], blen[rows], n_tok[rows]
         _require(ln >= 18, rows, "bitpack subheader truncated")
-        widths = d[s + 17].astype(np.int64)
-        _require((_u32(d, s + 5) == counts)
-                 & (ln == 5 + _packed_size(counts, widths)), rows,
-                 "bitpack length or count disagrees with its header")
-        refs = _i64(d, s + 9)
-        for w in np.unique(widths):
-            g = rows[widths == w]
-            gr = refs[widths == w]
-            vals = _unpack_group(d, n_tok[g], gr, int(w), starts[g] + 18)
-            put(g, vals)
+        cnt, refs, widths = _block_header(d, s + 5)
+        _require((cnt == counts) & (ln == 5 + _packed_size(counts, widths)),
+                 rows, "bitpack length or count disagrees with its header")
+        _unpack_blocks(d, s + 5, counts, refs, widths, out, out_offsets[rows])
 
-    # ---- fordelta: [q first] at +5, packed block at +13 -> payload at +26
+    # ---- fordelta: [q first] at +5, packed deltas at +13
     rows = codec_rows("fordelta")
     if rows.size:
         s, ln, counts = starts[rows], blen[rows], n_tok[rows]
         _require(ln >= 26, rows, "fordelta subheader truncated")
-        widths = d[s + 25].astype(np.int64)
-        _require((_u32(d, s + 13) == counts - 1)
+        cnt, drefs, widths = _block_header(d, s + 13)
+        _require((cnt == counts - 1)
                  & (ln == 13 + _packed_size(counts - 1, widths)), rows,
                  "fordelta length or count disagrees with its header")
-        firsts = _i64(d, s + 5)
-        drefs = _i64(d, s + 17)
-        for w in np.unique(widths):
-            m = widths == w
-            g = rows[m]
-            gc = counts[m]
-            deltas = _unpack_group(d, gc - 1, drefs[m], int(w), starts[g] + 26)
-            # segmented cumsum: ext = [first, deltas...] per row
-            total = int(gc.sum())
-            ext = np.empty(total, dtype=np.int64)
-            row_off = np.concatenate(([0], np.cumsum(gc)))
-            first_pos = row_off[:-1]
-            mask = np.ones(total, dtype=bool)
-            mask[first_pos] = False
-            ext[first_pos] = firsts[m]
-            ext[mask] = deltas
-            g_cum = np.cumsum(ext)
-            corr = g_cum[first_pos] - firsts[m]
-            put(g, g_cum - np.repeat(corr, gc))
+        # segmented cumsum over ext = [first, deltas...] per row
+        first_pos = np.cumsum(counts) - counts
+        ext = np.empty(int(counts.sum()), dtype=np.int64)
+        ext[first_pos] = _i64(d, s + 5)
+        _unpack_blocks(d, s + 13, counts - 1, drefs, widths, ext, first_pos + 1)
+        cum = np.cumsum(ext)
+        corr = cum[first_pos] - ext[first_pos]
+        _scatter(out, out_offsets[rows], counts, cum - np.repeat(corr, counts))
 
     # ---- rle: two packed blocks (run values, run lengths) at +5
     rows = codec_rows("rle")
@@ -227,40 +239,20 @@ def decode_binary_array(blocks: pa.Array) -> tuple[np.ndarray, np.ndarray]:
         s, ln = starts[rows], blen[rows]
         _require(ln >= 18, rows, "rle subheader truncated")
         p = s + 5
-        r_cnt = _u32(d, p)
-        vw = d[p + 12].astype(np.int64)
-        vbytes = (r_cnt * vw + 7) // 8
-        _require(ln >= 31 + vbytes, rows, "rle run-length block truncated")
-        q = p + 13 + vbytes           # second packed block
-        lw = d[q + 12].astype(np.int64)
-        _require((_u32(d, q) == r_cnt)
-                 & (ln == 18 + vbytes + _packed_size(r_cnt, lw)), rows,
-                 "rle length or run count disagrees with its header")
-        vrefs = _i64(d, p + 4)
-        lrefs = _i64(d, q + 4)
-        # decode runs into arenas ordered by row
+        r_cnt, vrefs, vw = _block_header(d, p)
+        q = p + _packed_size(r_cnt, vw)  # second packed block
+        _require(ln >= q - s + 13, rows, "rle run-length block truncated")
+        l_cnt, lrefs, lw = _block_header(d, q)
+        _require((l_cnt == r_cnt) & (ln == q - s + _packed_size(r_cnt, lw)),
+                 rows, "rle length or run count disagrees with its header")
+        run_vals = _unpack_blocks(d, p, r_cnt, vrefs, vw)
+        run_lens = _unpack_blocks(d, q, r_cnt, lrefs, lw)
         run_off = np.concatenate(([0], np.cumsum(r_cnt)))
-        run_vals = np.empty(int(run_off[-1]), dtype=np.int64)
-        run_lens = np.empty(int(run_off[-1]), dtype=np.int64)
-
-        def scatter_runs(dest, groups_w, refs_all, pay_starts):
-            for w in np.unique(groups_w):
-                m = groups_w == w
-                vals = _unpack_group(d, r_cnt[m], refs_all[m], int(w), pay_starts[m])
-                counts = r_cnt[m]
-                total = int(counts.sum())
-                idx = np.repeat(run_off[:-1][m], counts) + (
-                    np.arange(total)
-                    - np.repeat(np.concatenate(([0], np.cumsum(counts)))[:-1], counts)
-                )
-                dest[idx] = vals
-
-        scatter_runs(run_vals, vw, vrefs, p + 13)
-        scatter_runs(run_lens, lw, lrefs, q + 13)
         len_sum = np.concatenate(([0], np.cumsum(run_lens)))[run_off]
         _require(np.diff(len_sum) == n_tok[rows], rows,
                  "rle run lengths do not sum to the token count")
-        put(rows, np.repeat(run_vals, run_lens))
+        _scatter(out, out_offsets[rows], n_tok[rows],
+                 np.repeat(run_vals, run_lens))
 
     # ---- dict: [I dict_size] at +5, dict vals, packed codes
     rows = codec_rows("dict")
@@ -272,9 +264,8 @@ def decode_binary_array(blocks: pa.Array) -> tuple[np.ndarray, np.ndarray]:
         _require(ln >= 22 + 4 * dsz, rows, "dict code block truncated")
         dict_starts = p + 4
         code_block = dict_starts + 4 * dsz
-        crefs = _i64(d, code_block + 4)
-        cw = d[code_block + 12].astype(np.int64)
-        _require((_u32(d, code_block) == counts) & (crefs >= 0)
+        cnt, crefs, cw = _block_header(d, code_block)
+        _require((cnt == counts) & (crefs >= 0)
                  & (ln == 9 + 4 * dsz + _packed_size(counts, cw)), rows,
                  "dict length or code count disagrees with its header")
         # dict arena in row order
@@ -285,14 +276,11 @@ def decode_binary_array(blocks: pa.Array) -> tuple[np.ndarray, np.ndarray]:
             - np.repeat(np.concatenate(([0], np.cumsum(dsz * 4)))[:-1], dsz * 4)
         )
         darena = np.ascontiguousarray(d[dsrc]).view("<i4").astype(np.int64)
-        for w in np.unique(cw):
-            m = cw == w
-            g = rows[m]
-            gc = counts[m]
-            codes = _unpack_group(d, gc, crefs[m], int(w), code_block[m] + 13)
-            _require(np.maximum.reduceat(codes, np.cumsum(gc) - gc) < dsz[m],
-                     g, "dict code outside its dictionary")
-            put(g, darena[codes + np.repeat(darena_off[:-1][m], gc)])
+        codes = _unpack_blocks(d, code_block, counts, crefs, cw)
+        _require(np.maximum.reduceat(codes, np.cumsum(counts) - counts) < dsz,
+                 rows, "dict code outside its dictionary")
+        _scatter(out, out_offsets[rows], counts,
+                 darena[codes + np.repeat(darena_off[:-1], counts)])
 
     # ---- fsst: the reference kernel, one blob at a time; it raises when
     # a blob's length or token count disagrees with its header

@@ -8,11 +8,13 @@ a page of arrays:
    boundary-corrected global diffs — one numpy call per statistic per batch;
 2. codec choice for all rows at once from closed-form size formulas
    (same math as selector.predicted_sizes);
-3. group rows by (codec, bit-width) and bit-pack each group in ONE
-   ``np.packbits`` scatter — rows are byte-aligned inside the group buffer
-   so per-row blobs are just slices;
-4. blob assembly = per-row header + slice concatenation (tiny constant
-   cost, no numpy per row).
+3. every packed block of the batch (bitpack values, fordelta deltas, RLE
+   run values and run lengths, dict codes) goes through one writer,
+   ``_write_blocks``: blocks of one bit width pack together, whatever their
+   codec, in ONE word-wise ``_group_pack``, each block byte-aligned so its
+   payload is a slice of the group buffer;
+4. blob assembly = vectorized header byte scatters + one fancy-index copy
+   per bit width into one buffer (no numpy call per row).
 
 Output blobs use the same self-describing format as functions/kernels.py —
 ``kernels.decode`` reads them unchanged; that equivalence is the test gate
@@ -129,13 +131,12 @@ def choose_codecs(s: dict[str, np.ndarray]) -> tuple[np.ndarray, dict[str, np.nd
     r = s["n_runs"]
     lbw = _bits_needed_arr(n_tok)  # run-length width upper bound
 
-    packed = lambda n, w: 13 + (n * w + 7) // 8  # noqa: E731
     size_plain = HEADER + 4 * n_tok
-    size_bitpack = HEADER + packed(n_tok, bw)
+    size_bitpack = HEADER + _packed_size(n_tok, bw)
     size_fordelta = np.where(
-        n_tok > 0, HEADER + 8 + packed(np.maximum(n_tok - 1, 0), dbw), size_plain
-    )
-    size_rle = HEADER + packed(r, bw) + packed(r, lbw)
+        n_tok > 0, HEADER + 8 + _packed_size(np.maximum(n_tok - 1, 0), dbw),
+        size_plain)
+    size_rle = HEADER + _packed_size(r, bw) + _packed_size(r, lbw)
 
     sizes = np.stack([size_plain, size_bitpack, size_fordelta, size_rle])
     order = np.array([CODEC_IDS["plain"], CODEC_IDS["bitpack"],
@@ -290,6 +291,42 @@ def _copy_into(data: np.ndarray, dst_pos: np.ndarray, src: np.ndarray,
     data[r + np.repeat(dst_off, nbytes)] = src[r + np.repeat(src_off, nbytes)]
 
 
+def _write_blocks(data: np.ndarray, blocks: list) -> None:
+    """Write packed blocks ``[u32 count][i64 ref][u8 width][bits]`` (the
+    layout of kernels._pack_block) into `data`.
+
+    Each entry of `blocks` is (pos, src, first, count, ref, width), one
+    array element per block: block i's header starts at data[pos[i]] and
+    its payload packs src[first[i] : first[i] + count[i]] - ref[i] at
+    width[i] bits. Blocks of one width pack together whatever entry they
+    come from: one _group_pack and one copy per width.
+    """
+    pos, first, count, ref, width = (
+        np.concatenate([b[k] for b in blocks]) for k in (0, 2, 3, 4, 5))
+    entry = np.repeat(np.arange(len(blocks)), [b[0].size for b in blocks])
+    _put_u32(data, pos, count)
+    _put_i64(data, pos + 4, ref)
+    data[pos + 12] = width.astype(np.uint8)
+    for w in np.unique(width[width > 0]):
+        g = np.flatnonzero(width == w)
+        rels = []
+        for e in np.unique(entry[g]):
+            src, ge = blocks[e][1], g[entry[g] == e]
+            # subtract in the source dtype, wrapping: (v - ref) mod 2^bits
+            # is the true relative value whenever it fits w bits, so an
+            # int32 source stays 4-byte end to end instead of paying an
+            # int64 temp per value
+            rel = np.subtract(_concat_rows(src, first[ge], count[ge]),
+                              np.repeat(ref[ge].astype(src.dtype), count[ge]),
+                              dtype=src.dtype).view(f"u{src.itemsize}")
+            rels.append(rel.astype(np.uint32 if w <= 32 else np.uint64,
+                                   copy=False))
+        buf, nbytes, boff = _group_pack(
+            rels[0] if len(rels) == 1 else np.concatenate(rels),
+            count[g], int(w))
+        _copy_into(data, pos[g] + 13, buf, boff, nbytes)
+
+
 def encode_batch_columnar(values: np.ndarray, offsets: np.ndarray):
     """Encode every row of a batch into ONE contiguous blob buffer.
 
@@ -298,10 +335,11 @@ def encode_batch_columnar(values: np.ndarray, offsets: np.ndarray):
     blob_offsets[i+1]], byte-identical to functions/kernels.py per-row blobs.
 
     Fully columnar: headers are written with vectorized byte scatters,
-    payloads with grouped bit-packs + one fancy-index copy per group — zero
-    per-row Python objects (no struct.pack / bytes concat / list-of-bytes),
-    which measured as ~1/3 of encode wall time at 1M rows. The buffer +
-    offsets feed pyarrow BinaryArray.from_buffers zero-copy.
+    packed payloads with one bit-pack + one fancy-index copy per bit width
+    (_write_blocks) — zero per-row Python objects (no struct.pack / bytes
+    concat / list-of-bytes), which measured as ~1/3 of encode wall time at
+    1M rows. The buffer + offsets feed pyarrow BinaryArray.from_buffers
+    zero-copy.
 
     Blob lengths are computed analytically per codec BEFORE assembly; the
     chosen codec's length never exceeds the plain bound because `plain`
@@ -338,7 +376,6 @@ def encode_batch_columnar(values: np.ndarray, offsets: np.ndarray):
 
     # ---- rle run extraction (up front: exact widths fix blob lengths) ----
     rle_rows = np.flatnonzero(codec_ids == RLE)
-    rle_state = None
     if rle_rows.size:
         lens_r = n_tok[rle_rows]
         sel = _concat_rows(values, starts[rle_rows], lens_r)
@@ -349,15 +386,14 @@ def encode_batch_columnar(values: np.ndarray, offsets: np.ndarray):
         if total > 1:
             is_start[1:] |= sel[1:] != sel[:-1]
         start_pos = np.flatnonzero(is_start)
-        run_vals = sel[start_pos].astype(np.int64)
+        run_vals = sel[start_pos]
         run_lens = np.diff(np.concatenate((start_pos, [total])))
-        runs_per_row = s["n_runs"][rle_rows]
-        row_run_off = np.concatenate(([0], np.cumsum(runs_per_row)))
-        lmin = np.minimum.reduceat(run_lens, row_run_off[:-1])
-        lmax = np.maximum.reduceat(run_lens, row_run_off[:-1])
+        runs = s["n_runs"][rle_rows]
+        run_first = np.concatenate(([0], np.cumsum(runs)))[:-1]
+        lmin = np.minimum.reduceat(run_lens, run_first)
+        lmax = np.maximum.reduceat(run_lens, run_first)
         vw = aux["bw"][rle_rows]
         lw = _bits_needed_arr(lmax - lmin)
-        rle_state = (run_vals, run_lens, runs_per_row, row_run_off, lmin, vw, lw)
 
     # ---- analytic per-row blob lengths ----
     L = np.empty(n, dtype=np.int64)
@@ -368,9 +404,7 @@ def encode_batch_columnar(values: np.ndarray, offsets: np.ndarray):
     m = codec_ids == FORDELTA
     L[m] = HEADER + 8 + _packed_size(n_tok[m] - 1, aux["dbw"][m])
     if rle_rows.size:
-        _, _, runs_per_row, _, _, vw, lw = rle_state
-        L[rle_rows] = (HEADER + _packed_size(runs_per_row, vw)
-                       + _packed_size(runs_per_row, lw))
+        L[rle_rows] = HEADER + _packed_size(runs, vw) + _packed_size(runs, lw)
     if dict_rows.size:
         L[dict_rows] = dict_state[6][dict_state[5]]
 
@@ -388,129 +422,55 @@ def encode_batch_columnar(values: np.ndarray, offsets: np.ndarray):
                 codec_ids[i] = FSST
                 L[i] = len(trial)
 
-    # The FSST pass may have flipped rows that were RLE when rle_state was
-    # built; drop them from the RLE assembly state or the full RLE payload
-    # would overflow the shrunken blob slot into the next row's bytes.
-    if rle_rows.size and fsst_blobs:
-        keep = codec_ids[rle_rows] == RLE
-        if not keep.all():
-            run_vals, run_lens, runs_per_row, row_run_off, lmin, vw, lw = rle_state
-            kept = np.flatnonzero(keep)
-            run_starts = row_run_off[:-1]
-            run_vals = _concat_rows(run_vals, run_starts[kept], runs_per_row[kept])
-            run_lens = _concat_rows(run_lens, run_starts[kept], runs_per_row[kept])
-            runs_per_row = runs_per_row[kept]
-            row_run_off = np.concatenate(([0], np.cumsum(runs_per_row)))
-            rle_state = (run_vals, run_lens, runs_per_row, row_run_off,
-                         lmin[kept], vw[kept], lw[kept])
-            rle_rows = rle_rows[kept]
-
     # ---- assembly into one buffer ----
     blob_offsets = np.concatenate(([0], np.cumsum(L)))
     data = np.zeros(int(blob_offsets[-1]), dtype=np.uint8)
     off = blob_offsets[:-1]
     data[off] = codec_ids.astype(np.uint8)
     _put_u32(data, off + 1, n_tok)
-    raw = values.view(np.uint8)
 
     rows = np.flatnonzero((codec_ids == PLAIN) & (n_tok > 0))
     if rows.size:
-        _copy_into(data, off[rows] + HEADER, raw, starts[rows] * 4,
-                   4 * n_tok[rows])
+        _copy_into(data, off[rows] + HEADER, values.view(np.uint8),
+                   starts[rows] * 4, 4 * n_tok[rows])
 
     rows = np.flatnonzero(codec_ids == BITPACK)
-    if rows.size:
-        w_arr = aux["bw"][rows]
-        _put_u32(data, off[rows] + 5, n_tok[rows])
-        _put_i64(data, off[rows] + 9, s["min"][rows])
-        data[off[rows] + 17] = w_arr.astype(np.uint8)
-        for w in np.unique(w_arr):
-            grp = rows[w_arr == w]
-            lens = n_tok[grp]
-            sel = _concat_rows(values, starts[grp], lens)
-            # int32 wrap-around subtract: (v - min) mod 2^32 equals the
-            # true relative value for any int32 pair (span <= 2^32-1), so
-            # the u32 view is exact — and the whole rel path stays 4-byte
-            # instead of paying an int64 temp per token.
-            m32 = s["min"][grp].astype(np.int32)
-            rel = np.subtract(sel, np.repeat(m32, lens),
-                              dtype=np.int32).view(np.uint32)
-            buf, nbytes, boff = _group_pack(rel, lens, int(w))
-            if int(w):
-                _copy_into(data, off[grp] + 18, buf, boff, nbytes)
+    blocks = [(off[rows] + HEADER, values, starts[rows], n_tok[rows],
+               s["min"][rows], aux["bw"][rows])]
 
     rows = np.flatnonzero(codec_ids == FORDELTA)
-    if rows.size:
-        w_arr = aux["dbw"][rows]
-        _put_i64(data, off[rows] + 5, values[starts[rows]].astype(np.int64))
-        _put_u32(data, off[rows] + 13, n_tok[rows] - 1)
-        _put_i64(data, off[rows] + 17, s["dmin"][rows])
-        data[off[rows] + 25] = w_arr.astype(np.uint8)
-        for w in np.unique(w_arr):
-            grp = rows[w_arr == w]
-            lens = n_tok[grp]
-            dl = lens - 1
-            sel = _concat_rows(values, starts[grp], lens).astype(np.int64)
-            ro = np.concatenate(([0], np.cumsum(lens)))
-            d_all = np.diff(sel)
-            keep = np.ones(d_all.size, dtype=bool)
-            keep[ro[1:-1] - 1] = False  # drop inter-row diffs
-            deltas = d_all[keep]
-            rel = (deltas - np.repeat(s["dmin"][grp], dl)).astype(np.uint64)
-            buf, nbytes, boff = _group_pack(rel, dl, int(w))
-            if int(w):
-                _copy_into(data, off[grp] + 26, buf, boff, nbytes)
+    lens = n_tok[rows]
+    _put_i64(data, off[rows] + HEADER, values[starts[rows]])
+    deltas = np.diff(_concat_rows(values, starts[rows], lens).astype(np.int64))
+    blocks.append((off[rows] + HEADER + 8, deltas,
+                   np.cumsum(lens) - lens, lens - 1, s["dmin"][rows],
+                   aux["dbw"][rows]))
 
     if rle_rows.size:
-        run_vals, run_lens, runs_per_row, row_run_off, lmin, vw, lw = rle_state
-        p = off[rle_rows] + 5
-        _put_u32(data, p, runs_per_row)
-        _put_i64(data, p + 4, s["min"][rle_rows])
-        data[p + 12] = vw.astype(np.uint8)
-        q = p + 13 + (runs_per_row * vw + 7) // 8
-        _put_u32(data, q, runs_per_row)
-        _put_i64(data, q + 4, lmin)
-        data[q + 12] = lw.astype(np.uint8)
-        for w in np.unique(vw):
-            g = np.flatnonzero(vw == w)
-            gv = _concat_rows(run_vals, row_run_off[:-1][g], runs_per_row[g])
-            rel = (gv - np.repeat(s["min"][rle_rows[g]],
-                                  runs_per_row[g])).astype(np.uint64)
-            buf, nbytes, boff = _group_pack(rel, runs_per_row[g], int(w))
-            if int(w):
-                _copy_into(data, p[g] + 13, buf, boff, nbytes)
-        for w in np.unique(lw):
-            g = np.flatnonzero(lw == w)
-            gl = _concat_rows(run_lens, row_run_off[:-1][g], runs_per_row[g])
-            rel = (gl - np.repeat(lmin[g], runs_per_row[g])).astype(np.uint64)
-            buf, nbytes, boff = _group_pack(rel, runs_per_row[g], int(w))
-            if int(w):
-                _copy_into(data, q[g] + 13, buf, boff, nbytes)
+        # the FSST trial may have taken rows from RLE: drop their blocks
+        keep = codec_ids[rle_rows] == RLE
+        rows, runs, run_first = rle_rows[keep], runs[keep], run_first[keep]
+        vw, lw = vw[keep], lw[keep]
+        p = off[rows] + HEADER
+        blocks.append((p, run_vals, run_first, runs, s["min"][rows], vw))
+        blocks.append((p + _packed_size(runs, vw), run_lens, run_first, runs,
+                       lmin[keep], lw))
 
     dict_size_col = np.zeros(n, dtype=np.int64)
     if dict_rows.size:
         uniq_vals, u_per_row, codes, cw, lens, win_idx, _ = dict_state
         uoff = np.concatenate(([0], np.cumsum(u_per_row)))
-        coff = np.concatenate(([0], np.cumsum(lens)))
         dsz = u_per_row[win_idx]
         dict_size_col[dict_rows] = dsz
-        p = off[dict_rows] + 5
+        p = off[dict_rows] + HEADER
         _put_u32(data, p, dsz)
         _copy_into(data, p + 4, uniq_vals.view(np.uint8),
                    uoff[win_idx] * 4, 4 * dsz)
-        cb = p + 4 + 4 * dsz
-        _put_u32(data, cb, lens[win_idx])
-        _put_i64(data, cb + 4, np.zeros(win_idx.size, dtype=np.int64))
-        cww = cw[win_idx]
-        data[cb + 12] = cww.astype(np.uint8)
-        for w in np.unique(cww):
-            g = np.flatnonzero(cww == w)
-            j = win_idx[g]
-            sub_codes = _concat_rows(codes, coff[j], lens[j])
-            buf, nbytes, boff = _group_pack(sub_codes.astype(np.uint64),
-                                            lens[j], int(w))
-            if int(w):
-                _copy_into(data, cb[g] + 13, buf, boff, nbytes)
+        blocks.append((p + 4 + 4 * dsz, codes,
+                       (np.cumsum(lens) - lens)[win_idx], lens[win_idx],
+                       np.zeros(win_idx.size, dtype=np.int64), cw[win_idx]))
+
+    _write_blocks(data, blocks)
 
     for i, blob in fsst_blobs.items():
         data[blob_offsets[i]: blob_offsets[i] + len(blob)] = \

@@ -105,8 +105,9 @@ def decode_arrow_batch(batch: pa.RecordBatch) -> pa.RecordBatch:
 
     Batch-vectorized (functions/batch_decode.py): every blob of the batch
     decodes in one call (headers parsed with vectorized byte composition,
-    one unpackbits per (codec, width) group), and each document's token
-    offsets are the blob offsets taken at its list offsets.
+    packed blocks unpacked word-wise, one unpack per bit width of each
+    codec's blocks), and each document's token offsets are the blob
+    offsets taken at its list offsets.
     """
     blobs, list_offsets = _block_offsets(batch)
     values, offsets = batch_decode.decode_binary_array(blobs)

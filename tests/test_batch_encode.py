@@ -157,6 +157,56 @@ def test_rle_flip_interleaved_with_surviving_rle_rows():
         np.testing.assert_array_equal(kernels.decode(blob), arr)
 
 
+def test_batch_blobs_are_the_reference_blobs():
+    """Every batch blob is byte-identical to the per-row kernel's blob for
+    the codec the batch chose. The batch mixes one bit width (4) shared by
+    bitpack values, fordelta deltas, both RLE blocks and dict codes;
+    width-0 blocks; rows of 33-bit and single fordelta blocks, which the
+    size formulas store plain (no fordelta block of such a row beats
+    plain); and a row the FSST trial takes from RLE between surviving
+    RLE rows."""
+    r = np.random.default_rng(5)
+    runs4 = np.repeat(500 + np.arange(40) * 7 % 16,
+                      np.where(np.arange(40) % 2 == 0, 1, 12))
+    dict_vals = np.arange(16, dtype=np.int64) * 134217727 - 2**30
+    rle_keep = np.repeat(np.arange(5) * 100000, 40)
+    rows = {
+        "bitpack": r.integers(100, 116, 300),             # width 4
+        "fordelta": np.cumsum(r.integers(1000, 1016, 300)),  # deltas 4
+        "rle": runs4,                                     # values 4, lengths 4
+        "dict": dict_vals[np.arange(256) % 16],           # codes 4
+        "const": np.full(50, 7),                          # bitpack width 0
+        "arith": np.arange(200) * 3 + 11,                 # fordelta width 0
+        "rle_w0": np.repeat([5, 900, 5, 900, 77], 20),    # run lengths 0
+        "delta33": [-(2**31), 2**31 - 1, -(2**31), 2**31 - 1, 0],
+        "single": [42],
+        "empty": [],
+        "rle_keep": rle_keep,
+        "flip": _rle_marginal_row(),
+        "rle_keep_rev": rle_keep[::-1],
+    }
+    arrays = [np.asarray(a, dtype=np.int64).astype(np.int32)
+              for a in rows.values()]
+    values, offsets = make_batch(arrays)
+    blobs, cids, _, _ = batch_encode.encode_batch(values, offsets)
+    chosen = {k: kernels.CODEC_NAMES[int(c)] for k, c in zip(rows, cids)}
+    assert chosen == {
+        "bitpack": "bitpack", "fordelta": "fordelta", "rle": "rle",
+        "dict": "dict", "const": "bitpack", "arith": "fordelta",
+        "rle_w0": "rle", "delta33": "plain", "single": "plain",
+        "empty": "plain", "rle_keep": "rle", "flip": "fsst",
+        "rle_keep_rev": "rle"}
+    # the four width-4 rows really share one width: bitpack +17,
+    # fordelta +25, both RLE blocks +17 / +30+vbytes, dict codes
+    assert blobs[0][17] == blobs[1][25] == blobs[2][17] == 4
+    assert blobs[2][17 + 13 + (40 * 4 + 7) // 8] == 4
+    assert blobs[3][9 + 4 * 16 + 12] == 4
+    for k, arr, blob in zip(rows, arrays, blobs):
+        ref = (kernels.encode_fsst(arr) if chosen[k] == "fsst"
+               else kernels.encode(arr, chosen[k]))
+        assert blob == ref, k
+
+
 def test_throughput_improvement():
     """Batch path should be materially faster than the per-row loop."""
     import time
