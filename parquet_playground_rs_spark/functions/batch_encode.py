@@ -207,9 +207,10 @@ def segmented_dict(values: np.ndarray, offsets: np.ndarray,
 
 def _group_pack(rel: np.ndarray, row_lens: np.ndarray,
                 width: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Bit-pack concatenated relative values of several rows with one shared
-    width; each row starts byte-aligned. Returns (uint8 buffer, per-row byte
-    size, per-row byte offset into the buffer).
+    """Bit-pack concatenated u32 relative values of several rows with one
+    shared width (at most 32); each row starts byte-aligned. Returns
+    (uint8 buffer, per-row byte size, per-row byte offset into the
+    buffer).
 
     Layout is the little-endian bitstream (identical to
     ``np.packbits(bitorder="little")`` over per-value bit columns), but
@@ -226,29 +227,26 @@ def _group_pack(rel: np.ndarray, row_lens: np.ndarray,
     # byte offsets — no bit scatter.
     pad_lens = (row_lens + 7) // 8 * 8
     total_pad = int(pad_lens.sum())
-    # u32 arena when values fit (width <= 32, i.e. everything except
-    # 33-bit fordelta deltas): the 8-wide group matrix is then 32 bytes
-    # per row instead of 64, halving the bytes streamed per shift-or pass
-    # — memory bandwidth is the measured scaling ceiling here.
-    narrow = width <= 32
-    rel_pad = np.zeros(total_pad, dtype=np.uint32 if narrow else np.uint64)
+    # u32 arena: the 8-wide group matrix is 32 bytes per row, not 64 —
+    # memory bandwidth is the measured scaling ceiling here
+    rel_pad = np.zeros(total_pad, dtype=np.uint32)
     gaps = np.concatenate(([0], np.cumsum(pad_lens - row_lens)))[:-1]
     idx_t = np.int32 if total_pad < 2**31 else np.int64
     rel_pad[np.arange(rel.size, dtype=idx_t)
-            + np.repeat(gaps.astype(idx_t), row_lens)] = \
-        rel.astype(rel_pad.dtype, copy=False)
+            + np.repeat(gaps.astype(idx_t), row_lens)] = rel
     k = total_pad // 8
     grp = rel_pad.reshape(k, 8)
     out = np.zeros((k, width), dtype=np.uint8)
     for i in range(8):
         # value i of each group occupies stream bits [i*w, (i+1)*w)
         byte0, shift = divmod(i * width, 8)
-        nb = (width + shift + 7) // 8  # <= 8 while width <= 57
-        if narrow and width + shift <= 32:
+        nb = (width + shift + 7) // 8  # <= 5 while width <= 32
+        if width + shift <= 32:
             # whole shifted value fits a u32 window: stay 4-byte end-to-end
             t = (grp[:, i] << np.uint32(shift)).astype("<u4", copy=False)
             out[:, byte0:byte0 + nb] |= t.view(np.uint8).reshape(k, 4)[:, :nb]
         else:
+            # the value straddles bit 32 of its window: widen to 8 bytes
             t = (grp[:, i].astype("<u8") << np.uint64(shift))
             out[:, byte0:byte0 + nb] |= t.view(np.uint8).reshape(k, 8)[:, :nb]
     pad_starts = np.concatenate(([0], np.cumsum(pad_lens)))[:-1]
@@ -299,10 +297,13 @@ def _write_blocks(data: np.ndarray, blocks: list) -> None:
     array element per block: block i's header starts at data[pos[i]] and
     its payload packs src[first[i] : first[i] + count[i]] - ref[i] at
     width[i] bits. Blocks of one width pack together whatever entry they
-    come from: one _group_pack and one copy per width.
+    come from: one _group_pack and one copy per width. A width above 32
+    raises ValueError: choose_codecs stores such a row plain.
     """
     pos, first, count, ref, width = (
         np.concatenate([b[k] for b in blocks]) for k in (0, 2, 3, 4, 5))
+    if width.size and width.max() > 32:
+        raise ValueError(f"packed block width {int(width.max())} > 32")
     entry = np.repeat(np.arange(len(blocks)), [b[0].size for b in blocks])
     _put_u32(data, pos, count)
     _put_i64(data, pos + 4, ref)
@@ -319,8 +320,7 @@ def _write_blocks(data: np.ndarray, blocks: list) -> None:
             rel = np.subtract(_concat_rows(src, first[ge], count[ge]),
                               np.repeat(ref[ge].astype(src.dtype), count[ge]),
                               dtype=src.dtype).view(f"u{src.itemsize}")
-            rels.append(rel.astype(np.uint32 if w <= 32 else np.uint64,
-                                   copy=False))
+            rels.append(rel.astype(np.uint32, copy=False))
         buf, nbytes, boff = _group_pack(
             rels[0] if len(rels) == 1 else np.concatenate(rels),
             count[g], int(w))
@@ -456,12 +456,10 @@ def encode_batch_columnar(values: np.ndarray, offsets: np.ndarray):
         blocks.append((p + _packed_size(runs, vw), run_lens, run_first, runs,
                        lmin[keep], lw))
 
-    dict_size_col = np.zeros(n, dtype=np.int64)
     if dict_rows.size:
         uniq_vals, u_per_row, codes, cw, lens, win_idx, _ = dict_state
         uoff = np.concatenate(([0], np.cumsum(u_per_row)))
         dsz = u_per_row[win_idx]
-        dict_size_col[dict_rows] = dsz
         p = off[dict_rows] + HEADER
         _put_u32(data, p, dsz)
         _copy_into(data, p + 4, uniq_vals.view(np.uint8),
@@ -476,7 +474,6 @@ def encode_batch_columnar(values: np.ndarray, offsets: np.ndarray):
         data[blob_offsets[i]: blob_offsets[i] + len(blob)] = \
             np.frombuffer(blob, dtype=np.uint8)
 
-    aux["dict_size"] = dict_size_col
     aux["blob_bytes"] = L
     return data, blob_offsets, codec_ids, s, aux
 

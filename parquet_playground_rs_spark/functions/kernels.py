@@ -373,7 +373,9 @@ def decode(blob: bytes | memoryview) -> np.ndarray:
     """Decode any blob produced by this module back to int32 tokens.
 
     Raises ValueError when the blob is cut short, carries bytes past its
-    payload, or decodes to a token count other than its header's n."""
+    payload, decodes to a token count other than its header's n, or holds
+    an FSST round whose codes disagree with its symbol table or escape
+    bitmap."""
     buf = memoryview(blob)
     try:
         codec_id, n = struct.unpack_from("<BI", buf, 0)
@@ -467,9 +469,14 @@ def _decode_payload(buf: memoryview, codec: str,
         # expand from the innermost round outwards
         for r in range(n_rounds - 1, -1, -1):
             table, in_t, lits, _ = rounds[r]
+            # one code per in-table item, each naming a symbol of the table
+            if codes.size != in_t.size - lits.size \
+                    or (codes >= table.size).any():
+                raise ValueError(
+                    f"fsst round {r} codes disagree with its symbol table "
+                    "or escape bitmap")
             items = np.empty(in_t.size, dtype="<u2")
-            if table.size:
-                items[in_t] = table[codes]
+            items[in_t] = table[codes]
             items[~in_t] = lits
             if r == 0:
                 raw = items.view(np.uint8)[:stream_len]

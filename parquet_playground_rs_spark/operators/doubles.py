@@ -78,7 +78,7 @@ def _encode_bss_batch(vals: np.ndarray, valid: np.ndarray,
     sel = np.flatnonzero(ne)
     # bitmaps: width-1 group pack gives per-row byte-aligned LE bitmaps
     # (valid is already the batch-concatenated element mask)
-    buf, nbytes, boff = _group_pack(valid.astype(np.uint64), lens, 1)
+    buf, nbytes, boff = _group_pack(valid.astype(np.uint32), lens, 1)
     _copy_into(data, off + 5, buf, boff, nbytes)
     # planes: one gather. out pos p in [0,8k): plane = p // k, t = p % k,
     # src byte = (start + t) * 8 + plane

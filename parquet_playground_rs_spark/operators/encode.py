@@ -14,12 +14,11 @@ cache-sized on long-tail documents while decode stays a pure map (no
 reassembly). The split is offsets arithmetic inside the mapper
 (``_split_offsets``); the token values are never copied to chunk them.
 
-Row-level ``codec`` and ``meta`` of a multi-block document: ``codec`` is
-the codec that encoded most of the document's tokens (ties go to the
-lower codec id); in ``meta`` the counts and bytes are summed and
-min/max combined, while the per-block-only fields (``n_unique``,
-``n_runs``, ``bit_width``, ``dict_size``) are NULL. A single-block row
-carries its block's values unchanged.
+Row-level ``codec`` of a multi-block document is the codec that encoded
+most of the document's tokens (ties go to the lower codec id). ``meta``
+holds the document's token count and its input and output bytes, summed
+over its blocks; the manifests and the encode summaries sum the byte
+fields.
 """
 
 from __future__ import annotations
@@ -34,16 +33,9 @@ from pyspark.sql import functions as F
 from ..functions import arrow_np, kernels
 
 DEFAULT_CHUNK = 16384          # max tokens per encoded block
-DEFAULT_SALT_BUCKETS = 1024    # salt space for the repartition key
 
 META_FIELDS = [
     ("n_tok", pa.int32()),
-    ("min_val", pa.int64()),
-    ("max_val", pa.int64()),
-    ("n_unique", pa.int32()),
-    ("n_runs", pa.int32()),
-    ("bit_width", pa.int32()),
-    ("dict_size", pa.int32()),
     ("input_bytes", pa.int64()),
     ("output_bytes", pa.int64()),
 ]
@@ -61,9 +53,8 @@ ENCODED_ARROW_SCHEMA = pa.schema(
 
 ENCODED_DDL = (
     "doc_id string, source string, n_chunks int, codec string, "
-    "block array<binary>, meta struct<n_tok:int, min_val:bigint, "
-    "max_val:bigint, n_unique:int, n_runs:int, bit_width:int, "
-    "dict_size:int, input_bytes:bigint, output_bytes:bigint>"
+    "block array<binary>, "
+    "meta struct<n_tok:int, input_bytes:bigint, output_bytes:bigint>"
 )
 
 # the row-level codec column is this array taken at each row's codec id
@@ -99,44 +90,25 @@ def _split_offsets(offsets: np.ndarray, chunk_size: int):
     return np.concatenate((starts, offsets[-1:])), n_chunks
 
 
-def _document_columns(codec_ids: np.ndarray, s: dict, aux: dict,
-                      n_chunks: np.ndarray) -> tuple[np.ndarray, pa.Array]:
-    """Fold per-block codec ids and stats into per-document (codec id,
-    meta), by the rule in the module docstring."""
+def _document_columns(codec_ids: np.ndarray, n_tok: np.ndarray,
+                      blob_bytes: np.ndarray, n_chunks: np.ndarray
+                      ) -> tuple[np.ndarray, pa.Array]:
+    """Fold per-block codec ids, token counts and blob sizes into
+    per-document (codec id, meta), by the rule in the module docstring."""
     n_docs = n_chunks.size
     first = np.concatenate(([0], np.cumsum(n_chunks)))[:-1]
-    multi = n_chunks > 1
     n_codecs = len(kernels.CODEC_NAMES)
     doc_of_block = np.repeat(np.arange(n_docs), n_chunks)
     tokens_by_codec = np.bincount(
-        doc_of_block * n_codecs + codec_ids, weights=s["n_tok"],
+        doc_of_block * n_codecs + codec_ids, weights=n_tok,
         minlength=n_docs * n_codecs).reshape(n_docs, n_codecs)
-    doc_codec = np.where(multi, tokens_by_codec.argmax(axis=1),
+    doc_codec = np.where(n_chunks > 1, tokens_by_codec.argmax(axis=1),
                          codec_ids[first])
-    n_tok = np.add.reduceat(s["n_tok"], first)
-    dict_size = aux["dict_size"][first]
-    cols = {
-        "n_tok": arrow_np.from_numpy(n_tok, pa.int32()),
-        "min_val": arrow_np.from_numpy(np.minimum.reduceat(s["min"], first),
-                                       pa.int64()),
-        "max_val": arrow_np.from_numpy(np.maximum.reduceat(s["max"], first),
-                                       pa.int64()),
-        # exact cardinality is only computed where the dict codec ran;
-        # everywhere else it is honestly NULL (a 0 would be a lie the
-        # lineage consumers can't distinguish from "empty")
-        "n_unique": arrow_np.from_numpy(dict_size, pa.int32(),
-                                        mask=multi | (dict_size == 0)),
-        "n_runs": arrow_np.from_numpy(s["n_runs"][first], pa.int32(),
-                                      mask=multi),
-        "bit_width": arrow_np.from_numpy(aux["bw"][first], pa.int32(),
-                                         mask=multi),
-        "dict_size": arrow_np.from_numpy(dict_size, pa.int32(), mask=multi),
-        "input_bytes": arrow_np.from_numpy(4 * n_tok, pa.int64()),
-        "output_bytes": arrow_np.from_numpy(
-            np.add.reduceat(aux["blob_bytes"], first), pa.int64()),
-    }
+    doc_tok = np.add.reduceat(n_tok, first)
     meta = pa.StructArray.from_arrays(
-        [cols[name] for name, _ in META_FIELDS],
+        [arrow_np.from_numpy(doc_tok, pa.int32()),
+         arrow_np.from_numpy(4 * doc_tok, pa.int64()),
+         arrow_np.from_numpy(np.add.reduceat(blob_bytes, first), pa.int64())],
         fields=[pa.field(name, typ) for name, typ in META_FIELDS])
     return doc_codec, meta
 
@@ -169,7 +141,8 @@ def encode_arrow_batch(batch: pa.RecordBatch,
         arrow_np.from_numpy(np.concatenate(([0], np.cumsum(n_chunks))),
                             pa.int32()),
         blobs)
-    doc_codec, meta = _document_columns(codec_ids, s, aux, n_chunks)
+    doc_codec, meta = _document_columns(codec_ids, s["n_tok"],
+                                        aux["blob_bytes"], n_chunks)
     codecs = pc.take(_CODEC_NAME_ARRAY,
                      arrow_np.from_numpy(doc_codec, pa.int32()))
     return pa.RecordBatch.from_arrays(
@@ -277,39 +250,22 @@ def write_encoded_bucketed(df: DataFrame, table: str, path: str,
     w.saveAsTable(table)
 
 
-def salted_repartition(df: DataFrame, num_partitions: int,
-                       salt_buckets: int = DEFAULT_SALT_BUCKETS) -> DataFrame:
-    """Deterministic salted repartition of documents on hash(source, doc_id).
-
-    The salt is derived from the data (xxhash64), never from randomness, so
-    re-runs land identical rows in identical buckets — required for the
-    resumable manifests (plans/pipeline.py).
-    """
-    salt = F.pmod(F.xxhash64(F.col("source"), F.col("doc_id")),
-                  F.lit(salt_buckets))
-    return df.repartition(num_partitions, salt)
-
-
-def encode_tokens(df: DataFrame, chunk_size: int = DEFAULT_CHUNK,
-                  num_partitions: int | None = None) -> DataFrame:
-    """Full encode operator: [salted repartition] -> one Arrow map.
+def encode_tokens(df: DataFrame,
+                  chunk_size: int = DEFAULT_CHUNK) -> DataFrame:
+    """Full encode operator: one Arrow map over the input's partitions.
 
     Input:  (doc_id string, tokens array<int>, n_tok int, source string)
     Output: ENCODED_DDL rows, one per document.
 
-    num_partitions, when set, balances whole documents across a salted
-    shuffle before the map. Under the engine's confs
-    (session.ENGINE_CONFS) each Arrow batch into the map is capped at
-    8192 rows and 1 MiB, so a task's memory does not grow with its
-    partition. A batch can pass the byte cap by its last row, so the one
-    exception is a document larger than 1 MiB: it arrives whole. A
-    single document must fit one Arrow row (< 2^31 tokens), true by
-    construction for training sequences.
+    Under the engine's confs (session.ENGINE_CONFS) each Arrow batch into
+    the map is capped at 8192 rows and 1 MiB, so a task's memory does not
+    grow with its partition. A batch can pass the byte cap by its last
+    row, so the one exception is a document larger than 1 MiB: it
+    arrives whole. A single document must fit one Arrow row (< 2^31
+    tokens), true by construction for training sequences.
     """
     src = df.select(F.col("doc_id").cast("string").alias("doc_id"),
                     "source", "tokens")
-    if num_partitions:
-        src = salted_repartition(src, num_partitions)
 
     def mapper(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:

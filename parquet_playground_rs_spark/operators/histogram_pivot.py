@@ -159,13 +159,13 @@ def pack_rows(df: DataFrame) -> DataFrame:
             _copy_into(data, p + 4, c_v.view(np.uint8), c_o[:-1] * 8, 8 * b)
             p = p + 4 + 8 * b
             _put_u32(data, p, c)
-            mbuf, mbytes, mboff = _group_pack(sl_m.astype(np.uint64), c, 1)
+            mbuf, mbytes, mboff = _group_pack(sl_m.astype(np.uint32), c, 1)
             _copy_into(data, p + 4, mbuf, mboff, mbytes)
             _copy_into(data, p + 4 + nbc, sl_v.view(np.uint8),
                        sl_o[:-1] * 8, 8 * c)
             p = p + 4 + nbc + 8 * c
             _put_u32(data, p, d)
-            mbuf, mbytes, mboff = _group_pack(sd_m.astype(np.uint64), d, 1)
+            mbuf, mbytes, mboff = _group_pack(sd_m.astype(np.uint32), d, 1)
             _copy_into(data, p + 4, mbuf, mboff, mbytes)
             _copy_into(data, p + 4 + nbd, sd_v.view(np.uint8),
                        sd_o[:-1] * 8, 8 * d)

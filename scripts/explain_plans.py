@@ -3,7 +3,7 @@
 
 Checks the scale-critical plan properties explicitly:
 - parquet scans show PushedFilters / narrow ReadSchema (column pruning);
-- the encode path has NO exchange (shuffle) unless salting is requested;
+- the encode path has NO exchange (shuffle): it is one map over the scan;
 - decode is one map over the scan: no Exchange, no persist;
 - broadcast joins where a side is small (tokenizer vocab, ANN queries).
 """
@@ -51,11 +51,11 @@ def main() -> None:
         seq.write.mode("overwrite").parquet("/tmp/plans_seq")
         seq = spark.read.parquet("/tmp/plans_seq")
 
-    # 1. encode: must be shuffle-free without salting; with the default
-    # mapper-side split there must be no Generate (posexplode) copy either
+    # 1. encode: must be shuffle-free, and with the mapper-side split
+    # there must be no Generate (posexplode) copy either
     p = plan_of(enc.encode_tokens(seq, chunk_size=enc.DEFAULT_CHUNK))
     sections.append((
-        "Encode (no salting, mapper-side split): shuffle-free, no Generate",
+        "Encode (mapper-side split): shuffle-free, no Generate",
         p,
         ["assert 'Exchange' not in plan -> %s" % ("PASS" if "Exchange" not in p else "FAIL"),
          "MapInArrow stages present -> %s" % ("PASS" if "MapInArrow" in p or "ArrowEvalPython" in p or "PythonMapInArrow" in p else "CHECK"),

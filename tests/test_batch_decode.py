@@ -161,12 +161,34 @@ def _packed_count_offsets(blob: bytes) -> list[int]:
     return []  # plain and fsst carry no packed block
 
 
-def _with_u32(blob: bytes, pos: int, delta: int) -> bytes | None:
-    """blob with the u32 at pos moved by delta; None if it would wrap."""
-    (v,) = struct.unpack_from("<I", blob, pos)
-    if v + delta < 0:
+def _fsst_count_fields(blob: bytes) -> list[tuple[str, int, str]]:
+    """(name, byte offset, struct format) of a non-empty FSST blob's
+    counts: each round's n_sym and n_items, then n_codes (the layout in
+    kernels.encode_fsst)."""
+    (n_rounds,) = struct.unpack_from("<B", blob, 9)
+    off, fields = 10, []
+    for r in range(n_rounds):
+        (n_sym,) = struct.unpack_from("<H", blob, off)
+        fields.append((f"round {r} n_sym", off, "<H"))
+        off += 2 + 2 * n_sym
+        (n_items,) = struct.unpack_from("<I", blob, off)
+        fields.append((f"round {r} n_items", off, "<I"))
+        nb = (n_items + 7) // 8
+        in_table = np.unpackbits(np.frombuffer(blob, np.uint8, nb, off + 4),
+                                 count=n_items, bitorder="little")
+        off += 4 + nb + 2 * (n_items - int(in_table.sum()))
+        if r < n_rounds - 1:
+            off += 1 + blob[off]  # tail flag [+ tail code]
+    return fields + [("n_codes", off, "<I")]
+
+
+def _with_field(blob: bytes, pos: int, fmt: str, delta: int) -> bytes | None:
+    """blob with the field at pos moved by delta; None if it would wrap."""
+    (v,) = struct.unpack_from(fmt, blob, pos)
+    if not 0 <= v + delta < 1 << (8 * struct.calcsize(fmt)):
         return None
-    return blob[:pos] + struct.pack("<I", v + delta) + blob[pos + 4:]
+    return blob[:pos] + struct.pack(fmt, v + delta) + \
+        blob[pos + struct.calcsize(fmt):]
 
 
 def _corruptions(blob: bytes):
@@ -174,13 +196,15 @@ def _corruptions(blob: bytes):
     if len(blob) > 5:
         yield "cut to 5 bytes", blob[:5]
     yield "extended by 1 byte", blob + b"\x00"
-    fields = [("n_tok", 1)]
+    fields = [("n_tok", 1, "<I")]
     if struct.unpack_from("<I", blob, 1)[0]:
-        fields += [(f"packed count at +{p}", p)
+        fields += [(f"packed count at +{p}", p, "<I")
                    for p in _packed_count_offsets(blob)]
-    for name, pos in fields:
+        if kernels.blob_codec(blob) == "fsst":
+            fields += _fsst_count_fields(blob)
+    for name, pos, fmt in fields:
         for delta in (1, -1):
-            bad = _with_u32(blob, pos, delta)
+            bad = _with_field(blob, pos, fmt, delta)
             if bad is not None:
                 yield f"{name} {delta:+d}", bad
 
@@ -198,9 +222,10 @@ def test_blob_whose_length_disagrees_with_its_header_fails_the_read():
 
     A batch holds every codec's blob of every edge array. Each blob in
     turn is cut by 1 byte, cut to its 5-byte header, extended by 1 byte,
-    or has its n_tok or one of its packed-block counts moved by +-1
-    (a move that would wrap below zero is skipped); the batch decoder
-    and the reference kernel must both raise."""
+    or has its n_tok, one of its packed-block counts or one of FSST's
+    n_sym, n_items and n_codes moved by +-1 (a move that would wrap is
+    skipped); the batch decoder and the reference kernel must both
+    raise."""
     blobs = [kernels.encode(a, c)
              for a in EDGE_ARRAYS.values() for c in kernels.TOKEN_CODECS]
     batch_decode.decode_binary_array(pa.array(blobs, type=pa.binary()))
@@ -215,3 +240,30 @@ def test_blob_whose_length_disagrees_with_its_header_fails_the_read():
             _assert_value_error(lambda: kernels.decode(bad), what)
             n_cases += 1
     assert n_cases > 6 * len(blobs)
+
+
+# Self-consistent FSST blobs whose codes disagree with their round: the
+# first has an empty symbol table but marks two of its four items as
+# in-table, with no codes to fill them; the second has a one-symbol table
+# and code 1.
+FSST_EMPTY_TABLE = (struct.pack("<BIIB", 5, 2, 8, 1) + struct.pack("<H", 0)
+                    + struct.pack("<I", 4) + bytes([0b0011])
+                    + struct.pack("<2H", 7, 0) + struct.pack("<I", 0))
+FSST_CODE_PAST_TABLE = (struct.pack("<BIIB", 5, 1, 4, 1)
+                        + struct.pack("<HH", 1, 0) + struct.pack("<I", 2)
+                        + bytes([0b01]) + struct.pack("<H", 0)
+                        + struct.pack("<IB", 1, 1))
+
+
+@pytest.mark.parametrize("blob", [FSST_EMPTY_TABLE, FSST_CODE_PAST_TABLE],
+                         ids=["empty_table", "code_past_table"])
+def test_fsst_codes_that_disagree_with_their_round_raise(blob):
+    """A code count other than the escape bitmap's in-table count, or a
+    code at or past the table size, raises ValueError on both decode
+    paths (not garbage tokens, not IndexError)."""
+    with pytest.raises(ValueError, match="fsst round 0 codes"):
+        kernels.decode(blob)
+    good = kernels.encode(np.arange(10, dtype=np.int32), "bitpack")
+    with pytest.raises(ValueError, match="fsst round 0 codes"):
+        batch_decode.decode_binary_array(
+            pa.array([good, blob], type=pa.binary()))

@@ -1,5 +1,6 @@
 """Resumable pipeline: file-scope commits, group manifests, kill-and-resume."""
 
+import glob
 import json
 import os
 import re
@@ -8,6 +9,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
+from parquet_playground_rs_spark.operators import encode as enc
 from parquet_playground_rs_spark.plans import pipeline as pl
 from parquet_playground_rs_spark.sources.generator import sequences_df
 
@@ -454,6 +456,76 @@ def test_control_plane_runs_no_spark_jobs(spark, two_groups, tmp_path):
                 lambda: pl._clean_stale_commit_dirs(spark, out)) == 0
     assert not os.path.exists(os.path.join(out, "data", "commit=00009"))
     assert jobs("ctl-read", lambda: pl.read_encoded(spark, out)) == 0
+
+
+def _manifest_stats(out: str, group: int) -> dict[int, tuple]:
+    """{bucket: (n_rows, input_bytes, output_bytes, block_crc)} of one
+    group manifest file, read straight from disk."""
+    path = os.path.join(out, "manifest", f"group-{group:05d}.json")
+    with open(path) as fh:
+        rows = [json.loads(ln) for ln in fh if ln.strip()]
+    return {r["bucket"]: (r["n_rows"], r["input_bytes"], r["output_bytes"],
+                          r["block_crc"]) for r in rows if r["n_rows"]}
+
+
+def test_commit_with_nine_field_meta_still_reads(spark, seq, two_groups,
+                                                 tmp_path):
+    """Commits written before `meta` narrowed to (n_tok, input_bytes,
+    output_bytes) carry six more meta fields. Group 0 of a two-group
+    output is rewritten in that nine-field layout, with fixture values
+    (some NULL) in the six fields; group 2 stays in the current one.
+    Both groups decode exactly, and the stats read-back and compaction
+    over the old group reproduce its manifest."""
+    import pyarrow.parquet as pq
+
+    out = str(tmp_path / "out")
+    shutil.copytree(two_groups, out)
+    old_dir = os.path.join(out, "data", "commit=00000")
+    staged = str(tmp_path / "nine_field_commit")
+    m = F.col("meta")
+    nine = F.struct(
+        m["n_tok"].alias("n_tok"),
+        F.lit(-(2**31)).cast("bigint").alias("min_val"),
+        F.lit(2**31 - 1).cast("bigint").alias("max_val"),
+        F.lit(None).cast("int").alias("n_unique"),
+        m["n_tok"].alias("n_runs"),
+        F.lit(32).alias("bit_width"),
+        F.lit(None).cast("int").alias("dict_size"),
+        m["input_bytes"].alias("input_bytes"),
+        m["output_bytes"].alias("output_bytes"))
+    enc.write_encoded(
+        pl._read_commits(spark, [old_dir]).withColumn("meta", nine),
+        staged, partition_by=["source"])
+    shutil.rmtree(old_dir)
+    shutil.move(staged, old_dir)
+    old_files = glob.glob(os.path.join(old_dir, "source=*", "*.parquet"))
+    assert old_files
+    for f in old_files:
+        assert [c.name for c in pq.read_schema(f).field("meta").type] == [
+            "n_tok", "min_val", "max_val", "n_unique", "n_runs",
+            "bit_width", "dict_size", "input_bytes", "output_bytes"]
+
+    res = pl.verify_job(spark, seq, out)
+    assert res["n_mismatch"] == 0 and res["n_joined"] == N_ROWS
+    manifested = _manifest_stats(out, 0)
+    got = {b: (st["n_rows"], st["input_bytes"], st["output_bytes"],
+               st["block_crc"])
+           for b, st in pl._bucket_stats(spark, old_dir).items()}
+    assert got == manifested and manifested
+
+    s = pl.compact_encoded_job(spark, out, target_group_output_bytes=1 << 40)
+    assert s["groups_before"] == 2 and s["groups_after"] == 1
+    (new_group,) = [int(f[len("group-"):-len(".json")])
+                    for f in os.listdir(os.path.join(out, "manifest"))
+                    if f.startswith("group-")]
+    new_dir = os.path.join(out, "data", f"commit={new_group:05d}")
+    rewritten = {b: (st["n_rows"], st["input_bytes"], st["output_bytes"],
+                     st["block_crc"])
+                 for b, st in pl._bucket_stats(spark, new_dir).items()}
+    assert {b: rewritten[b] for b in manifested} == manifested
+    assert _manifest_stats(out, new_group) == rewritten
+    res = pl.verify_job(spark, seq, out)
+    assert res["n_mismatch"] == 0 and res["n_joined"] == N_ROWS
 
 
 def test_commit_group_runs_write_and_read_back_only(spark, seq_path,

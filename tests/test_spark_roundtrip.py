@@ -71,7 +71,7 @@ def test_generator_shape_and_determinism(spark, seq):
 
 
 def test_roundtrip_exact(spark, seq):
-    encoded = enc.encode_tokens(seq, chunk_size=512, num_partitions=8)
+    encoded = enc.encode_tokens(seq, chunk_size=512)
     decoded = dec.decode_tokens(encoded)
     res = dec.verify_roundtrip(seq, decoded).first()
     assert res["n_mismatch"] == 0
