@@ -20,6 +20,7 @@ filtered to similarity >= threshold.
 from __future__ import annotations
 
 import logging
+from contextlib import ExitStack
 
 import numpy as np
 from pyspark.sql import DataFrame, Window
@@ -1060,118 +1061,105 @@ def append_ivf_pq_index(new_corpus: DataFrame, dim: int, path: str,
     of overwriting the first one's stage dir mid-publish. Returns
     ``{"appended_rows", "files_moved", "cells_touched",
     "recovered_moves"}``."""
-    from ..plans.pipeline import _JobLock
-
-    spark = new_corpus.sparkSession
-    lock = _JobLock(spark, path, lease_sec=lock_lease_sec).acquire()
-    ok = False
-    try:
-        result = _append_ivf_pq_locked(spark, new_corpus, dim, path,
-                                       id_col, vec_col, fail_after_moves)
-        ok = True
-        return result
-    finally:
-        lock.release(raise_on_stolen=ok)
-
-
-def _append_ivf_pq_locked(spark, new_corpus, dim, path, id_col, vec_col,
-                          fail_after_moves) -> dict:
     import json as _json
 
-    from ..plans.pipeline import (_hadoop_fs, _read_small_file,
+    from ..plans.pipeline import (_hadoop_fs, _JobLock, _read_small_file,
                                   _write_small_file)
 
-    # a crashed cell compaction's swap is finished before anything
-    # else: appends write into the live cell dirs the swap touches
-    _recover_cell_swap(spark, path)
-    cells_dir = f"{path}/cells"
-    tmp_dir = f"{path}/cells_append_tmp"
-    # retry safety: if a COMPLETE stage is pending and its fingerprint
-    # matches this batch (ids AND vector content — h3), the caller is
-    # retrying a crashed append of the SAME vectors — finish the staged
-    # publish and return, never re-encode (that would index the batch
-    # twice). A pending stage with the SAME ids but DIFFERENT content
-    # is the correction shape: the stage holds outdated encodings of
-    # these exact ids and is DISCARDED (publishing it would silently
-    # index the old vectors). Any other pending stage is a crashed
-    # different batch: finished first (recovered), then this batch
-    # proceeds normally.
-    incoming_fp = _batch_fingerprint(new_corpus, id_col, vec_col)
-    staged_fp = _read_stage_fingerprint(spark, tmp_dir)
-    if _fp_matches(staged_fp, incoming_fp):
+    spark = new_corpus.sparkSession
+    with _JobLock(spark, path, lease_sec=lock_lease_sec):
+        # a crashed cell compaction's swap is finished before anything
+        # else: appends write into the live cell dirs the swap touches
+        _recover_cell_swap(spark, path)
+        cells_dir = f"{path}/cells"
+        tmp_dir = f"{path}/cells_append_tmp"
+        # retry safety: if a COMPLETE stage is pending and its fingerprint
+        # matches this batch (ids AND vector content — h3), the caller is
+        # retrying a crashed append of the SAME vectors — finish the staged
+        # publish and return, never re-encode (that would index the batch
+        # twice). A pending stage with the SAME ids but DIFFERENT content
+        # is the correction shape: the stage holds outdated encodings of
+        # these exact ids and is DISCARDED (publishing it would silently
+        # index the old vectors). Any other pending stage is a crashed
+        # different batch: finished first (recovered), then this batch
+        # proceeds normally.
+        incoming_fp = _batch_fingerprint(new_corpus, id_col, vec_col)
+        staged_fp = _read_stage_fingerprint(spark, tmp_dir)
+        if _fp_matches(staged_fp, incoming_fp):
+            moved = _publish_staged_cells(spark, path, cells_dir, tmp_dir,
+                                          fail_after_moves)
+            return {"appended_rows": int(staged_fp["n_rows"]),
+                    "files_moved": int(moved),
+                    "cells_touched": int(staged_fp.get("n_cells", 0)),
+                    "recovered_moves": 0, "retried_same_batch": True}
+        if _ids_match_content_differs(staged_fp, incoming_fp):
+            fs, tjp, _ = _hadoop_fs(spark, tmp_dir)
+            fs.delete(tjp, True)
+            recovered = 0
+        else:
+            recovered = _publish_staged_cells(spark, path, cells_dir,
+                                              tmp_dir)
+        # fully-published retry: a crash between the stage-dir delete and
+        # the caller recording success leaves NO stage, but the durable
+        # last-append fingerprint identifies the batch as already indexed —
+        # short-circuit instead of indexing every vector twice. (Callers
+        # own id uniqueness across appends, so an identical re-append is
+        # never a legitimate new batch.)
+        last_raw = _read_small_file(spark, f"{path}/{_LAST_APPEND_NAME}")
+        if last_raw is not None:
+            last_fp = _json.loads(last_raw)
+            if _fp_matches(last_fp, incoming_fp):
+                return {"appended_rows": int(last_fp["n_rows"]),
+                        "files_moved": 0,
+                        "cells_touched": int(last_fp.get("n_cells", 0)),
+                        "recovered_moves": int(recovered),
+                        "already_published": True}
+        C = read_ivf_centroids(spark, path)
+        codebooks = read_pq_codebooks(spark, path)
+        if dim != C.shape[1]:
+            raise ValueError(
+                f"dim {dim} does not match the index's centroid width "
+                f"{C.shape[1]}")
+        live = spark.read.parquet(cells_dir)
+        live_types = dict(live.dtypes)
+        unit_dtype = ("float32" if live_types["unit"] == "array<float>"
+                      else "float64")
+        id_type = new_corpus.schema[id_col].dataType.simpleString()
+        if live_types[id_col] != id_type:
+            raise ValueError(
+                f"id column {id_col!r} is {id_type} in the new corpus but "
+                f"{live_types[id_col]} in the index")
+        units = with_unit_vectors(
+            new_corpus.withColumn(vec_col, _require_vector(vec_col)), vec_col
+        ).select(F.col(id_col), F.col("unit"))
+        drift = _drift_canary(spark, path, units, C, id_col)
+        encoded = _pq_encoded_frame(units, C, codebooks, dim, unit_dtype,
+                                    id_col, id_type)
+        (encoded.repartition(F.col("cell"))
+         .write.mode("overwrite").partitionBy("cell").parquet(tmp_dir))
+        fs, tjp, _ = _hadoop_fs(spark, tmp_dir)
+        has_cells = any(st.getPath().getName().startswith("cell=")
+                        for st in fs.listStatus(tjp))
+        if has_cells:
+            staged = spark.read.parquet(tmp_dir)
+            n_rows = staged.count()
+            n_cells = staged.select("cell").distinct().count()
+        else:  # empty input batch: nothing staged beyond _SUCCESS
+            n_rows = n_cells = 0
+        # fingerprint LAST: its presence is what marks the stage complete
+        # (a stage with _SUCCESS but no fingerprint is discarded as torn),
+        # so the same-batch-retry check above can trust what it reads
+        _write_small_file(
+            spark, f"{tmp_dir}/{_STAGE_FP_NAME}",
+            _json.dumps({**incoming_fp, "n_cells": int(n_cells)}))
         moved = _publish_staged_cells(spark, path, cells_dir, tmp_dir,
                                       fail_after_moves)
-        return {"appended_rows": int(staged_fp["n_rows"]),
-                "files_moved": int(moved),
-                "cells_touched": int(staged_fp.get("n_cells", 0)),
-                "recovered_moves": 0, "retried_same_batch": True}
-    if _ids_match_content_differs(staged_fp, incoming_fp):
-        fs, tjp, _ = _hadoop_fs(spark, tmp_dir)
-        fs.delete(tjp, True)
-        recovered = 0
-    else:
-        recovered = _publish_staged_cells(spark, path, cells_dir,
-                                          tmp_dir)
-    # fully-published retry: a crash between the stage-dir delete and
-    # the caller recording success leaves NO stage, but the durable
-    # last-append fingerprint identifies the batch as already indexed —
-    # short-circuit instead of indexing every vector twice. (Callers
-    # own id uniqueness across appends, so an identical re-append is
-    # never a legitimate new batch.)
-    last_raw = _read_small_file(spark, f"{path}/{_LAST_APPEND_NAME}")
-    if last_raw is not None:
-        last_fp = _json.loads(last_raw)
-        if _fp_matches(last_fp, incoming_fp):
-            return {"appended_rows": int(last_fp["n_rows"]),
-                    "files_moved": 0,
-                    "cells_touched": int(last_fp.get("n_cells", 0)),
-                    "recovered_moves": int(recovered),
-                    "already_published": True}
-    C = read_ivf_centroids(spark, path)
-    codebooks = read_pq_codebooks(spark, path)
-    if dim != C.shape[1]:
-        raise ValueError(
-            f"dim {dim} does not match the index's centroid width "
-            f"{C.shape[1]}")
-    live = spark.read.parquet(cells_dir)
-    live_types = dict(live.dtypes)
-    unit_dtype = ("float32" if live_types["unit"] == "array<float>"
-                  else "float64")
-    id_type = new_corpus.schema[id_col].dataType.simpleString()
-    if live_types[id_col] != id_type:
-        raise ValueError(
-            f"id column {id_col!r} is {id_type} in the new corpus but "
-            f"{live_types[id_col]} in the index")
-    units = with_unit_vectors(
-        new_corpus.withColumn(vec_col, _require_vector(vec_col)), vec_col
-    ).select(F.col(id_col), F.col("unit"))
-    drift = _drift_canary(spark, path, units, C, id_col)
-    encoded = _pq_encoded_frame(units, C, codebooks, dim, unit_dtype,
-                                id_col, id_type)
-    (encoded.repartition(F.col("cell"))
-     .write.mode("overwrite").partitionBy("cell").parquet(tmp_dir))
-    fs, tjp, _ = _hadoop_fs(spark, tmp_dir)
-    has_cells = any(st.getPath().getName().startswith("cell=")
-                    for st in fs.listStatus(tjp))
-    if has_cells:
-        staged = spark.read.parquet(tmp_dir)
-        n_rows = staged.count()
-        n_cells = staged.select("cell").distinct().count()
-    else:  # empty input batch: nothing staged beyond _SUCCESS
-        n_rows = n_cells = 0
-    # fingerprint LAST: its presence is what marks the stage complete
-    # (a stage with _SUCCESS but no fingerprint is discarded as torn),
-    # so the same-batch-retry check above can trust what it reads
-    _write_small_file(spark, f"{tmp_dir}/{_STAGE_FP_NAME}",
-                      _json.dumps({**incoming_fp, "n_cells": int(n_cells)}))
-    moved = _publish_staged_cells(spark, path, cells_dir, tmp_dir,
-                                  fail_after_moves)
-    summary = {"appended_rows": int(n_rows), "files_moved": int(moved),
-               "cells_touched": int(n_cells),
-               "recovered_moves": int(recovered)}
-    if drift is not None:
-        summary.update(drift)
-    return summary
+        summary = {"appended_rows": int(n_rows), "files_moved": int(moved),
+                   "cells_touched": int(n_cells),
+                   "recovered_moves": int(recovered)}
+        if drift is not None:
+            summary.update(drift)
+        return summary
 
 
 _CELL_SWAP_NAME = "_CELL_SWAP.json"
@@ -1268,20 +1256,19 @@ def _maybe_recover_cell_swap(spark, path: str,
     Path = jvm.org.apache.hadoop.fs.Path
     if not fs.exists(Path(path, _CELL_SWAP_NAME)):
         return 0
-    try:
-        lock = _JobLock(spark, path, lease_sec=lock_lease_sec).acquire()
-    except LockHeldError:
-        return 0  # live writer mid-swap; it completes the publish
-    except Exception:
-        # not contention (FS error, permissions, bad path): the query
-        # still runs on the published cells, but the failure is reported
-        _log.warning("IVF-PQ cell-swap recovery skipped for %s", path,
-                     exc_info=True)
-        return 0
-    try:
+    with ExitStack() as held:
+        try:
+            held.enter_context(
+                _JobLock(spark, path, lease_sec=lock_lease_sec))
+        except LockHeldError:
+            return 0  # live writer mid-swap; it completes the publish
+        except Exception:
+            # not contention (FS error, permissions, bad path): the
+            # query still runs on the published cells; report the failure
+            _log.warning("IVF-PQ cell-swap recovery skipped for %s", path,
+                         exc_info=True)
+            return 0
         return _recover_cell_swap(spark, path)
-    finally:
-        lock.release()
 
 
 def compact_ivf_pq_cells(spark, path: str,
@@ -1327,9 +1314,7 @@ def compact_ivf_pq_cells(spark, path: str,
     from ..plans.pipeline import (_JobLock, _hadoop_fs,
                                   _write_small_file)
 
-    lock = _JobLock(spark, path, lease_sec=lock_lease_sec).acquire()
-    ok = False
-    try:
+    with _JobLock(spark, path, lease_sec=lock_lease_sec):
         recovered = _recover_cell_swap(spark, path)
         cells_dir = f"{path}/cells"
         fs, cjp, jvm = _hadoop_fs(spark, cells_dir)
@@ -1354,7 +1339,6 @@ def compact_ivf_pq_cells(spark, path: str,
                    "files_after": sum(nf for nf, _ in sizes.values()),
                    "recovered_swaps": int(recovered)}
         if not picked:
-            ok = True
             return summary
         live = spark.read.parquet(cells_dir).filter(
             F.col("cell").isin(picked))
@@ -1425,10 +1409,7 @@ def compact_ivf_pq_cells(spark, path: str,
         summary["files_after"] = (
             summary["files_before"]
             - sum(sizes[j][0] for j in picked) + after_picked)
-        ok = True
         return summary
-    finally:
-        lock.release(raise_on_stolen=ok)
 
 
 def read_pq_codebooks(spark, path: str) -> np.ndarray:

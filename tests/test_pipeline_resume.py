@@ -158,9 +158,10 @@ def test_files_crash_then_regrouped_resume(spark, seq, seq_path, tmp_path):
 
 
 def test_files_size_drift_refused(spark, seq, seq_path, tmp_path):
-    """Round-6 judge task 5: the catalog fingerprint covers file SIZES —
-    an input overwritten in place (same names, different bytes) must be
-    refused on resume, not silently re-bucketed."""
+    """Round-6 judge task 5: the resume compares each cataloged file's
+    name AND size with the live listing — an input overwritten in place
+    (same names, different bytes) must be refused on resume, not
+    silently re-bucketed."""
     src = str(tmp_path / "src_size_drift")
     seq.repartition(3).write.mode("overwrite").parquet(src)
     out = str(tmp_path / "frun8")
@@ -528,26 +529,31 @@ def test_commit_with_nine_field_meta_still_reads(spark, seq, two_groups,
     assert res["n_mismatch"] == 0 and res["n_joined"] == N_ROWS
 
 
+@pytest.mark.parametrize("concurrent_commits", [1, 2])
 def test_commit_group_runs_write_and_read_back_only(spark, seq_path,
-                                                    tmp_path):
+                                                    tmp_path,
+                                                    concurrent_commits):
     """A commit group runs the write and the stats read-back (AQE splits
     its aggregate into a map and a result job), nothing else: no
     per-group schema inference, no bucket-table broadcast, no inference
     of the schema the engine just wrote. The run adds one job, the
-    input listing that infers the input schema once."""
+    input listing that infers the input schema once. Every one of those
+    jobs carries the caller's job group, also when the groups commit
+    concurrently on pool threads (the lower bound)."""
     sc = spark.sparkContext
+    tag = f"commit-jobs-{concurrent_commits}"
     out = str(tmp_path / "jobs")
-    sc.setJobGroup("commit-jobs", "commit-jobs")
+    sc.setJobGroup(tag, tag)
     try:
         s = pl.run_encode_job_files(spark, seq_path, out, n_buckets=4,
                                     chunk_size=512, buckets_per_commit=2,
-                                    concurrent_commits=1)
+                                    concurrent_commits=concurrent_commits)
     finally:
         sc.setJobGroup(None, None)
     groups = len(os.listdir(os.path.join(out, "manifest")))
     assert s["processed_buckets"] == 4 and groups == 2
-    n_jobs = len(sc.statusTracker().getJobIdsForGroup("commit-jobs"))
-    assert n_jobs <= 1 + 3 * groups, n_jobs
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(tag))
+    assert 2 * groups <= n_jobs <= 1 + 3 * groups, n_jobs
 
 
 def test_encode_with_bucket_rejects_file_outside_plan(spark, seq_path):
@@ -1045,3 +1051,38 @@ def test_catalog_auto_checkpoint_on_encode_entry(spark, seq, tmp_path):
         [0, 1, 2, 3]
     res = pl.verify_job(spark, seq, out)
     assert res["n_mismatch"] == 0 and res["n_decoded"] == N_ROWS
+
+
+def test_second_checkpoint_with_nothing_new_keeps_the_catalog(
+        spark, seq_path, tmp_path, monkeypatch):
+    """A checkpoint with no version newer than the newest checkpoint
+    writes nothing: rewriting the only catalog record (delete, then
+    rename) could lose it to a crash in between, and the next run would
+    re-plan every file. The crash is simulated in that window. A version
+    file that still carries the old write-only ``fingerprint`` key
+    reads and resumes as before."""
+    out = str(tmp_path / "out_ck2")
+    pl.run_encode_job_files(spark, seq_path, out, n_buckets=2,
+                            chunk_size=512, catalog_checkpoint_after=None)
+    vpath = os.path.join(out, "catalog", "version-00000.json")
+    with open(vpath) as fh:
+        ver = json.load(fh)
+    with open(vpath, "w") as fh:
+        json.dump({**ver, "fingerprint": "0" * 64}, fh)
+    assert pl.checkpoint_catalog(spark, out)["checkpointed_versions"] == 1
+    before = pl.read_catalog(spark, out)
+    assert [v["version"] for v in before] == [0]
+
+    def crash_mid_rename(spark_, path, payload):
+        os.remove(path)  # the delete half of the delete-then-rename
+        raise IOError("injected crash before the rename")
+
+    monkeypatch.setattr(pl, "_write_small_file", crash_mid_rename)
+    assert pl.checkpoint_catalog(spark, out) == {
+        "checkpointed_versions": 0, "files_removed": 0}
+    monkeypatch.undo()
+    assert _catalog_files(out) == ["checkpoint-00000.json"]
+    assert pl.read_catalog(spark, out) == before
+    s = pl.run_encode_job_files(spark, seq_path, out, n_buckets=2,
+                                chunk_size=512)
+    assert s["resumed_buckets"] == 2 and s["processed_buckets"] == 0
