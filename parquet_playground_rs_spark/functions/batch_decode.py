@@ -3,17 +3,27 @@
 Input: a pyarrow BinaryArray of self-describing blobs (kernels.py format).
 Output: (values int32 concatenated, offsets int64) for the whole batch.
 
-Headers are parsed with vectorized byte composition (no struct.unpack per
-row). Each codec's packed blocks (two per RLE row) go through one reader,
-``_unpack_blocks``, which groups them by bit width: each width pays ONE
-word-wise unpack, with blocks padded to byte-aligned regions exactly
-mirroring batch_encode._group_pack. FSST rows go one by one through the
-reference kernel (kernels.decode): an FSST blob holds up to a whole chunk
-of tokens, so the per-call overhead is small next to its work.
+Decoding runs in three phases, the mirror of batch_encode's one writer:
 
-Every blob's length is checked against the closed form of its header
-before its payload is read, so a truncated, extended or miscounted blob
-raises ValueError instead of reading into its neighbour.
+1. every codec's headers, counts and lengths are checked, with vectorized
+   byte composition (no struct.unpack per row). Every blob's length is
+   checked against the closed form of its header before its payload is
+   read, so a truncated, extended or miscounted blob raises ValueError
+   instead of reading into its neighbour;
+2. every packed block of the batch (bitpack values, fordelta deltas, RLE
+   run values and run lengths, dict codes) goes through ONE call of the
+   reader, ``_unpack_blocks``: blocks of one bit width unpack together,
+   whatever their codec, in one word-wise ``_unpack_group``, with blocks
+   padded to byte-aligned regions exactly mirroring batch_encode._group_pack;
+3. each codec finishes from its own slice of those values: bitpack
+   places them, fordelta takes a segmented cumsum, RLE checks its run
+   sums and repeats, dict checks its code range and gathers. A codec's
+   tokens land in its rows through one boolean row mask; plain payloads
+   and dictionaries are copied with batch_encode._copy_into.
+
+FSST rows go one by one through the reference kernel (kernels.decode): an
+FSST blob holds up to a whole chunk of tokens, so the per-call overhead is
+small next to its work.
 """
 
 from __future__ import annotations
@@ -23,6 +33,7 @@ import pyarrow as pa
 
 from . import kernels
 from .arrow_np import binary_parts
+from .batch_encode import _copy_into
 from .kernels import CODEC_IDS, _packed_size
 
 
@@ -46,15 +57,6 @@ def _block_header(d: np.ndarray, pos: np.ndarray):
     return _u32(d, pos), _i64(d, pos + 4), d[pos + 12].astype(np.int64)
 
 
-def _scatter(out: np.ndarray, firsts: np.ndarray, counts: np.ndarray,
-             vals: np.ndarray) -> None:
-    """Place the back-to-back segments of `vals` at out[firsts[i] :
-    firsts[i] + counts[i]]."""
-    pref = np.cumsum(counts) - counts
-    out[np.arange(int(counts.sum())) + np.repeat(firsts - pref, counts)] = \
-        vals.astype(out.dtype, copy=False)
-
-
 def header_token_counts(blobs: pa.Array) -> np.ndarray:
     """Each blob's token count as its header states it (u32 at byte 1),
     read without decoding. A blob too short to hold the header counts 0
@@ -68,31 +70,19 @@ def header_token_counts(blobs: pa.Array) -> np.ndarray:
 
 
 def _unpack_group(payload_bytes: np.ndarray, counts: np.ndarray,
-                  refs: np.ndarray, width: int,
-                  row_payload_starts: np.ndarray) -> np.ndarray:
-    """Decode one width-group of packed blocks into int64 values (concat in
-    group row order). payload_bytes: the full data array; counts[i] values
-    per row; refs[i] frame reference; row_payload_starts[i] byte offset of
-    row i's payload."""
-    if width == 0:
-        return np.repeat(refs, counts)
-    pad_counts = (counts + 7) // 8 * 8
-    pad_bytes = pad_counts * width // 8
-    real_bytes = (counts * width + 7) // 8
+                  width: int, row_payload_starts: np.ndarray) -> np.ndarray:
+    """Unpack one width-group (width > 0) of packed blocks into their
+    values before the frame reference is added (uint32, or int64 holding
+    the u64 bits above width 32), each block padded to a multiple of 8
+    values. payload_bytes: the full data array; counts[i] values per row;
+    row_payload_starts[i] byte offset of row i's payload."""
+    # copy the real payload bytes into a zeroed arena padded per row to
+    # whole 8-value groups (the region layout of batch_encode._group_pack)
+    pad_bytes = (counts + 7) // 8 * width
     total_pad = int(pad_bytes.sum())
     arena = np.zeros(total_pad, dtype=np.uint8)
-    # gather real payload bytes into the padded arena; the indices address
-    # BOTH the payload (< payload_bytes.size) and the padded arena
-    # (< total_pad, up to ~8x larger for many short rows at wide widths),
-    # so the dtype must cover the max of the two (mirrors _group_pack)
-    total_real = int(real_bytes.sum())
-    it = np.int32 if max(payload_bytes.size, total_pad) < 2**31 else np.int64
-    real_starts = np.concatenate(([0], np.cumsum(real_bytes)))[:-1]
-    rel_pos = np.arange(total_real, dtype=it)
-    byte_gaps = np.concatenate(([0], np.cumsum(pad_bytes - real_bytes)))[:-1]
-    arena[rel_pos + np.repeat(byte_gaps.astype(it), real_bytes)] = \
-        payload_bytes[rel_pos + np.repeat(
-            (row_payload_starts - real_starts).astype(it), real_bytes)]
+    _copy_into(arena, np.cumsum(pad_bytes) - pad_bytes, payload_bytes,
+               row_payload_starts, (counts * width + 7) // 8)
     # word-wise unpack (inverse of batch_encode._group_pack): each group of
     # `width` arena bytes holds 8 values; value i = bits [i*w, (i+1)*w) of
     # the group's little-endian bitstream, extracted via a window load +
@@ -102,7 +92,7 @@ def _unpack_group(payload_bytes: np.ndarray, counts: np.ndarray,
     k = total_pad // width
     grp = arena.reshape(k, width)
     narrow = width <= 32
-    vals = np.empty((k, 8), dtype=np.uint32 if narrow else np.uint64)
+    vals = np.empty((k, 8), dtype=np.uint32 if narrow else np.int64)
     window32 = np.zeros((k, 4), dtype=np.uint8) if narrow else None
     window64 = None
     mask64 = np.uint64((1 << width) - 1)
@@ -123,30 +113,27 @@ def _unpack_group(payload_bytes: np.ndarray, counts: np.ndarray,
                 window64[:, nb:] = 0
             v = (window64.view("<u8").ravel() >> np.uint64(shift)) & mask64
             vals[:, i] = v.astype(vals.dtype, copy=False)
-    # drop per-row padding values
-    total_vals = int(counts.sum())
-    val_gaps = np.concatenate(([0], np.cumsum(pad_counts - counts)))[:-1]
-    keep_idx = np.arange(total_vals, dtype=np.int64) \
-        + np.repeat(val_gaps, counts)
-    return vals.reshape(-1)[keep_idx].astype(np.int64) + np.repeat(refs, counts)
+    return vals.reshape(-1)
 
 
 def _unpack_blocks(d: np.ndarray, pos: np.ndarray, counts: np.ndarray,
-                   refs: np.ndarray, widths: np.ndarray,
-                   out: np.ndarray | None = None,
-                   out_first: np.ndarray | None = None) -> np.ndarray:
+                   refs: np.ndarray, widths: np.ndarray) -> np.ndarray:
     """Unpack the packed blocks whose headers start at d[pos] (payload at
-    +13), given their header fields: block i's values land at
-    out[out_first[i] : out_first[i] + counts[i]]. One _unpack_group per
-    width. Without `out`, returns the blocks' values back to back (int64).
-    """
-    if out is None:
-        out = np.empty(int(counts.sum()), dtype=np.int64)
-        out_first = np.cumsum(counts) - counts
+    +13), given their header fields, into their int64 values back to back
+    in block order. One _unpack_group per non-zero bit width, whatever
+    codec the blocks belong to (mirrors batch_encode._write_blocks); a
+    width-0 block's values are all its reference."""
+    out = np.empty(int(counts.sum()), dtype=np.int64)
     for w in np.unique(widths):
         m = widths == w
-        _scatter(out, out_first[m], counts[m],
-                 _unpack_group(d, counts[m], refs[m], int(w), pos[m] + 13))
+        c = counts[m]
+        vals = np.repeat(refs[m], c)
+        if w:
+            # each block's values, then its (-c % 8) padding values
+            keep = np.repeat(np.tile([True, False], c.size),
+                             np.column_stack((c, -c % 8)).ravel())
+            vals += _unpack_group(d, c, int(w), pos[m] + 13)[keep]
+        out[np.repeat(m, counts)] = vals
     return out
 
 
@@ -190,101 +177,89 @@ def decode_binary_array(blocks: pa.Array) -> tuple[np.ndarray, np.ndarray]:
     out_offsets = np.concatenate(([0], np.cumsum(n_tok)))
     out = np.empty(int(out_offsets[-1]), dtype=np.int32)
 
-    def codec_rows(name: str) -> np.ndarray:
-        return np.flatnonzero((codec == CODEC_IDS[name]) & (n_tok > 0))
+    def codec_rows(name: str):
+        rows = np.flatnonzero((codec == CODEC_IDS[name]) & (n_tok > 0))
+        return rows, starts[rows], blen[rows], n_tok[rows]
 
-    # ---- plain: n raw i32 values at +5
-    rows = codec_rows("plain")
-    if rows.size:
-        counts = n_tok[rows]
-        _require(blen[rows] == 5 + 4 * counts, rows,
-                 "plain length disagrees with its header")
-        total = int(counts.sum())
-        pref4 = np.concatenate(([0], np.cumsum(counts * 4)))[:-1]
-        src = np.arange(total * 4) + np.repeat(starts[rows] + 5 - pref4, counts * 4)
-        _scatter(out, out_offsets[rows], counts,
-                 np.ascontiguousarray(d[src]).view("<i4"))
+    def place(name: str, vals: np.ndarray) -> None:
+        """A codec's tokens, back to back in row order, into its rows."""
+        out[np.repeat(codec == CODEC_IDS[name], n_tok)] = vals
 
-    # ---- bitpack: one packed block at +5
-    rows = codec_rows("bitpack")
-    if rows.size:
-        s, ln, counts = starts[rows], blen[rows], n_tok[rows]
-        _require(ln >= 18, rows, "bitpack subheader truncated")
-        cnt, refs, widths = _block_header(d, s + 5)
-        _require((cnt == counts) & (ln == 5 + _packed_size(counts, widths)),
-                 rows, "bitpack length or count disagrees with its header")
-        _unpack_blocks(d, s + 5, counts, refs, widths, out, out_offsets[rows])
+    # ---- 1. every header, count and length check, before any payload is
+    # read; each packed block joins `blk` as (header pos, count, ref, width)
+    # plain: n raw i32 values at +5
+    p_rows, p_s, ln, p_n = codec_rows("plain")
+    _require(ln == 5 + 4 * p_n, p_rows,
+             "plain length disagrees with its header")
+    # bitpack: one packed block at +5
+    b_rows, s, ln, b_n = codec_rows("bitpack")
+    _require(ln >= 18, b_rows, "bitpack subheader truncated")
+    cnt, refs, w = _block_header(d, s + 5)
+    _require((cnt == b_n) & (ln == 5 + _packed_size(b_n, w)), b_rows,
+             "bitpack length or count disagrees with its header")
+    blk = [(s + 5, b_n, refs, w)]
+    # fordelta: [q first] at +5, packed deltas at +13
+    f_rows, s, ln, f_n = codec_rows("fordelta")
+    _require(ln >= 26, f_rows, "fordelta subheader truncated")
+    cnt, refs, w = _block_header(d, s + 13)
+    _require((cnt == f_n - 1) & (ln == 13 + _packed_size(f_n - 1, w)), f_rows,
+             "fordelta length or count disagrees with its header")
+    f_first = _i64(d, s + 5)
+    blk.append((s + 13, f_n - 1, refs, w))
+    # rle: two packed blocks (run values, run lengths) at +5
+    r_rows, s, ln, r_n = codec_rows("rle")
+    _require(ln >= 18, r_rows, "rle subheader truncated")
+    r_cnt, refs, w = _block_header(d, s + 5)
+    q = s + 5 + _packed_size(r_cnt, w)  # second packed block
+    _require(ln >= q - s + 13, r_rows, "rle run-length block truncated")
+    l_cnt, lrefs, lw = _block_header(d, q)
+    _require((l_cnt == r_cnt) & (ln == q - s + _packed_size(r_cnt, lw)),
+             r_rows, "rle length or run count disagrees with its header")
+    blk += [(s + 5, r_cnt, refs, w), (q, r_cnt, lrefs, lw)]
+    # dict: [I dict_size] at +5, dict vals at +9, packed codes
+    d_rows, d_s, ln, d_n = codec_rows("dict")
+    _require(ln >= 9, d_rows, "dict subheader truncated")
+    dsz = _u32(d, d_s + 5)
+    _require(ln >= 22 + 4 * dsz, d_rows, "dict code block truncated")
+    cnt, refs, w = _block_header(d, d_s + 9 + 4 * dsz)
+    _require((cnt == d_n) & (refs >= 0)
+             & (ln == 9 + 4 * dsz + _packed_size(d_n, w)), d_rows,
+             "dict length or code count disagrees with its header")
+    blk.append((d_s + 9 + 4 * dsz, d_n, refs, w))
 
-    # ---- fordelta: [q first] at +5, packed deltas at +13
-    rows = codec_rows("fordelta")
-    if rows.size:
-        s, ln, counts = starts[rows], blen[rows], n_tok[rows]
-        _require(ln >= 26, rows, "fordelta subheader truncated")
-        cnt, drefs, widths = _block_header(d, s + 13)
-        _require((cnt == counts - 1)
-                 & (ln == 13 + _packed_size(counts - 1, widths)), rows,
-                 "fordelta length or count disagrees with its header")
-        # segmented cumsum over ext = [first, deltas...] per row
-        first_pos = np.cumsum(counts) - counts
-        ext = np.empty(int(counts.sum()), dtype=np.int64)
-        ext[first_pos] = _i64(d, s + 5)
-        _unpack_blocks(d, s + 13, counts - 1, drefs, widths, ext, first_pos + 1)
-        cum = np.cumsum(ext)
-        corr = cum[first_pos] - ext[first_pos]
-        _scatter(out, out_offsets[rows], counts, cum - np.repeat(corr, counts))
+    # ---- 2. every packed block of the batch in one read
+    bits, deltas, run_vals, run_lens, codes = np.split(
+        _unpack_blocks(d, *(np.concatenate(f) for f in zip(*blk))),
+        np.cumsum([int(b[1].sum()) for b in blk])[:-1])
 
-    # ---- rle: two packed blocks (run values, run lengths) at +5
-    rows = codec_rows("rle")
-    if rows.size:
-        s, ln = starts[rows], blen[rows]
-        _require(ln >= 18, rows, "rle subheader truncated")
-        p = s + 5
-        r_cnt, vrefs, vw = _block_header(d, p)
-        q = p + _packed_size(r_cnt, vw)  # second packed block
-        _require(ln >= q - s + 13, rows, "rle run-length block truncated")
-        l_cnt, lrefs, lw = _block_header(d, q)
-        _require((l_cnt == r_cnt) & (ln == q - s + _packed_size(r_cnt, lw)),
-                 rows, "rle length or run count disagrees with its header")
-        run_vals = _unpack_blocks(d, p, r_cnt, vrefs, vw)
-        run_lens = _unpack_blocks(d, q, r_cnt, lrefs, lw)
-        run_off = np.concatenate(([0], np.cumsum(r_cnt)))
-        len_sum = np.concatenate(([0], np.cumsum(run_lens)))[run_off]
-        _require(np.diff(len_sum) == n_tok[rows], rows,
-                 "rle run lengths do not sum to the token count")
-        _scatter(out, out_offsets[rows], n_tok[rows],
-                 np.repeat(run_vals, run_lens))
-
-    # ---- dict: [I dict_size] at +5, dict vals, packed codes
-    rows = codec_rows("dict")
-    if rows.size:
-        s, ln, counts = starts[rows], blen[rows], n_tok[rows]
-        _require(ln >= 9, rows, "dict subheader truncated")
-        p = s + 5
-        dsz = _u32(d, p)
-        _require(ln >= 22 + 4 * dsz, rows, "dict code block truncated")
-        dict_starts = p + 4
-        code_block = dict_starts + 4 * dsz
-        cnt, crefs, cw = _block_header(d, code_block)
-        _require((cnt == counts) & (crefs >= 0)
-                 & (ln == 9 + 4 * dsz + _packed_size(counts, cw)), rows,
-                 "dict length or code count disagrees with its header")
-        # dict arena in row order
-        darena_off = np.concatenate(([0], np.cumsum(dsz)))
-        total_d = int(darena_off[-1])
-        dsrc = np.repeat(dict_starts, dsz * 4) + (
-            np.arange(total_d * 4)
-            - np.repeat(np.concatenate(([0], np.cumsum(dsz * 4)))[:-1], dsz * 4)
-        )
-        darena = np.ascontiguousarray(d[dsrc]).view("<i4").astype(np.int64)
-        codes = _unpack_blocks(d, code_block, counts, crefs, cw)
-        _require(np.maximum.reduceat(codes, np.cumsum(counts) - counts) < dsz,
-                 rows, "dict code outside its dictionary")
-        _scatter(out, out_offsets[rows], counts,
-                 darena[codes + np.repeat(darena_off[:-1], counts)])
+    # ---- 3. finish each codec from its own values
+    _copy_into(out.view(np.uint8), 4 * out_offsets[p_rows], d, p_s + 5,
+               4 * p_n)
+    place("bitpack", bits)
+    # fordelta: segmented cumsum over [first, deltas...] per row
+    cum = np.cumsum(np.insert(deltas, np.cumsum(f_n - 1) - (f_n - 1), f_first))
+    corr = cum[np.cumsum(f_n) - f_n] - f_first
+    place("fordelta", cum - np.repeat(corr, f_n))
+    # rle: the run-sum check, then the repeat
+    run_off = np.concatenate(([0], np.cumsum(r_cnt)))
+    len_sum = np.concatenate(([0], np.cumsum(run_lens)))[run_off]
+    _require(np.diff(len_sum) == r_n, r_rows,
+             "rle run lengths do not sum to the token count")
+    place("rle", np.repeat(run_vals, run_lens))
+    # dict: the code-range check, then a gather from the dictionaries,
+    # copied into one arena in row order
+    d_first = np.cumsum(d_n) - d_n  # a code wraps negative at width 64
+    _require((np.minimum.reduceat(codes, d_first) >= 0)
+             & (np.maximum.reduceat(codes, d_first) < dsz), d_rows,
+             "dict code outside its dictionary")
+    darena_off = np.concatenate(([0], np.cumsum(dsz)))
+    darena = np.empty(4 * int(darena_off[-1]), dtype=np.uint8)
+    _copy_into(darena, 4 * darena_off[:-1], d, d_s + 9, 4 * dsz)
+    place("dict", darena.view("<i4")[codes + np.repeat(darena_off[:-1], d_n)])
 
     # ---- fsst: the reference kernel, one blob at a time; it raises when
     # a blob's length or token count disagrees with its header
-    for i in codec_rows("fsst"):
+    for i in codec_rows("fsst")[0]:
         out[out_offsets[i]: out_offsets[i + 1]] = \
             kernels.decode(d[boffs[i]: boffs[i + 1]].tobytes())
 

@@ -79,9 +79,10 @@ def as_int32(tokens) -> np.ndarray:
 # packed-integer block: the shared primitive under bitpack / fordelta / rle /
 # dict. Vectorized bit-packing via a (n, width) bit matrix + np.packbits.
 # This per-row pair is the reference for the batch path's one writer
-# (batch_encode._write_blocks) and one reader (batch_decode._block_header +
-# _unpack_blocks): tests/test_batch_encode.py and test_batch_decode.py
-# compare their blobs and decoded values with it.
+# (batch_encode._write_blocks, one call per batch) and one reader
+# (batch_decode._block_header + _unpack_blocks, one call per batch; both
+# group every codec's blocks by bit width): tests/test_batch_encode.py and
+# test_batch_decode.py compare their blobs and decoded values with it.
 # ---------------------------------------------------------------------------
 
 def _pack_block(arr: np.ndarray) -> bytes:

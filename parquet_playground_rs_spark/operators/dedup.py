@@ -305,8 +305,7 @@ def jaccard_pairs(shingled: DataFrame, min_jaccard: float = 0.0,
 
 def minhash_dedup(docs: DataFrame, n: int = 3, k: int = 64, bands: int = 16,
                   threshold: float = 0.8, seed: int = 42,
-                  text_col: str = "text", id_col: str = "doc_id",
-                  persist: bool = True) -> DataFrame:
+                  text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Full near-dup pipeline: shingle -> minhash -> LSH -> exact-Jaccard
     confirm -> connected representatives.
 
@@ -318,13 +317,14 @@ def minhash_dedup(docs: DataFrame, n: int = 3, k: int = 64, bands: int = 16,
     previous composition re-derived the shingle explode once for the
     signatures and once per set join (three scans of the corpus + three
     shingle shuffles; the banding/confirm stages downstream also re-
-    execute their input per branch). The combined frame is persisted
-    (MEMORY_AND_DISK, ~signature+docset bytes, a vanishing fraction of
-    the corpus) so banding, bucket capping, and both confirm joins read
-    the aggregation instead of re-running it — measured 15.3 -> 9.4 s
-    on the bench corpus with the confirmed pair set byte-identical.
-    persist=False opts out (callers managing their own lifecycle); the
-    cache is registered for release via release_dedup_caches().
+    execute their input per branch). The combined frame is a local
+    checkpoint (executor blocks, MEMORY_AND_DISK, ~signature+docset bytes,
+    a vanishing fraction of the corpus) so banding, bucket capping, and
+    both confirm joins read the aggregation instead of re-running it —
+    caching it measured 15.3 -> 9.4 s on the bench corpus with the
+    confirmed pair set byte-identical. Its blocks belong to the returned
+    frame: Spark's ContextCleaner drops them once that frame is
+    unreachable, so there is nothing for the caller to release.
     """
     sh = word_shingles(docs, n=n, text_col=text_col, id_col=id_col)
     base = F.pmod(F.xxhash64("shingle", F.lit(seed)), F.lit(MERSENNE31))
@@ -338,12 +338,7 @@ def minhash_dedup(docs: DataFrame, n: int = 3, k: int = 64, bands: int = 16,
         .groupBy("doc_id")
         .agg(*mins, F.collect_set("shingle").alias("sh_set"))
     )
-    if persist:
-        from pyspark import StorageLevel
-
-        combined = combined.persist(StorageLevel.MEMORY_AND_DISK)
-        with _DEDUP_CACHE_LOCK:
-            _LIVE_DEDUP_CACHES.append(combined)
+    combined = combined.localCheckpoint(eager=False)
     sigs = combined.select(
         "doc_id", F.array(*[f"m{i}" for i in range(k)]).alias("sig"))
     cand = lsh_candidate_pairs(sigs, bands=bands, rows_per_band=k // bands)
@@ -351,27 +346,6 @@ def minhash_dedup(docs: DataFrame, n: int = 3, k: int = 64, bands: int = 16,
     return jaccard_pairs(sh, min_jaccard=threshold, pairs=cand,
                          shingle_sets=sets) \
         .select("doc_a", "doc_b", "jaccard")
-
-
-# persisted combined-aggregation frames minhash_dedup created and nobody
-# released yet — same lifecycle contract as decode_tokens' cache registry
-# (operators/decode.py): one-shot jobs can ignore it; long-lived sessions
-# sweep with release_dedup_caches() once the consuming actions finish.
-_LIVE_DEDUP_CACHES: list[DataFrame] = []
-_DEDUP_CACHE_LOCK = __import__("threading").Lock()
-
-
-def release_dedup_caches() -> int:
-    """Unpersist every outstanding minhash_dedup cache in this process.
-    Returns the number released."""
-    n = 0
-    while True:
-        with _DEDUP_CACHE_LOCK:
-            if not _LIVE_DEDUP_CACHES:
-                return n
-            handle = _LIVE_DEDUP_CACHES.pop()
-        handle.unpersist()
-        n += 1
 
 
 def simhash(docs: DataFrame, text_col: str = "text",

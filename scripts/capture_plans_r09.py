@@ -77,10 +77,6 @@ def main() -> None:
         .repartition(CPUS, "doc_id"))
     emit("minhash_pairs",
          dd.minhash_dedup(near_docs, n=3, k=64, bands=16, threshold=0.8))
-    try:
-        dd.release_dedup_caches()
-    except AttributeError:
-        pass  # round-start tree has no cache registry
 
     from parquet_playground_rs_spark.sources.generator import (
         GEN_VERSION, write_sequences,

@@ -13,6 +13,7 @@ from __future__ import annotations
 import io
 import re
 import sys
+import tempfile
 from contextlib import redirect_stdout
 from pathlib import Path
 
@@ -20,6 +21,18 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 OUT = Path(__file__).resolve().parent.parent / "PLANS.md"
 SF = "/root/testdata/sf0.01"
+
+
+def stable(text: str) -> str:
+    """PLANS.md text without what changes from run to run: the random part
+    of each temp dir name, part-file UUIDs and Exchange plan ids. So a run
+    on an unchanged plan set rewrites PLANS.md byte for byte, and a real
+    plan change shows in its diff."""
+    text = re.sub(re.escape(tempfile.gettempdir()) + r"/(plans_\w*?_)\w{8}\b",
+                  r"<tmp>/\1*", text)
+    text = re.sub(r"(part-\d+)-[0-9a-f]{8}(?:-[0-9a-f]{4}){3}-[0-9a-f]{12}",
+                  r"\1-*", text)
+    return re.sub(r"plan_id=\d+", "plan_id=*", text)
 
 
 def plan_of(df) -> str:
@@ -511,7 +524,7 @@ def main() -> None:
     # Spark renders a NULL string literal as a raw \x00 byte in plan
     # strings, which turns the whole file "binary" for grep/diff tools —
     # make it visible instead
-    OUT.write_text("\n".join(lines).replace("\x00", "<NUL>"))
+    OUT.write_text(stable("\n".join(lines).replace("\x00", "<NUL>")))
     print(f"written {OUT}")
     for title, _, checks in sections:
         print(title, "::", "; ".join(checks))

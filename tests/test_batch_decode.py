@@ -76,6 +76,38 @@ def test_sliced_binary_array():
     np.testing.assert_array_equal(out_vals[out_offs[1]: out_offs[2]], arrays[2])
 
 
+def test_one_unpack_per_bit_width(monkeypatch):
+    """Every packed block of a batch goes through one read: bitpack
+    values, fordelta deltas, RLE run values and run lengths and dict codes
+    of the same bit width unpack in ONE _unpack_group call, whatever codec
+    they belong to; width-0 blocks need no unpack. Widths here: 4 in every
+    codec, 3 in bitpack and RLE run values, 0 in RLE run lengths."""
+    vals16 = np.arange(16, dtype=np.int64) * 134217727 - 2**30
+    rows = [(np.arange(40) % 16, "bitpack"),
+            (np.arange(40) % 8 + 100, "bitpack"),
+            (np.cumsum(np.arange(60) % 16), "fordelta"),
+            (np.repeat(np.arange(16), np.arange(1, 17)), "rle"),
+            (np.repeat(np.arange(8), 5), "rle"),
+            (vals16[np.arange(256) % 16], "dict"),
+            (np.arange(30), "plain")]
+    arrays = [np.asarray(a, dtype=np.int64).astype(np.int32) for a, _ in rows]
+    blobs = [kernels.encode(a, c) for a, (_, c) in zip(arrays, rows)]
+    calls = []
+    unpack_group = batch_decode._unpack_group
+
+    def counting(payload_bytes, counts, width, row_payload_starts):
+        calls.append(width)
+        return unpack_group(payload_bytes, counts, width, row_payload_starts)
+
+    monkeypatch.setattr(batch_decode, "_unpack_group", counting)
+    vals, offs = batch_decode.decode_binary_array(
+        pa.array(blobs, type=pa.binary()))
+    assert sorted(calls) == [3, 4]
+    for i, blob in enumerate(blobs):
+        np.testing.assert_array_equal(vals[offs[i]:offs[i + 1]],
+                                      kernels.decode(blob))
+
+
 def test_faster_than_per_row():
     import time
     arrays = []
@@ -144,6 +176,24 @@ def test_batch_decode_rejects_undecodable_input():
         bd.decode_binary_array(pa.array(
             [kernels.encode_bss(np.array([1.0]))], type=pa.binary()))
 
+
+
+def test_dict_code_that_wraps_negative_raises():
+    """A self-consistent dict blob whose codes are packed at width 64 can
+    carry a code of 2^64 - 1, which reads back as -1: it is outside the
+    dictionary and must raise like the per-row kernel, never gather
+    another dictionary slot."""
+    import pytest
+
+    codes = (2**64 - 1) | 1 << 64
+    blob = (struct.pack("<BII2i", kernels.CODEC_IDS["dict"], 2, 2, 11, 22)
+            + struct.pack("<IqB", 2, 0, 64) + codes.to_bytes(16, "little"))
+    with pytest.raises(ValueError, match="dict code outside"):
+        kernels.decode(blob)
+    good = kernels.encode(np.arange(3, dtype=np.int32), "plain")
+    with pytest.raises(ValueError, match="dict code outside"):
+        batch_decode.decode_binary_array(
+            pa.array([good, blob], type=pa.binary()))
 
 def _packed_count_offsets(blob: bytes) -> list[int]:
     """Byte offsets of the u32 counts of a non-empty blob's packed blocks."""

@@ -61,7 +61,6 @@ def test_minhash_fused_agg_matches_unfused(spark):
     fused = dd.minhash_dedup(docs, n=3, k=16, bands=4, threshold=0.5)
     got = sorted((r["doc_a"], r["doc_b"], round(r["jaccard"], 9))
                  for r in fused.collect())
-    dd.release_dedup_caches()
     # unfused reference: the pre-round-9 composition
     sh = dd.word_shingles(docs, n=3)
     sigs = dd.minhash_signatures(sh, k=16)
@@ -71,6 +70,39 @@ def test_minhash_fused_agg_matches_unfused(spark):
     want = sorted((r["doc_a"], r["doc_b"], round(r["jaccard"], 9))
                   for r in ref.collect())
     assert got == want and len(got) > 0
+
+
+def test_minhash_dedup_cache_goes_with_its_frame(spark):
+    """minhash_dedup's cached aggregation belongs to the frame it returns:
+    once that frame is unreachable, Spark's ContextCleaner drops its blocks
+    without a release call."""
+    import gc
+    import time
+
+    sc = spark.sparkContext
+
+    def cached() -> set[int]:
+        # RDDInfo holds no reference to its RDD; getPersistentRDDs would
+        # hand the RDDs themselves to Python and keep them reachable
+        return {int(i.id()) for i in sc._jsc.sc().getRDDStorageInfo()}
+
+    docs = spark.createDataFrame(
+        [(i, f"alpha beta gamma delta {i % 3} epsilon zeta eta theta")
+         for i in range(30)],
+        "doc_id long, text string")
+    before = cached()
+    pairs = dd.minhash_dedup(docs, n=3, k=16, bands=4, threshold=0.5)
+    assert pairs.count() > 0
+    mine = cached() - before
+    assert mine
+    del pairs
+    for _ in range(60):
+        gc.collect()
+        spark._jvm.System.gc()
+        if not cached() & mine:
+            break
+        time.sleep(0.5)
+    assert not cached() & mine
 
 
 def test_effective_scan_target_clamps(spark):
